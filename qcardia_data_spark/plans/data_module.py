@@ -23,6 +23,8 @@ Config keys::
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,137 +101,131 @@ class DataModule:
         (same (seed, epoch) ⇒ same order; new epoch ⇒ new permutation —
         what the reference's per-epoch DataLoader shuffle provides).
 
-        Batch numbers come from a *distributed* global numbering: the frame
-        is range-partitioned on the (seeded) order key, each partition
-        numbers its own rows, and partition offsets (a per-partition count —
-        ``n_partitions`` rows, driver-small) are broadcast-joined back. The
-        result is bit-identical to ``row_number() OVER (ORDER BY ...)`` —
-        range partitions hold contiguous key ranges, so local rank +
-        preceding-partition offset = global rank — but with no
-        single-partition sort stage (the round-1 scale hazard). Each batch is
-        then a pruned filter + toPandas over the persisted frame. At cluster
-        scale the same frame feeds ``foreachBatch`` / a Volcano-style reader
-        instead; the batch assignment logic is identical.
+        Batches come from the global numbering built by ``_numbered_frame``:
+        one range exchange, one checkpointed copy of the records, numbers
+        bit-identical to ``row_number() OVER (ORDER BY ...)``. The batch
+        count is known on the driver from the per-partition counts, so no
+        job computes it. At cluster scale the same frame feeds
+        ``foreachBatch`` / a Volcano-style reader instead; the batch
+        assignment logic is identical.
 
         ``mode`` picks the driver-side fetch strategy (identical batches
         either way):
 
-        - ``"per_batch"`` (default): one pruned filter+``toPandas`` job per
-          batch over the persisted frame — random access, cheap restarts,
-          right for interactive stepping.
-        - ``"stream"``: ONE pass via ``toLocalIterator`` over the frame in
-          global ``_rn`` order. The ordering costs one distributed
-          range-exchange + per-partition sort (NOT a single-task funnel —
-          Spark's orderBy plans rangepartitioning; needed because the
-          numbering window's ``partitionBy(_pid)`` hash-shuffled the range
-          layout away). Partitions then stream to the driver with prefetch,
-          one Spark job per partition instead of one per batch — right for
-          long epochs (the r4 verdict's ask).
+        - ``"per_batch"`` (default): one Spark job per batch — a filter on
+          ``_batch`` over the checkpointed frame; its ≤ ``batch_size`` rows
+          are put in ``_rn`` order in pandas. Random access, cheap
+          restarts, right for interactive stepping.
+        - ``"stream"``: ONE pass via ``toLocalIterator`` over the numbered
+          frame, cut every ``batch_size`` rows, with no sort: range
+          partitions hold ascending key ranges and each is sorted, so
+          partition order is already ``_rn`` order. Partitions stream to
+          the driver with prefetch, one Spark job per partition instead of
+          one per batch — right for long epochs.
         """
         import pandas as pd
 
         if mode not in ("per_batch", "stream"):
             raise ValueError(f"mode must be 'per_batch' or 'stream', got {mode!r}")
-        part, numbered = self._numbered_frame(split, batch_size, shuffle_seed, epoch)
+        ranked, numbered, n_rows = self._numbered_frame(split, batch_size, shuffle_seed, epoch)
         try:
             if mode == "stream":
-                out_cols = [c for c in numbered.columns if c not in ("_rn", "_batch")]
-                cur: int | None = None
-                buf: list[dict] = []
-                for row in (
-                    numbered.orderBy("_rn")
-                    .toLocalIterator(prefetchPartitions=True)
-                ):
-                    d = row.asDict()
-                    b = d.pop("_batch")
-                    d.pop("_rn")
-                    if cur is not None and b != cur:
-                        yield pd.DataFrame(buf, columns=out_cols)
-                        buf = []
-                    cur = b
-                    buf.append(d)
-                if buf:
-                    yield pd.DataFrame(buf, columns=out_cols)
+                records = numbered.drop("_rn", "_batch")
+                rows = records.toLocalIterator(prefetchPartitions=True)
+                while chunk := list(itertools.islice(rows, batch_size)):
+                    yield pd.DataFrame([r.asDict() for r in chunk], columns=records.columns)
                 return
-            n_batches = numbered.agg(F.max("_batch")).collect()[0][0]
-            part.unpersist()  # numbered is materialized; drop the staging cache
-            if n_batches is None:
-                return
-            for b in range(n_batches + 1):
-                yield (
-                    numbered.filter(F.col("_batch") == b)
-                    .orderBy("_rn")
-                    .drop("_rn", "_batch")
-                    .toPandas()
-                )
+            for b in range(-(-n_rows // batch_size)):
+                pdf = numbered.filter(F.col("_batch") == b).toPandas()
+                yield pdf.sort_values("_rn").drop(columns=["_rn", "_batch"]).reset_index(drop=True)
         finally:
-            part.unpersist()
-            numbered.unpersist()
+            release_checkpoint(ranked)
 
-    def _numbered_frame(self, split, batch_size, shuffle_seed, epoch):
-        """Build the batch-numbered frame (exposed for plan-property tests).
-
-        Returns ``(staging, numbered)`` — both persisted; caller unpersists.
-        """
-        from pyspark.sql.window import Window
-
+    def _order_key(self, df: DataFrame, shuffle_seed, epoch) -> list:
+        """The serving order: the subject alone, or with a seed a keyed hash
+        of (seed, epoch, every record column) followed by those columns."""
         from qcardia_data_spark.operators.windows import keyed_rand
 
-        df = self.frame(split)
         subject = self.config["subject_col"]
-        if shuffle_seed is not None:
-            # hash key = subject + EVERY simple-typed column: the old
-            # (subject, first-column) pair tied whenever several records
-            # shared it, and tie order fell back to partition-internal
-            # arrival order — breaking the (seed, epoch) ⇒ same-order
-            # contract (r11 review). Complex payloads (array/struct/map/
-            # binary) enter the key through a cheap JVM xxhash64 digest
-            # rather than the md5 string path (ADVICE r11: rows identical
-            # in every scalar can still differ in a payload column, and
-            # their placement across a batch boundary must not depend on
-            # arrival order). Map-bearing types go through to_json first
-            # — Spark's hash family refuses MapType directly.
-            complex_prefixes = ("array", "struct", "map", "binary")
-            key_cols = [F.col(subject)]
-            for c, t in df.dtypes:
-                if c in (subject, "split"):
-                    continue
-                if not t.startswith(complex_prefixes):
-                    key_cols.append(F.col(c))
-                elif "map<" in t:
-                    key_cols.append(F.xxhash64(F.to_json(F.col(c))))
-                else:
-                    key_cols.append(F.xxhash64(F.col(c)))
-            order = [keyed_rand(f"{shuffle_seed}|{epoch}", *key_cols)] + key_cols
-        else:
-            order = [F.col(subject)]
+        if shuffle_seed is None:
+            return [F.col(subject)]
+        # hash key = subject + EVERY simple-typed column: the old
+        # (subject, first-column) pair tied whenever several records
+        # shared it, and tie order fell back to partition-internal
+        # arrival order — breaking the (seed, epoch) ⇒ same-order
+        # contract (r11 review). Complex payloads (array/struct/map/
+        # binary) enter the key through a cheap JVM xxhash64 digest
+        # rather than the md5 string path (ADVICE r11: rows identical
+        # in every scalar can still differ in a payload column, and
+        # their placement across a batch boundary must not depend on
+        # arrival order). Map-bearing types go through to_json first
+        # — Spark's hash family refuses MapType directly.
+        complex_prefixes = ("array", "struct", "map", "binary")
+        key_cols = [F.col(subject)]
+        for c, t in df.dtypes:
+            if c in (subject, "split"):
+                continue
+            if not t.startswith(complex_prefixes):
+                key_cols.append(F.col(c))
+            elif "map<" in t:
+                key_cols.append(F.xxhash64(F.to_json(F.col(c))))
+            else:
+                key_cols.append(F.xxhash64(F.col(c)))
+        return [keyed_rand(f"{shuffle_seed}|{epoch}", *key_cols)] + key_cols
 
+    def _ranked_frame(self, split, shuffle_seed, epoch) -> DataFrame:
+        """The split's records range-partitioned on the serving order and
+        sorted within each partition — the serving path's one exchange of
+        the records — plus ``_pid`` (the range partition) and ``_mid`` =
+        ``monotonically_increasing_id()``. Lazy; exposed for plan-property
+        tests."""
+        df = self.frame(split)
+        order = self._order_key(df, shuffle_seed, epoch)
         n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        part = (
+        return (
             df.repartitionByRange(n_parts, *order)
             .sortWithinPartitions(*order)
             .withColumn("_pid", F.spark_partition_id())
-            .persist()
+            .withColumn("_mid", F.monotonically_increasing_id())
         )
-        # offsets: n_partitions rows — the unpartitioned window runs over
-        # this tiny frame, never over the records themselves
-        w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = (
-            part.groupBy("_pid")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .withColumn("_off", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)))
-            .select("_pid", "_off")
+
+    def _numbered_frame(self, split, batch_size, shuffle_seed, epoch):
+        """Number the split's records in global order-key order.
+
+        ``_ranked_frame`` is local-checkpointed: the only stored copy of the
+        records, with a one-node lineage, so each batch query plans in
+        milliseconds. Losing a block fails loudly rather than recomputing
+        ``_pid``/``_mid`` under a possibly different range split. The low
+        33 bits of ``_mid`` are the row's position inside its sorted
+        partition (the ``zipWithIndex`` trick). One ``groupBy(_pid).count()``
+        — which also fills the checkpoint — brings ``n_partitions`` rows to
+        the driver, which turns them into partition offsets. ``_rn`` =
+        offset[``_pid``] + local position + 1 and ``_batch`` = (``_rn`` − 1)
+        div ``batch_size`` are then a narrow projection: no window, no join,
+        no second copy. Range partitions hold contiguous, ascending key
+        ranges, so ``_rn`` equals ``row_number() OVER (ORDER BY ...)``. Both
+        are ``long``: a split may hold more than 2³¹ − 1 records.
+
+        Returns ``(ranked, numbered, n_rows)``: the checkpointed frame (the
+        caller frees it with ``release_checkpoint``), the numbered
+        projection (payload columns, ``_rn``, ``_batch``) and the row count.
+        """
+        ranked = self._ranked_frame(split, shuffle_seed, epoch).localCheckpoint(eager=False)
+        try:
+            offsets, n_rows = partition_offsets(dict(ranked.groupBy("_pid").count().collect()))
+        except BaseException:
+            release_checkpoint(ranked)
+            raise
+        offset = F.element_at(
+            F.array(*[F.lit(o).cast("long") for o in offsets or [0]]), F.col("_pid") + 1
         )
-        w_local = Window.partitionBy("_pid").orderBy(*order)
+        local = F.col("_mid") - F.shiftleft(F.col("_pid").cast("long"), 33)
         numbered = (
-            part.withColumn("_lrn", F.row_number().over(w_local))
-            .join(F.broadcast(offsets), "_pid")
-            .withColumn("_rn", (F.col("_off") + F.col("_lrn")).cast("int"))
-            .withColumn("_batch", ((F.col("_rn") - 1) / batch_size).cast("int"))
-            .drop("_pid", "_lrn", "_off")
-            .persist()
+            ranked.withColumn("_rn", offset + local + 1)
+            .withColumn("_batch", F.expr(f"(_rn - 1) div {int(batch_size)}"))
+            .drop("_pid", "_mid")
         )
-        return part, numbered
+        return ranked, numbered, n_rows
 
     def summary(self) -> DataFrame:
         """Files & subjects per split (reference ``print_dataset_summary``,
@@ -240,3 +236,20 @@ class DataModule:
             F.count(F.lit(1)).alias("n_records"),
             F.countDistinct(self.config["subject_col"]).alias("n_subjects"),
         )
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a ``localCheckpoint`` frame; ``unpersist``
+    does not reach them (they belong to the frame's ``LogicalRDD``)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def partition_offsets(counts: dict[int, int]) -> tuple[list[int], int]:
+    """Rows before each partition ``0..max(counts)`` and the total, from
+    per-partition row counts; empty partitions may be missing from
+    ``counts``."""
+    offsets, total = [], 0
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(total)
+        total += counts.get(pid, 0)
+    return offsets, total

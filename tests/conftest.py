@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import glob
 import os
+import re
 
 import pytest
 
@@ -123,8 +125,23 @@ SLOW_TESTS = {
 }
 
 
+def stale_slow_tests(slow: set[str], test_dir: str) -> list[str]:
+    """Entries of ``slow`` that name no ``def test_*`` in ``test_dir/*.py``.
+    Checked against the source, not the collected items: ``-k`` or a file
+    subset narrows what is collected, not what exists."""
+    defined: set[str] = set()
+    for path in glob.glob(os.path.join(test_dir, "*.py")):
+        with open(path, encoding="utf-8") as f:
+            defined.update(re.findall(r"^\s*(?:async\s+)?def (test_\w+)", f.read(), re.M))
+    return sorted(slow - defined)
+
+
 def pytest_collection_modifyitems(config, items):
+    stale = stale_slow_tests(SLOW_TESTS, os.path.dirname(os.path.abspath(__file__)))
+    if stale:
+        raise pytest.UsageError(f"conftest.SLOW_TESTS names tests that no longer exist: {stale}")
     for item in items:
         # item.name includes parametrization; originalname is the function
-        if (item.originalname or item.name) in SLOW_TESTS:
+        # (non-function items such as doctests have no originalname)
+        if getattr(item, "originalname", item.name) in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

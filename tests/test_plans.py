@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.plans import cache as C
-from qcardia_data_spark.plans.data_module import DataModule
+from qcardia_data_spark.plans.data_module import (
+    DataModule,
+    partition_offsets,
+    release_checkpoint,
+)
 from qcardia_data_spark.plans.fingerprint import (
     cache_name,
     normalize_spec,
@@ -177,8 +181,8 @@ def test_spec_cache_boundary(spark, sf_dir, tmp_path):
     assert len(dirs) == 2
 
 
-def test_serving_iterator_batches(spark, sf_dir, tmp_path):
-    config = {
+def _orders_dm(spark, sf_dir, tmp_path):
+    return DataModule(spark, {
         "sf_dir": sf_dir,
         "cache_root": str(tmp_path),
         "pipeline": [
@@ -187,8 +191,11 @@ def test_serving_iterator_batches(spark, sf_dir, tmp_path):
         ],
         "subject_col": "o_custkey",
         "split": {"valid_fraction": 0.5, "seed": "srv"},
-    }
-    dm = DataModule(spark, config).setup()
+    }).setup()
+
+
+def test_serving_iterator_batches(spark, sf_dir, tmp_path):
+    dm = _orders_dm(spark, sf_dir, tmp_path)
     n_valid = dm.frame("valid").count()
 
     batches = list(dm.iter_pandas_batches("valid", batch_size=100, shuffle_seed=7))
@@ -224,38 +231,182 @@ def test_serving_iterator_batches(spark, sf_dir, tmp_path):
         next(iter(dm.iter_pandas_batches("valid", mode="bogus")))
 
 
-def test_serving_iterator_plan_is_distributed(spark, sf_dir, tmp_path):
-    """The batch numbering must never funnel the record frame through a
-    single task (round-1 weak point): records are range-partitioned and
-    numbered per partition; the only single-partition exchanges allowed are
-    over driver-small frames (partition counts, distinct subjects)."""
-    config = {
-        "sf_dir": sf_dir,
-        "cache_root": str(tmp_path),
-        "pipeline": [
-            {"op": "source", "table": "orders"},
-            {"op": "select", "cols": ["o_orderkey", "o_custkey", "o_orderstatus"]},
-        ],
-        "subject_col": "o_custkey",
-        "split": {"valid_fraction": 0.5, "seed": "srv"},
-    }
-    dm = DataModule(spark, config).setup()
-    part, numbered = dm._numbered_frame("valid", 100, 7, 0)
-    try:
-        plan = numbered._jdf.queryExecution().executedPlan().toString()
-    finally:
-        part.unpersist()
-        numbered.unpersist()
-    # records are distributed by range on the seeded order key ...
-    assert "Exchange rangepartitioning" in plan
-    # ... sorted within partitions only — no global Sort node anywhere
-    assert "], true, 0" not in plan
-    # the record row-numbering window is partitioned (by _pid), not an
-    # unpartitioned order-by over the seeded md5 key (the old shape)
-    assert "row_number() windowspecdefinition(_pid" in plan
-    import re
+def _plan_nodes(df):
+    """Every node of ``df``'s physical plan, AQE's current plan included."""
+    stack, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
 
-    assert not re.search(r"row_number\(\) windowspecdefinition\(md5", plan)
+
+def _output_names(node):
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_serving_iterator_plan_is_distributed(spark, sf_dir, tmp_path):
+    """The records cross exactly one exchange on the way to the batches —
+    a range exchange on the seeded order key — with no global Sort, no
+    Window and no single-partition exchange over them (the round-1
+    single-task funnel). Single-partition exchanges stay on driver-small
+    frames (distinct subjects). The config has no weight_cols, so
+    ``frame()`` adds no weighting window of its own."""
+    dm = _orders_dm(spark, sf_dir, tmp_path)
+    nodes = _plan_nodes(dm._ranked_frame("valid", 7, 0))
+    # a node carries the records when the payload column is in its output
+    over_records = [n for n in nodes if "o_orderstatus" in _output_names(n)]
+    exchanges = [n.outputPartitioning().toString() for n in over_records
+                 if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("rangepartitioning"), exchanges  # not SinglePartition
+    assert not [n for n in nodes if n.nodeName() == "Sort" and getattr(n, "global")()]
+    assert not [n for n in over_records if n.nodeName() == "Window"]
+
+
+def test_serving_batch_after_first_is_one_spark_job(spark, sf_dir, tmp_path):
+    """Once the first batch has numbered the epoch, each per_batch fetch is
+    one Spark job over the epoch's one stored copy of the records, which is
+    freed when the epoch ends; the stream path reads the numbered frame
+    with no exchange or sort above the checkpointed range partitions."""
+    import uuid
+
+    dm = _orders_dm(spark, sf_dir, tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"serve-{uuid.uuid4().hex}"
+
+    def fetch(step, it):
+        sc.setJobGroup(f"{group}-{step}", "serving job-count test")
+        try:
+            batch = next(it, None)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return batch, len(tracker.getJobIdsForGroup(f"{group}-{step}"))
+
+    def stored_rdds():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = stored_rdds()
+    it = dm.iter_pandas_batches("valid", batch_size=100, shuffle_seed=7)
+    first, _ = fetch(0, it)
+    assert first is not None
+    epoch_copy = stored_rdds() - before
+    assert len(epoch_copy) == 1, epoch_copy
+    jobs = []
+    while True:
+        batch, n_jobs = fetch(len(jobs) + 1, it)
+        if batch is None:
+            break
+        jobs.append(n_jobs)
+    assert len(jobs) >= 2
+    assert jobs == [1] * len(jobs), jobs
+    assert not epoch_copy & stored_rdds()
+
+    ranked, numbered, _ = dm._numbered_frame("valid", 100, 7, 0)
+    try:
+        names = {n.nodeName() for n in _plan_nodes(numbered)}
+    finally:
+        release_checkpoint(ranked)
+    assert not names & {"Exchange", "Sort", "Window"}, names
+
+
+def _synthetic_dm(spark, tmp_path, tag, rows, valid=None):
+    """DataModule over ``rows`` of (subj, rec_id, val); subjects in
+    ``valid`` (default: all) go to the valid split, the rest to train."""
+    path = str(tmp_path / f"src_{tag}")
+    spark.createDataFrame(rows, "subj string, rec_id long, val double").write.parquet(path)
+    subjects = {r[0] for r in rows}
+    valid = subjects if valid is None else valid
+    return DataModule(spark, {
+        "cache_root": str(tmp_path / f"cache_{tag}"),
+        "pipeline": [{"op": "source", "path": path}],
+        "subject_col": "subj",
+        "split": {"assignments": {s: "valid" if s in valid else "train" for s in subjects}},
+    }).setup()
+
+
+@pytest.mark.parametrize(
+    "n_rows, per_subject, batch_size, shuffle_seed",
+    [
+        (12, 3, 4, 7),     # row count an exact multiple of batch_size
+        (23, 4, 5, 7),     # a short last batch
+        (3, 1, 2, 7),      # more range partitions asked for than rows
+        (17, 1, 4, None),  # unseeded: ordered by subject only
+    ],
+    ids=["exact_multiple", "short_last", "parts_gt_rows", "unseeded"],
+)
+def test_serving_batches_equal_direct_row_number(
+    spark, tmp_path, n_rows, per_subject, batch_size, shuffle_seed
+):
+    """Both serving modes give exactly the batches of a direct
+    ``row_number() OVER (ORDER BY <order key>)`` numbering of the split —
+    same rows, same order, same boundaries. The direct numbering is a
+    single-partition window: fine for a test, the hazard the engine
+    avoids."""
+    from pyspark.sql.window import Window
+
+    rows = [(f"s{i // per_subject:03d}", i, i * 0.5) for i in range(n_rows)]
+    dm = _synthetic_dm(spark, tmp_path, "eq", rows)
+    df = dm.frame("valid")
+    order = dm._order_key(df, shuffle_seed, 0)
+    direct = df.withColumn("_rn", F.row_number().over(Window.orderBy(*order)))
+    keys = [r["rec_id"] for r in direct.orderBy("_rn").select("rec_id").collect()]
+    expected = [keys[i:i + batch_size] for i in range(0, len(keys), batch_size)]
+    assert sorted(keys) == list(range(n_rows))
+
+    served = {
+        mode: [b["rec_id"].tolist() for b in dm.iter_pandas_batches(
+            "valid", batch_size=batch_size, shuffle_seed=shuffle_seed, mode=mode)]
+        for mode in ("per_batch", "stream")
+    }
+    assert served["per_batch"] == expected
+    assert served["stream"] == expected
+
+    ranked, numbered, total = dm._numbered_frame("valid", batch_size, shuffle_seed, 0)
+    try:
+        got = {r["rec_id"]: (r["_rn"], r["_batch"]) for r in numbered.collect()}
+    finally:
+        release_checkpoint(ranked)
+    assert total == n_rows
+    assert got == {k: (i + 1, i // batch_size) for i, k in enumerate(keys)}
+
+
+def test_partition_offsets_skip_empty_partitions():
+    """Spark's range partitioner clamps its partition count to the sampled
+    keys, so the suite cannot force an empty range partition; the offsets
+    still tolerate absent and trailing-empty partitions."""
+    assert partition_offsets({}) == ([], 0)
+    assert partition_offsets({0: 2, 2: 3, 3: 1}) == ([0, 2, 2, 5], 6)
+    assert partition_offsets({1: 4}) == ([0, 0], 4)
+
+
+def test_serving_empty_split_yields_no_batches(spark, tmp_path):
+    rows = [(f"s{i}", i, float(i)) for i in range(4)]
+    dm = _synthetic_dm(spark, tmp_path, "empty", rows, valid=set())
+    for mode in ("per_batch", "stream"):
+        assert list(dm.iter_pandas_batches("valid", batch_size=2, shuffle_seed=7, mode=mode)) == []
+    ranked, numbered, total = dm._numbered_frame("valid", 2, 7, 0)
+    try:
+        assert total == 0 and numbered.count() == 0
+    finally:
+        release_checkpoint(ranked)
+
+
+def test_numbered_frame_numbers_are_long(spark, tmp_path):
+    """_rn and _batch stay bigint: an int cast wraps past 2^31 - 1 records."""
+    rows = [(f"s{i}", i, float(i)) for i in range(4)]
+    dm = _synthetic_dm(spark, tmp_path, "long", rows)
+    ranked, numbered, _ = dm._numbered_frame("valid", 2, 7, 0)
+    try:
+        types = dict(numbered.dtypes)
+    finally:
+        release_checkpoint(ranked)
+    assert (types["_rn"], types["_batch"]) == ("bigint", "bigint")
 
 
 def test_spec_corpus_prep_from_file(spark, sf_dir):
