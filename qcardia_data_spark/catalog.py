@@ -45,9 +45,20 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def clear_schema_cache() -> None:
+    """Forget every cached table schema: the next ``load_table`` of each
+    path infers it from the files again."""
+    _SCHEMA_CACHE.clear()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one table (column pruning + predicate pushdown
-    happen automatically because nothing is materialized here)."""
+    happen automatically because nothing is materialized here).
+
+    Tables are read-only for the life of a Spark application: the schema
+    inferred on the first load of a path is reused (``_SCHEMA_CACHE``), so
+    a table replaced in place with a different schema reads through the
+    stale one. Call :func:`clear_schema_cache` after replacing a table."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Harden against host sessions not built by get_spark (e.g. the driver's

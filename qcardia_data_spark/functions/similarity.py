@@ -1024,6 +1024,8 @@ def ann_index_append(
     fresh = rows.join(existing, id_col, "left_anti").localCheckpoint(eager=True)
     n = fresh.count()
     if n:
+        # expects a many-valued bucket column ("bucket"/"cell"): a
+        # few-valued part_col would serialize this write onto few tasks
         cluster_for_partitioned_write(fresh, part_col).write.mode(
             "append"
         ).partitionBy(part_col).parquet(path)

@@ -65,6 +65,18 @@ CROP_SCHEMA = StructType([
 ])
 
 
+def crop_borders(img: np.ndarray) -> tuple[np.ndarray, int, int]:
+    """F12's numpy core: trim all-zero borders of a 2-D plane via
+    any-nonzero row/col extents. Returns ``(cropped, y0, x0)``; a fully
+    empty plane is kept whole at offset (0, 0)."""
+    ys = np.flatnonzero(img.any(axis=1))
+    if len(ys) == 0:
+        return img, 0, 0
+    xs = np.flatnonzero(img.any(axis=0))
+    y0, x0 = int(ys[0]), int(xs[0])
+    return img[y0 : int(ys[-1]) + 1, x0 : int(xs[-1]) + 1], y0, x0
+
+
 def border_crop_udf():
     """F12 — trim all-zero image borders via any-nonzero row/col extents
     (reference ``reformat_sa_cine_scans``, reformat/utils.py:46-54).
@@ -75,19 +87,12 @@ def border_crop_udf():
         out = {k: [] for k in ("pixels", "height", "width", "y0", "x0")}
         for px, hh, ww in zip(pixels, h, w):
             img = np.asarray(px, dtype=np.float32).reshape(int(hh), int(ww))
-            ys = np.flatnonzero(img.any(axis=1))
-            xs = np.flatnonzero(img.any(axis=0))
-            if len(ys) == 0:  # fully empty image: keep as-is, zero offset
-                cropped, y0, x0 = img, 0, 0
-            else:
-                y0, y1 = int(ys[0]), int(ys[-1]) + 1
-                x0, x1 = int(xs[0]), int(xs[-1]) + 1
-                cropped = img[y0:y1, x0:x1]
+            cropped, y0, x0 = crop_borders(img)
             out["pixels"].append(cropped.ravel().tolist())
             out["height"].append(cropped.shape[0])
             out["width"].append(cropped.shape[1])
-            out["y0"].append(int(y0))
-            out["x0"].append(int(x0))
+            out["y0"].append(y0)
+            out["x0"].append(x0)
         return pd.DataFrame(out)
 
     return crop

@@ -64,6 +64,38 @@ def _fake_decode(content: bytes, height: int = 8, width: int = 8, n_frames: int 
     return rng.rand(height, width, n_frames).astype(np.float32)
 
 
+ARRAY_CODECS = ("nii", "png", "fake")
+
+
+def decode_array(
+    fmt: str, content: bytes, height: int = 8, width: int = 8, n_frames: int = 2,
+) -> np.ndarray:
+    """One payload → its float32 pixel array in on-disk axis order — the
+    ``content → ndarray`` step shared by :func:`decode_image` and the fused
+    reformat kernel (``reformat.py``).
+
+    - ``"nii"`` → NIfTI-1 codec, (x, y, z[, t]) as stored
+    - ``"png"`` → stdlib PNG codec, (h, w, channels); grayscale gets one
+      channel
+    - ``"fake"`` → deterministic sha256-seeded stub of shape
+      (``height``, ``width``, ``n_frames``)
+    """
+    if fmt == "nii":
+        from qcardia_data_spark.sources.nifti import decode_nifti1
+
+        return decode_nifti1(content)[0].astype(np.float32)
+    if fmt == "png":
+        from qcardia_data_spark.sources.png import decode_png
+
+        arr = decode_png(content).astype(np.float32)
+        return arr[:, :, None] if arr.ndim == 2 else arr
+    if fmt == "fake":
+        return _fake_decode(content, height, width, n_frames)
+    raise NotImplementedError(
+        f"codec {fmt!r}: no array codec (supported: {', '.join(ARRAY_CODECS)})"
+    )
+
+
 def decode_image(fmt: str = "fake", height: int = 8, width: int = 8, n_frames: int = 2):
     """ONE decode entry point for binaryFile rows → decoded records,
     dispatching on ``fmt`` to the real pure-Python codecs:
@@ -92,17 +124,10 @@ def decode_image(fmt: str = "fake", height: int = 8, width: int = 8, n_frames: i
         )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from qcardia_data_spark.sources.png import decode_png
-
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                if fmt == "png":
-                    arr = decode_png(bytes(content)).astype(np.float32)
-                    if arr.ndim == 2:  # grayscale → single channel
-                        arr = arr[:, :, None]
-                else:
-                    arr = _fake_decode(bytes(content), height, width, n_frames)
+                arr = decode_array(fmt, bytes(content), height, width, n_frames)
                 rows.append({
                     "path": path,
                     "height": arr.shape[0],

@@ -49,3 +49,18 @@ def test_cache_is_metadata_only_and_session_keyed(spark, sf_dir):
     from pyspark.sql.types import StructType
 
     assert isinstance(schema, StructType)
+
+
+def test_replaced_table_is_reinferred_after_clear_schema_cache(spark, tmp_path):
+    C.clear_schema_cache()
+    spark.createDataFrame([(1, "a")], "r_regionkey long, r_name string").write.parquet(
+        str(tmp_path / "region.parquet"))
+    assert C.load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    spark.createDataFrame([(2, "b", "c")], "r_regionkey long, r_name string, r_comment string") \
+        .write.mode("overwrite").parquet(str(tmp_path / "region.parquet"))
+    # read-only contract: the cached schema still applies to the replaced files
+    assert C.load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    C.clear_schema_cache()
+    fresh = C.load_table(spark, str(tmp_path), "region")
+    assert fresh.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert [tuple(r) for r in fresh.collect()] == [(2, "b", "c")]

@@ -155,3 +155,240 @@ def test_per_record_sinks_refuse_unsafe_id_components(spark, tmp_path):
     with_shard = spark.createDataFrame([(1, "t", 9)], ["doc_id", "text", "shard"])
     with pytest.raises(ValueError, match="'shard' column"):
         write_jsonl_shards(with_shard, str(tmp_path / "js"), "doc_id")
+
+
+# --- the fused kernel against the relational operator chain ---------------
+
+
+def _relational_records(spark, raw_dir, glob, dataset, height, width, n_frames, codec):
+    """The reformat records built from the public relational operators —
+    decode → frame_sample → mask_volume → ed_es_selection → border_crop_udf
+    → broadcast join — the chain the fused kernel must reproduce."""
+    from qcardia_data_spark.functions.arrays import file_id
+    from qcardia_data_spark.functions.volumes import (
+        border_crop_udf,
+        ed_es_selection,
+        mask_volume,
+    )
+    from qcardia_data_spark.sources.multimodal import decode_image, decode_nifti, frame_sample
+    from qcardia_data_spark.sources.readers import binary_file_scan
+
+    blobs = binary_file_scan(spark, raw_dir, glob=glob)
+    if codec == "nii":
+        decoded = decode_nifti(blobs).select(
+            "path",
+            F.element_at("shape", 1).alias("height"),
+            F.element_at("shape", 2).alias("width"),
+            F.element_at("shape", 3).alias("n_frames"),
+            "pixels",
+        )
+    else:
+        decoded = decode_image(codec, height, width, n_frames)(blobs)
+    frames = frame_sample(decoded, keep_frames=list(range(n_frames))).withColumn(
+        "subject", F.regexp_extract(F.element_at(F.split("path", "/"), -1), r"([^.]+)", 1)
+    )
+    with_mask = frames.withColumn(
+        "volume",
+        mask_volume(F.transform("pixels", lambda e: F.when(e > 0.6, e).otherwise(F.lit(0.0)))),
+    )
+    ed_es = ed_es_selection(with_mask, "subject", "frame_nr")
+    cropped = with_mask.withColumn("c", border_crop_udf()("pixels", "height", "width")).select(
+        "subject", "frame_nr", "volume",
+        *[F.col(f"c.{k}").alias(k) for k in ("pixels", "height", "width", "y0", "x0")],
+    )
+    return (
+        cropped.join(F.broadcast(ed_es), "subject", "left")
+        .withColumn("is_ed", F.col("frame_nr") == F.col("ed_frame"))
+        .withColumn("is_es", F.col("frame_nr") == F.col("es_frame"))
+        .withColumn(
+            "file_id",
+            file_id(F.lit(dataset), F.col("subject"), F.lit(None).cast("int"), F.col("frame_nr")),
+        )
+    )
+
+
+def _exact_rows(df):
+    """Rows keyed by file_id, pixels as float32 bytes (bit-exact)."""
+    import numpy as np
+
+    out = {}
+    for r in df.collect():
+        d = r.asDict()
+        assert None not in d["pixels"]
+        d["pixels"] = np.asarray(d["pixels"], dtype=np.float32).tobytes()
+        out[d["file_id"]] = d
+    return out
+
+
+def _assert_fused_equals_relational(spark, raw_dir, glob, n_frames, codec, height=8, width=8):
+    kw = dict(glob=glob, dataset="eq", height=height, width=width, n_frames=n_frames, codec=codec)
+    fused, _ = reformat_volumes(spark, raw_dir, **kw)
+    relational = _relational_records(spark, raw_dir, **kw)
+    assert fused.schema == relational.schema
+    got, want = _exact_rows(fused), _exact_rows(relational)
+    assert set(got) == set(want) and len(got) > 0
+    for fid in want:
+        assert got[fid] == want[fid], fid
+    return got
+
+
+@pytest.fixture(scope="module")
+def edge_nifti_dir(tmp_path_factory):
+    """Tiny 5-frame (x, y, t) NIfTI cines, one per edge case."""
+    import numpy as np
+
+    from qcardia_data_spark.sources.nifti import encode_nifti1
+
+    d = tmp_path_factory.mktemp("edge_nii")
+    rng = np.random.RandomState(3)
+    x, y, t = 6, 5, 5
+    six = np.float32(0.6)
+
+    def interior(lo=0.1, hi=1.1):
+        vol = np.zeros((x, y, t), dtype=np.float32)
+        vol[1 : x - 1, 1:y, :] = rng.uniform(lo, hi, (x - 2, y - 1, t)).astype(np.float32)
+        return vol
+
+    def with_volumes(counts):
+        # frame f has counts[f] pixels above 0.6, the rest at 0.3
+        vol = np.zeros((x, y, t), dtype=np.float32)
+        vol[1:5, 1:4, :] = 0.3
+        for f, n in enumerate(counts):
+            vol[1:5, 1:4, f].flat[:n] = 0.9
+        return vol
+
+    blank = interior()
+    blank[:, :, 1] = 0.0
+    exact = with_volumes([2, 2, 2, 2, 2])
+    exact[2, 2, :] = six  # counts: float32(0.6) > 0.6 once widened
+    exact[3, 1, :] = np.nextafter(six, np.float32(0))  # does not count
+    vols = {
+        "borders": interior(),
+        "blank": blank,
+        "unannotated": interior(0.1, 0.5),
+        "ties": with_volumes([3, 5, 5, 3, 0]),
+        "late_peak": with_volumes([2, 4, 2, 4, 9]),
+        "exact": exact,
+    }
+    for name, vol in vols.items():
+        (d / f"{name}.nii").write_bytes(encode_nifti1(vol, np.eye(4)))
+    return str(d)
+
+
+@pytest.mark.parametrize("n_frames", [3, 5])
+def test_fused_reformat_equals_relational_chain_on_nifti(spark, edge_nifti_dir, n_frames):
+    rows = _assert_fused_equals_relational(spark, edge_nifti_dir, "*.nii", n_frames, "nii")
+    row = lambda name, f: rows[f"eq-{name}-__-{f:02d}"]  # noqa: E731
+    # zero borders are cropped, with their offsets
+    assert (row("borders", 0)["y0"], row("borders", 0)["x0"]) == (1, 1)
+    assert (row("borders", 0)["height"], row("borders", 0)["width"]) == (4, 4)
+    # an all-zero frame keeps its full plane at offset 0, volume 0
+    assert (row("blank", 1)["height"], row("blank", 1)["width"]) == (6, 5)
+    assert (row("blank", 1)["y0"], row("blank", 1)["x0"], row("blank", 1)["volume"]) == (0, 0, 0)
+    # no annotated frame: ED/ES and the flags are null
+    for f in range(n_frames):
+        r = row("unannotated", f)
+        assert (r["ed_frame"], r["es_frame"], r["is_ed"], r["is_es"]) == (None,) * 4
+    # ties: the lower frame wins; frame 4 (volume 0) is not annotated
+    assert (row("ties", 0)["ed_frame"], row("ties", 0)["es_frame"]) == (1, 0)
+    # only kept frames take part in ED/ES
+    assert row("late_peak", 0)["ed_frame"] == (1 if n_frames == 3 else 4)
+    # exactly float32(0.6) counts, the float just below does not
+    assert [row("exact", f)["volume"] for f in range(n_frames)] == [3] * n_frames
+
+
+def test_fused_reformat_equals_relational_chain_on_fake_and_png(spark, raw_dir, tmp_path):
+    import numpy as np
+
+    from qcardia_data_spark.sources.png import encode_png
+
+    _assert_fused_equals_relational(spark, raw_dir, "*.bin", 4, "fake", height=5, width=6)
+    rng = np.random.RandomState(9)
+    for i in range(2):
+        img = np.zeros((5, 7, 3), dtype=np.uint8)
+        img[1:4, 2:6, :] = rng.randint(0, 256, (3, 4, 3))
+        (tmp_path / f"img{i}.png").write_bytes(encode_png(img))
+    _assert_fused_equals_relational(spark, str(tmp_path), "*.png", 3, "png")
+
+
+def test_reformat_frames_keeps_nan_pixels_and_does_not_count_them():
+    import numpy as np
+
+    from qcardia_data_spark.reformat import reformat_frames
+
+    vol = np.full((2, 2, 1), 0.9, dtype=np.float32)
+    vol[0, 1, 0] = np.nan
+    batch = reformat_frames("file:/x/s.nii", vol, 1).to_pydict()
+    assert batch["volume"] == [3] and batch["ed_frame"] == [0]
+    assert np.isnan(batch["pixels"][0][1])
+
+
+def test_reformat_records_plan_is_one_scan_one_kernel_one_job(spark, raw_dir, tmp_path):
+    import uuid
+
+    records, _ = reformat_volumes(spark, raw_dir, dataset="mmX", n_frames=4)
+    plan = records._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan binaryFile") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    for node in ("Exchange", "Window", "Join"):
+        assert node not in plan, node
+
+    sc = spark.sparkContext
+    group = f"reformat-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "reformat job-count test")
+    try:
+        records.write.parquet(str(tmp_path / "records"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+# --- refusals: inputs the relational plan silently mis-processed -----------
+
+
+def _nifti(path, shape):
+    import numpy as np
+
+    from qcardia_data_spark.sources.nifti import encode_nifti1
+
+    vol = np.random.RandomState(0).rand(*shape).astype(np.float32)
+    path.write_bytes(encode_nifti1(vol, np.eye(4), compress=path.name.endswith(".gz")))
+
+
+def test_reformat_refuses_two_files_of_one_subject_before_any_job(spark, tmp_path):
+    import uuid
+
+    _nifti(tmp_path / "subj0.nii", (4, 3, 2))
+    _nifti(tmp_path / "subj0.nii.gz", (4, 3, 2))
+    _nifti(tmp_path / "subj1.nii", (4, 3, 2))
+    sc = spark.sparkContext
+    group = f"refuse-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "reformat refusal test")
+    try:
+        with pytest.raises(ValueError, match=r"subj0.*subj0\.nii\.gz"):
+            reformat_volumes(spark, str(tmp_path), glob="*.nii*", n_frames=2, codec="nii")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_reformat_refuses_a_volume_that_is_not_3d(spark, tmp_path):
+    _nifti(tmp_path / "ok.nii", (4, 3, 2))
+    _nifti(tmp_path / "four_d.nii", (4, 3, 2, 2))
+    records, _ = reformat_volumes(spark, str(tmp_path), glob="*.nii", n_frames=2, codec="nii")
+    with pytest.raises(Exception, match=r"four_d\.nii.*not a 3-D"):
+        records.collect()
+
+
+def test_reformat_refuses_a_volume_with_too_few_frames(spark, tmp_path):
+    _nifti(tmp_path / "ok.nii", (4, 3, 3))
+    _nifti(tmp_path / "short.nii", (4, 3, 2))
+    records, _ = reformat_volumes(spark, str(tmp_path), glob="*.nii", n_frames=3, codec="nii")
+    with pytest.raises(Exception, match=r"short\.nii: 2 frames, fewer than n_frames=3"):
+        records.collect()
+
+
+def test_reformat_refuses_codecs_without_an_array_decoder(spark, raw_dir):
+    for codec in ("dcm", "avi"):
+        with pytest.raises(NotImplementedError, match=codec):
+            reformat_volumes(spark, raw_dir, codec=codec)
