@@ -25,11 +25,12 @@ Scale shape:
 - ``upsert_lookup`` is the serving-side point read: key → bucket → one
   partition directory scanned.
 
-Storage contract (the ``_lsh_meta``/``_sig_meta`` pattern): build params
-live in ``path/_merge_meta`` and every later merge/lookup derives its
-bucketing from the table's own meta, so a caller can never bucket a batch
-differently than the table it merges into (ADVICE r7: indexes whose probes
-can silently drift from their build params are bugs).
+Storage contract (every standing index's): build params live in the
+``merge`` manifest ``path/_meta.json`` and every later merge/lookup
+derives its bucketing from the table's own meta, so a caller can never
+bucket a batch differently than the table it merges into (ADVICE r7:
+indexes whose probes can silently drift from their build params are
+bugs).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from qcardia_data_spark.sources import readers
 from qcardia_data_spark.sources.writers import cluster_for_partitioned_write
 
 __all__ = [
@@ -150,32 +152,6 @@ def _bucket_of(key: Column, n_buckets: int) -> Column:
     ).cast("int")
 
 
-def _read_merge_meta(spark: SparkSession, path: str) -> dict | None:
-    """None ONLY when the meta path is absent; other read errors re-raise
-    (a swallowed permission/corrupt read would skip key/ts enforcement on
-    a real table — the ADVICE-r9 CMS bug, same class)."""
-    from qcardia_data_spark.sources.readers import read_meta_dict
-
-    return read_meta_dict(spark, f"{path}/_merge_meta")
-
-
-def _write_merge_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("n_buckets", T.IntegerType()),
-            T.StructField("key_type", T.StringType()),
-        ]
-    )
-    row = tuple(meta[f.name] for f in schema.fields)
-    spark.createDataFrame([row], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/_merge_meta")
-
-
 def upsert_write_partitioned(
     df: DataFrame,
     path: str,
@@ -184,7 +160,7 @@ def upsert_write_partitioned(
     n_buckets: int | str = 64,
 ) -> None:
     """Initialize a merge-upsert table: rows hash-bucketed on ``key`` into
-    ``n_buckets`` partition directories, params frozen in ``_merge_meta``.
+    ``n_buckets`` partition directories, params frozen in its manifest.
 
     ``n_buckets`` bounds later merges' driver-side bucket collection and
     sets the pruning grain: a batch touching k distinct keys reads at most
@@ -229,9 +205,8 @@ auto_index_buckets` sizes the count from the initial row count so
         .partitionBy(_BUCKET)
         .parquet(f"{path}/rows")
     )
-    _write_merge_meta(
-        df.sparkSession,
-        path,
+    readers.commit_meta_json(
+        df.sparkSession, path, "merge",
         {"key": key, "ts": ts, "n_buckets": int(n_buckets), "key_type": key_type},
     )
 
@@ -254,10 +229,10 @@ def _check_reserved(df: DataFrame, who: str) -> None:
 
 
 def _require_meta(spark: SparkSession, path: str, who: str) -> dict:
-    meta = _read_merge_meta(spark, path)
+    meta = readers.read_meta_json(spark, path, "merge")
     if meta is None:
         raise ValueError(
-            f"{who}: no _merge_meta at {path!r} — not an upsert table "
+            f"{who}: no _meta.json at {path!r} — not an upsert table "
             "(initialize with upsert_write_partitioned)"
         )
     return meta
@@ -297,7 +272,7 @@ def merge_upsert_partitioned(
         if c not in updates.columns:
             raise ValueError(
                 f"merge_upsert_partitioned: batch lacks column {c!r} "
-                f"required by the table's _merge_meta at {path!r}"
+                f"required by the table's _meta.json at {path!r}"
             )
     if dict(updates.dtypes)[key] != meta["key_type"]:
         raise ValueError(
@@ -314,9 +289,7 @@ def merge_upsert_partitioned(
     if not touched:
         return
 
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-    stored = read_pruned_partitions(spark, f"{path}/rows", _BUCKET, touched)
+    stored = readers.read_pruned_partitions(spark, f"{path}/rows", _BUCKET, touched)
     order = [F.col(ts).desc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).desc())
@@ -378,9 +351,7 @@ def upsert_lookup(
             ).collect()
         }
     )
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-    df = read_pruned_partitions(spark, f"{path}/rows", _BUCKET, buckets)
+    df = readers.read_pruned_partitions(spark, f"{path}/rows", _BUCKET, buckets)
     vals = F.broadcast(kdf.distinct())
     return df.join(vals, key, "left_semi").drop(_BUCKET)
 
@@ -451,7 +422,7 @@ def upsert_append_batch(
         if c not in updates.columns:
             raise ValueError(
                 f"upsert_append_batch: batch lacks column {c!r} required "
-                f"by the table's _merge_meta at {path!r}"
+                f"by the table's _meta.json at {path!r}"
             )
     if dict(updates.dtypes)[key] != meta["key_type"]:
         raise ValueError(

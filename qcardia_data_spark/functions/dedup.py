@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.functions.text import doc_fingerprint, shingles, word_tokens
+from qcardia_data_spark.sources import readers
 from qcardia_data_spark.sources.writers import cluster_for_partitioned_write
 
 
@@ -1794,39 +1795,8 @@ _NUMERIC_ID_TYPES = frozenset(
 )
 
 
-def _read_sig_meta(spark, path: str) -> dict | None:
-    """Read ``path/_sig_meta`` (None ONLY if the path is absent — a
-    pre-metadata index); other read failures re-raise so they can't be
-    mistaken for "no meta" and skip param enforcement (ADVICE r9)."""
-    from qcardia_data_spark.sources.readers import read_meta_dict
-
-    return read_meta_dict(spark, f"{path}/_sig_meta")
-
-
 def _write_sig_meta(spark, path: str, meta: dict) -> None:
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("n_bands", T.IntegerType()),
-            T.StructField("shingle_n", T.IntegerType()),
-            T.StructField("n_sig_buckets", T.IntegerType()),
-            T.StructField("n_id_buckets", T.IntegerType()),
-            T.StructField("id_col", T.StringType()),
-            T.StructField("id_type", T.StringType()),
-            # stored as string so one schema covers long AND string ids;
-            # _id_as_meta_comparable casts it back per id_type
-            T.StructField("max_id", T.StringType(), nullable=True),
-        ]
-    )
-    row = tuple(
-        meta[f.name] if f.name != "max_id" or meta["max_id"] is None
-        else str(meta["max_id"])
-        for f in schema.fields
-    )
-    spark.createDataFrame([row], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/_sig_meta")
+    readers.commit_meta_json(spark, path, "sig", meta)
 
 
 def _id_as_meta_comparable(raw: str | None, id_type: str):
@@ -1861,12 +1831,13 @@ def write_signature_index(
     so the index is appendable across runs (``mode="append"`` — what
     :func:`near_dedup_incremental` ``update_index`` uses).
 
-    The build parameters and the corpus max id are persisted to
-    ``path/_sig_meta`` (the ``_lsh_meta``/``_ivfpq_meta`` pattern: the
-    index and its probes can never drift) — :func:`near_dedup_incremental`
-    reads them back, validates any explicitly-passed parameters, and
-    enforces the monotone-id precondition against ``max_id``. Appends
-    validate the same parameters and ratchet ``max_id`` upward.
+    The build parameters and the corpus max id are persisted to the
+    index manifest ``path/_meta.json`` (kind ``sig``; every standing
+    index keeps one, so the index and its probes can never drift) —
+    :func:`near_dedup_incremental` reads them back, validates any
+    explicitly-passed parameters, and enforces the monotone-id
+    precondition against ``max_id``. Appends validate the same
+    parameters and ratchet ``max_id`` upward.
 
     ``n_sig_buckets`` / ``n_id_buckets`` accept ``"auto"`` (VERDICT r13
     #2): the count is sized from the corpus being written via
@@ -1888,14 +1859,14 @@ def write_signature_index(
     drift affects occupancy only, never correctness)."""
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
-    old = _read_sig_meta(spark, path) if mode == "append" else None
+    old = readers.read_meta_json(spark, path, "sig") if mode == "append" else None
     n_docs = None
     batch_max = None
     if "auto" in (n_sig_buckets, n_id_buckets) and old is None:
         if mode == "append":
             raise ValueError(
                 "write_signature_index: n_sig_buckets/n_id_buckets='auto' "
-                "on append requires the index's _sig_meta (legacy no-meta "
+                "on append requires the index's _meta.json (legacy no-meta "
                 "index — pass the build's explicit bucket counts instead)"
             )
         stats = df.agg(
@@ -1986,7 +1957,7 @@ def near_dedup_incremental(
     new docs; with ``update_index`` their signatures and shingle sets are
     appended to the index, making the next batch incremental too.
 
-    Build parameters come from the index's own ``_sig_meta`` (written by
+    Build parameters come from the index's own manifest (written by
     :func:`write_signature_index`): leave ``n_bands``/``shingle_n``/
     ``n_sig_buckets``/``n_id_buckets`` as None to use the index's values;
     any explicitly-passed value is VALIDATED against the meta and a
@@ -2025,10 +1996,10 @@ def near_dedup_incremental(
     equality of a full band signature is already a strong filter.
     """
     spark = new_docs.sparkSession
-    meta = _read_sig_meta(spark, index_path)
+    meta = readers.read_meta_json(spark, index_path, "sig")
     if meta is None:
         raise ValueError(
-            f"near_dedup_incremental: no _sig_meta at {index_path!r} — the "
+            f"near_dedup_incremental: no _meta.json at {index_path!r} — the "
             "index was not written by write_signature_index (or the path "
             "is wrong). Rebuild it; probing with guessed parameters "
             "silently misses duplicates."
@@ -2099,9 +2070,7 @@ def near_dedup_incremental(
                 _sig_bucket(F.col("sig"), n_sig_buckets).alias("b")
             ).distinct().collect()  # bounded: ≤ n_sig_buckets rows
         ]
-        from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-        idx_sigs = read_pruned_partitions(
+        idx_sigs = readers.read_pruned_partitions(
             spark, f"{index_path}/sigs", "sig_bucket", probe_buckets
         )
         cand_idx = (
@@ -2130,7 +2099,7 @@ def near_dedup_incremental(
                 _id_bucket(F.col("_idx_id"), n_id_buckets).alias("b")
             ).distinct().collect()  # bounded: ≤ n_id_buckets rows
         ]
-        idx_sets = read_pruned_partitions(
+        idx_sets = readers.read_pruned_partitions(
             spark, f"{index_path}/shingle_sets", "id_bucket", set_buckets
         ).select(F.col(id_col).alias("_idx_id"), F.col("shingles").alias("_sb"))
         new_sets = sh_new.groupBy(id_col).agg(
@@ -2221,33 +2190,6 @@ def near_dedup_incremental(
 _WIN_META_PARAMS = ("k", "w", "n_fp_buckets")
 
 
-def _read_win_meta(spark, path: str) -> dict | None:
-    from qcardia_data_spark.sources.readers import read_meta_dict
-
-    return read_meta_dict(spark, f"{path}/_win_meta")
-
-
-def _write_win_meta(spark, path: str, meta: dict) -> None:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("k", T.IntegerType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("n_fp_buckets", T.IntegerType()),
-        T.StructField("id_col", T.StringType()),
-        T.StructField("id_type", T.StringType()),
-        T.StructField("max_id", T.StringType(), nullable=True),
-    ])
-    row = tuple(
-        meta[f.name] if f.name != "max_id" or meta["max_id"] is None
-        else str(meta["max_id"])
-        for f in schema.fields
-    )
-    spark.createDataFrame([row], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/_win_meta")
-
-
 def write_winnow_index(
     df: DataFrame, id_col: str, text_col: str, path: str,
     k: int = 3, w: int = 4, n_fp_buckets: int | str = 64,
@@ -2255,9 +2197,9 @@ def write_winnow_index(
 ) -> None:
     """Materialize the winnowing fingerprint index for ``df`` as ONE
     fp-bucket-partitioned parquet table (id, fp) — the standing-index
-    form of :func:`winnow_share_pairs`'s left side, the `_sig_meta`
+    form of :func:`winnow_share_pairs`'s left side, the signature-index
     pattern applied to the MOSS tier: params + id type + corpus max_id
-    frozen in ``path/_win_meta``, appends validate params and ratchet
+    frozen in the index's manifest, appends validate params and ratchet
     ``max_id``. Because winnowing samples ~2/(w+1) of grams, this index
     is ~5x smaller than the signature index's shingle sets for the same
     detection guarantee class.
@@ -2272,11 +2214,11 @@ def write_winnow_index(
 
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
-    old = _read_win_meta(spark, path) if mode == "append" else None
+    old = readers.read_meta_json(spark, path, "win") if mode == "append" else None
     if n_fp_buckets == "auto" and old is None and mode == "append":
         raise ValueError(
             "write_winnow_index: n_fp_buckets='auto' on append requires "
-            "the index's _win_meta (legacy no-meta index — pass the "
+            "the index's _meta.json (legacy no-meta index — pass the "
             "build's explicit bucket count instead)"
         )
     fps = (
@@ -2327,7 +2269,7 @@ def write_winnow_index(
             old["max_id"], id_type
         ) > _id_as_meta_comparable(max_id, id_type):
             max_id = old["max_id"]
-    _write_win_meta(spark, path, {**params, "max_id": max_id})
+    readers.commit_meta_json(spark, path, "win", {**params, "max_id": max_id})
 
 
 def winnow_incremental(
@@ -2344,7 +2286,8 @@ def winnow_incremental(
     >= ``min_shared`` surviving fingerprints with ANY lower id (index or
     batch — the min-id greedy, so under the monotone-id layout the
     batch-wise result composes like the full run). Params come from
-    ``_win_meta``; explicit values are validated (drift refuses loudly);
+    the index manifest; explicit values are validated (drift refuses
+    loudly);
     batch ids at or below the index's ``max_id`` refuse unless
     ``allow_replay`` (the retried-micro-batch escape — same-id rows
     dedup in the pool, so a replay converges).
@@ -2361,10 +2304,10 @@ def winnow_incremental(
     self-match).
     """
     spark = new_docs.sparkSession
-    meta = _read_win_meta(spark, index_path)
+    meta = readers.read_meta_json(spark, index_path, "win")
     if meta is None:
         raise ValueError(
-            f"winnow_incremental: no _win_meta at {index_path!r} — "
+            f"winnow_incremental: no _meta.json at {index_path!r} — "
             "not a winnow index (build with write_winnow_index)"
         )
     for name, val in (("k", k), ("w", w)):
@@ -2407,9 +2350,7 @@ def winnow_incremental(
             r["fp_bucket"]
             for r in bfps.select("fp_bucket").distinct().collect()
         ]  # bounded driver collect: <= n_fp_buckets rows
-        from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-        idx = read_pruned_partitions(
+        idx = readers.read_pruned_partitions(
             spark, f"{index_path}/fps", "fp_bucket", buckets
         ).select(F.col(id_col).alias("_id"), "fp")
         pool = idx.unionByName(bfps.select("_id", "fp")).distinct()
@@ -2450,8 +2391,8 @@ def winnow_incremental(
                 > _id_as_meta_comparable(max_id, id_type)
             ):
                 max_id = str(batch_max)
-            _write_win_meta(
-                spark, index_path,
+            readers.commit_meta_json(
+                spark, index_path, "win",
                 {**{p: meta[p] for p in _WIN_META_PARAMS},
                  "id_col": meta["id_col"], "id_type": meta["id_type"],
                  "max_id": max_id},
@@ -2491,32 +2432,6 @@ def _h64_blocks(sig: DataFrame, id_col: str, k: int) -> DataFrame:
     return out
 
 
-def _read_h64_meta(spark, path: str) -> dict | None:
-    from qcardia_data_spark.sources.readers import read_meta_dict
-
-    return read_meta_dict(spark, f"{path}/_h64_meta")
-
-
-def _write_h64_meta(spark, path: str, meta: dict) -> None:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("max_hamming", T.IntegerType()),
-        T.StructField("n_key_buckets", T.IntegerType()),
-        T.StructField("id_col", T.StringType()),
-        T.StructField("id_type", T.StringType()),
-        T.StructField("max_id", T.StringType(), nullable=True),
-    ])
-    row = tuple(
-        meta[f.name] if f.name != "max_id" or meta["max_id"] is None
-        else str(meta["max_id"])
-        for f in schema.fields
-    )
-    spark.createDataFrame([row], schema).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/_h64_meta")
-
-
 def _h64_kb(k: int, n_key_buckets: int) -> Column:
     return F.pmod(
         F.conv(
@@ -2540,7 +2455,7 @@ def write_hamming64_index(
     block-value) with lo/hi carried for the verify, partitioned by
     ``kb = md5(block#value) mod n`` so a probe reads ONLY the key
     buckets its own blocks hash into. Params + id type + corpus max_id
-    frozen in ``_h64_meta`` (drift refuses, appends ratchet).
+    frozen in the ``h64`` manifest (drift refuses, appends ratchet).
 
     ``n_key_buckets`` accepts ``"auto"`` (VERDICT r13 #2): sized from
     the block-table row count — exactly ``n_sigs × (max_hamming + 1)``
@@ -2557,14 +2472,14 @@ def write_hamming64_index(
             "write_hamming64_index: max_hamming must be in 1, 3, 7, 15, 31"
         )
     id_type = sig.schema[id_col].dataType.simpleString()
-    old = _read_h64_meta(spark, path) if mode == "append" else None
+    old = readers.read_meta_json(spark, path, "h64") if mode == "append" else None
     n_sigs = None
     batch_max = None
     if n_key_buckets == "auto" and old is None:
         if mode == "append":
             raise ValueError(
                 "write_hamming64_index: n_key_buckets='auto' on append "
-                "requires the index's _h64_meta (legacy no-meta index — "
+                "requires the index's _meta.json (legacy no-meta index — "
                 "pass the build's explicit bucket count instead)"
             )
         stats = sig.agg(
@@ -2604,7 +2519,7 @@ def write_hamming64_index(
             old["max_id"], id_type
         ) > _id_as_meta_comparable(max_id, id_type):
             max_id = old["max_id"]
-    _write_h64_meta(spark, path, {**params, "max_id": max_id})
+    readers.commit_meta_json(spark, path, "h64", {**params, "max_id": max_id})
 
 
 def hamming64_index_probe(
@@ -2624,10 +2539,10 @@ def hamming64_index_probe(
     with the caller (media families keep cluster-best candidates, dedup
     drops them)."""
     spark = batch_sig.sparkSession
-    meta = _read_h64_meta(spark, index_path)
+    meta = readers.read_meta_json(spark, index_path, "h64")
     if meta is None:
         raise ValueError(
-            f"hamming64_index_probe: no _h64_meta at {index_path!r} — "
+            f"hamming64_index_probe: no _meta.json at {index_path!r} — "
             "not a hamming64 index (build with write_hamming64_index)"
         )
     k = int(meta["max_hamming"])
@@ -2655,9 +2570,7 @@ def hamming64_index_probe(
         buckets = [
             r["kb"] for r in bblocks.select("kb").distinct().collect()
         ]  # bounded: <= n_key_buckets
-        from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-        idx = read_pruned_partitions(
+        idx = readers.read_pruned_partitions(
             spark, f"{index_path}/blocks", "kb", buckets
         )
         pool = idx.select(id_col, "lo", "hi", "blk", "val").unionByName(
@@ -2697,8 +2610,8 @@ def hamming64_index_probe(
                 > _id_as_meta_comparable(max_id, id_type)
             ):
                 max_id = str(batch_max)
-            _write_h64_meta(
-                spark, index_path,
+            readers.commit_meta_json(
+                spark, index_path, "h64",
                 {"max_hamming": k, "n_key_buckets": n_kb,
                  "id_col": meta["id_col"], "id_type": meta["id_type"],
                  "max_id": max_id},

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.functions.text import word_tokens
+from qcardia_data_spark.sources import readers
 from qcardia_data_spark.sources.writers import cluster_for_partitioned_write
 
 
@@ -169,9 +170,7 @@ def build_inverted_index(
     At 100 TB this is the one corpus-wide pass; every later keyword query
     reads only its terms' buckets (verified file pruning in
     `test_retrieval.py`)."""
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    marker = read_meta_json(docs.sparkSession, f"{path}/_idx_kind")
+    marker = readers.read_meta_json(docs.sparkSession, path)
     if marker is not None and marker["kind"] != "bm25":
         raise ValueError(
             f"build_inverted_index: {path!r} holds a {marker['kind']} "
@@ -204,40 +203,36 @@ def build_inverted_index(
     docs.select(F.size(word_tokens(F.col(text_col))).alias("_dl")).agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("_dl").alias("avgdl")
     ).write.mode("overwrite").parquet(f"{path}/_stats")
-    # the marker carries the LAYOUT geometry too (r13 review): probes
+    # the manifest carries the LAYOUT geometry too (r13 review): probes
     # must bucket with the index's own n_buckets — a caller-supplied
     # count that differs from the build reads the WRONG partition
-    # directories with no error signal (the _cms_meta drift class)
-    docs.sparkSession.createDataFrame(
-        [("bm25", int(n_buckets))], ["kind", "n_buckets"]
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_idx_kind")
+    # directories with no error signal (the CMS-store drift class)
+    readers.commit_meta_json(
+        docs.sparkSession, path, "bm25", {"n_buckets": int(n_buckets)}
+    )
 
 
 def _resolve_index_buckets(
-    spark: SparkSession, path: str, caller: int | None, who: str
+    spark: SparkSession, path: str, caller: int | None, who: str, kind: str,
 ) -> int:
-    """Bucket count for probing the index at ``path``: the index's OWN
-    ``_idx_kind`` geometry when recorded (r13 — the ``_cms_meta``
-    store-contract pattern), with an explicitly-passed caller value
-    VALIDATED against it (mismatch refuses loudly: probing with a
-    different count reads the wrong partition directories silently).
-    Pre-r13 markers lack the field; they fall back to the caller's value
-    or — with a ``UserWarning``, ADVICE r13 — the module default: a
-    legacy index built with a NON-default count and probed with no
-    explicit value is the one residual silent-wrong-partition case this
-    contract can't close from the probe side (the marker simply doesn't
-    say), so the fallback is made loud instead of silent. Rebuilding the
-    index (or one explicit-n_buckets probe after checking the build) is
-    the permanent fix; new builds always write the geometry."""
+    """Bucket count for probing the ``kind`` index at ``path``: the
+    index's OWN geometry from its manifest (r13 — the CMS-store
+    contract), with an explicitly-passed caller value VALIDATED against
+    it (mismatch refuses loudly: probing with a different count reads
+    the wrong partition directories silently). An index with no
+    manifest (a pre-marker build: postings and ``_stats`` only) falls
+    back to the caller's value or — with a ``UserWarning``, ADVICE r13 —
+    the module default: a legacy index built with a NON-default count
+    and probed with no explicit value is the one residual
+    silent-wrong-partition case this contract can't close from the probe
+    side (nothing records the count), so the fallback is made loud
+    instead of silent. Rebuilding the index (or one explicit-n_buckets
+    probe after checking the build) is the permanent fix; new builds
+    always write the geometry."""
     import warnings
 
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    marker = read_meta_json(spark, f"{path}/_idx_kind")
-    meta_n = None
-    if marker is not None and "n_buckets" in marker.__fields__:
-        v = marker["n_buckets"]
-        meta_n = int(v) if v is not None else None
+    marker = readers.read_meta_json(spark, path, kind)
+    meta_n = int(marker["n_buckets"]) if marker is not None else None
     if meta_n is not None:
         if caller is not None and int(caller) != meta_n:
             raise ValueError(
@@ -266,13 +261,11 @@ def _stats_exists(spark: SparkSession, path: str) -> bool:
     side table exists) — FS-agnostic probe through the reader."""
     from pyspark.errors import AnalysisException
 
-    from qcardia_data_spark.sources.readers import is_path_not_found
-
     try:
         spark.read.parquet(f"{path}/_stats").schema
         return True
     except AnalysisException as e:
-        if is_path_not_found(e):
+        if readers.is_path_not_found(e):
             return False
         raise
 
@@ -298,7 +291,7 @@ def bm25_topk_from_index(
         raise ValueError("query_terms must be non-empty")
     _check_id_col(id_col, "bm25_topk_from_index")
     n_buckets = _resolve_index_buckets(
-        spark, path, n_buckets, "bm25_topk_from_index"
+        spark, path, n_buckets, "bm25_topk_from_index", "bm25"
     )
     query_terms = sorted({t.lower() for t in query_terms})  # postings are lowercase
     # bucket ids via the index's OWN bucketing expression (the
@@ -312,9 +305,7 @@ def bm25_topk_from_index(
         .distinct()
         .collect()
     )
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-    postings = read_pruned_partitions(
+    postings = readers.read_pruned_partitions(
         spark, f"{path}/postings", "term_bucket", buckets
     ).filter(F.col("term").isin(query_terms))
     stats = spark.read.parquet(f"{path}/_stats")
@@ -411,14 +402,12 @@ def build_positional_index(
     probe reads ONLY its terms' bucket directories. The one corpus-wide
     pass; positions make it ~|tokens| rows instead of |distinct terms
     per doc| — the classic positional-index size trade, paid once."""
-    from qcardia_data_spark.sources.readers import read_meta_json
-
     spark = docs.sparkSession
     # same-kind rebuild is allowed (retry-safe, the build_inverted_index
     # stance); only a DIFFERENT kind at the path refuses — both kinds
     # write {path}/postings with incompatible schemas, so a cross-kind
     # overwrite would silently clobber it
-    marker = read_meta_json(spark, f"{path}/_idx_kind")
+    marker = readers.read_meta_json(spark, path)
     if (marker is not None and marker["kind"] != "positional") or (
         marker is None and _stats_exists(spark, path)
     ):
@@ -448,9 +437,7 @@ def build_positional_index(
     ).partitionBy("term_bucket").parquet(
         f"{path}/postings"
     )
-    spark.createDataFrame(
-        [("positional", int(n_buckets))], ["kind", "n_buckets"]
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_idx_kind")
+    readers.commit_meta_json(spark, path, "positional", {"n_buckets": int(n_buckets)})
 
 
 def phrase_occurrences_from_index(
@@ -469,7 +456,7 @@ def phrase_occurrences_from_index(
         raise ValueError("phrase_occurrences_from_index: phrase is empty")
     _check_id_col(id_col, "phrase_occurrences_from_index")
     n_buckets = _resolve_index_buckets(
-        spark, path, n_buckets, "phrase_occurrences_from_index"
+        spark, path, n_buckets, "phrase_occurrences_from_index", "positional"
     )
     phrase = [t.lower() for t in phrase]  # postings are lowercase
     ph = spark.createDataFrame(
@@ -483,9 +470,7 @@ def phrase_occurrences_from_index(
             term_bucket(F.col("term"), n_buckets).alias("b")
         ).distinct().collect()
     ]
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
-    postings = read_pruned_partitions(
+    postings = readers.read_pruned_partitions(
         spark, f"{path}/postings", "term_bucket", buckets
     ).filter(F.col("term").isin(list(set(phrase))))
     m = postings.join(F.broadcast(ph), "term").select(

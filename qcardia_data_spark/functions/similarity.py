@@ -17,6 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qcardia_data_spark.sources import readers
 from qcardia_data_spark.sources.writers import cluster_for_partitioned_write
 from qcardia_data_spark.functions.arrays import (
     cosine,
@@ -379,8 +380,8 @@ def ivf_write_partitioned(
     the probed directories, verified by inputFiles in the test suite.
 
     Returns the centroid frame; since r8 the centroids and build params
-    are ALSO persisted to ``path/_ivf_meta`` (the ``_lsh_meta``/
-    ``_ivfpq_meta`` pattern), so probes that only hold the path —
+    are ALSO persisted to the ``ivf`` manifest ``path/_meta.json`` (as
+    every standing index does), so probes that only hold the path —
     :func:`ann_ivf_topk_from_meta`, the spec ``ann_probe`` op — can
     never drift from the layout they scan."""
     import json as _json
@@ -395,13 +396,12 @@ def ivf_write_partitioned(
         [float(x) for x in r["centroid"]]
         for r in sorted(centroids.collect(), key=lambda r: r["cell"])
     ]
-    meta = embeddings.sparkSession.createDataFrame(
+    readers.commit_meta_json(embeddings.sparkSession, path, "ivf", {
         # len(cents), not the requested n_cells: ivf_assign caps the cell
         # count at the corpus size — the meta records the ACTUAL geometry
-        [(_json.dumps(cents), len(cents), int(seed), int(n_refine))],
-        ["centroids_json", "n_cells", "seed", "n_refine"],
-    )
-    meta.coalesce(1).write.mode("overwrite").json(f"{path}/_ivf_meta")
+        "centroids_json": _json.dumps(cents), "n_cells": len(cents),
+        "seed": int(seed), "n_refine": int(n_refine),
+    })
     return centroids
 
 
@@ -410,18 +410,16 @@ def ann_ivf_topk_from_meta(
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF probe that needs ONLY the index path: centroids come from the
-    index's own ``_ivf_meta``, so the probe can never rank cells with a
+    index's own manifest, so the probe can never rank cells with a
     different clustering than the one the directories were laid out by.
     Same plan as :func:`ann_ivf_topk_pruned` (partition-filtered cell
     scan + cosine top-k)."""
     import json as _json
 
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    meta = read_meta_json(spark, f"{path}/_ivf_meta")
+    meta = readers.read_meta_json(spark, path, "ivf")
     if meta is None:
         raise ValueError(
-            f"ann_ivf_topk_from_meta: no _ivf_meta at {path!r} — not a "
+            f"ann_ivf_topk_from_meta: no _meta.json at {path!r} — not a "
             "persisted IVF index (build with ivf_write_partitioned)"
         )
     cents = _json.loads(meta["centroids_json"])
@@ -473,11 +471,9 @@ def ann_ivf_topk_pruned(
     probed directories — scan cost ∝ probed fraction, the property that
     makes IVF work at 100 TB (same math as :func:`ann_ivf_topk`, different
     storage layout)."""
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
     probe_cells = ivf_probe_cells(centroids, query_vec, n_probe)
     qcol = literal_double_array([float(x) for x in query_vec])
-    cand = read_pruned_partitions(spark, path, "cell", probe_cells)
+    cand = readers.read_pruned_partitions(spark, path, "cell", probe_cells)
     scored = cand.select(F.col(id_col), cosine(F.col(vec_col), qcol).alias("score"))
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
@@ -557,9 +553,10 @@ def ivfpq_write_partitioned(
     together they are the standard recipe for a standing billion-vector
     index, here expressed as parquet layout + plan literals.
 
-    Index metadata (centroids + codebooks + params) is written to
-    ``path/_ivfpq_meta`` (underscore-prefixed → invisible to the parquet
-    scan); the probe reads it back, so the two sides can never drift.
+    Index metadata (centroids + codebooks + params) is written to the
+    ``ivfpq`` manifest ``path/_meta.json`` (underscore-prefixed →
+    invisible to the parquet scan); the probe reads it back, so the two
+    sides can never drift.
     With ``residual`` (Jégou §IV.B, the IVFADC form), PQ trains on and
     encodes the RESIDUAL vector − centroid[cell] instead of the vector:
     residuals concentrate near zero, so the same m×k code budget spends
@@ -608,18 +605,14 @@ def ivfpq_write_partitioned(
         .partitionBy("cell")
         .parquet(path)
     )
-    meta = embeddings.sparkSession.createDataFrame(
+    readers.commit_meta_json(embeddings.sparkSession, path, "ivfpq", {
         # actual geometry, not the requested params: ivf_assign/pq_encode
         # cap cell and code counts at the corpus size
-        [(
-            _json.dumps(cents), _json.dumps(cb),
-            len(cents), int(m), len(cb[0]), int(seed), int(n_refine),
-            bool(normalize), bool(residual),
-        )],
-        ["centroids_json", "codebooks_json", "n_cells", "m", "k_codes",
-         "seed", "n_refine", "normalize", "residual"],
-    )
-    meta.coalesce(1).write.mode("overwrite").json(f"{path}/_ivfpq_meta")
+        "centroids_json": _json.dumps(cents), "codebooks_json": _json.dumps(cb),
+        "n_cells": len(cents), "m": int(m), "k_codes": len(cb[0]),
+        "seed": int(seed), "n_refine": int(n_refine),
+        "normalize": bool(normalize), "residual": bool(residual),
+    })
 
 
 def _residualize(
@@ -662,29 +655,24 @@ def ann_ivfpq_topk_pruned(
 
     import numpy as np
 
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    meta = read_meta_json(spark, f"{path}/_ivfpq_meta")
+    meta = readers.read_meta_json(spark, path, "ivfpq")
     if meta is None:
         raise ValueError(
-            f"ann_ivfpq_topk_pruned: no _ivfpq_meta at {path!r} — not a "
+            f"ann_ivfpq_topk_pruned: no _meta.json at {path!r} — not a "
             "persisted IVF+PQ index (build with ivfpq_write_partitioned)"
         )
     cents = _json.loads(meta["centroids_json"])
     cb = _json.loads(meta["codebooks_json"])
     q = np.asarray(list(query_vec), dtype=np.float64)
-    # pre-r8 indexes have no normalize field → raw (False)
-    if "normalize" in meta.__fields__ and meta["normalize"]:
+    if meta["normalize"]:
         # sequential-fold normalize (NOT numpy @ — see _seq_fold_normalize)
         q = np.asarray(_seq_fold_normalize(q), dtype=np.float64)
 
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
     probe = _rank_cells(list(enumerate(cents)), q, n_probe)
-    cand = read_pruned_partitions(spark, path, "cell", probe)
+    cand = readers.read_pruned_partitions(spark, path, "cell", probe)
     # q, not query_vec: a normalized index must see the NORMALIZED query
     # in the ADC too, or the ranking quietly reverts to the raw metric
-    if "residual" in meta.__fields__ and meta["residual"]:
+    if meta["residual"]:
         # residual index: each candidate's codes encode vec − centroid[cell],
         # so the ADC compares against q − centroid[cell] — one residual per
         # cell, shipped as an n_cells×m×d_sub plan literal (bounded)
@@ -936,25 +924,6 @@ def pq_encode_with_codebooks(
     )
 
 
-def _ann_meta(spark, path: str):
-    """(kind, meta_row) for a persisted ANN index — probes the three meta
-    names the writers use. Raises with all three paths on a non-index;
-    non-path-not-found read errors re-raise (a permission/corrupt read of
-    a REAL index must not be reported as "not an index" — ADVICE r9)."""
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    for kind, name in (
-        ("lsh", "_lsh_meta"), ("ivfpq", "_ivfpq_meta"), ("ivf", "_ivf_meta"),
-    ):
-        row = read_meta_json(spark, f"{path}/{name}")
-        if row is not None:
-            return kind, row
-    raise ValueError(
-        f"ann_index_append: no _lsh_meta/_ivfpq_meta/_ivf_meta under "
-        f"{path!r} — not a persisted ANN index"
-    )
-
-
 def ann_index_append(
     embeddings: DataFrame, path: str,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -982,11 +951,17 @@ def ann_index_append(
     import json as _json
 
     spark = embeddings.sparkSession
-    kind, meta = _ann_meta(spark, path)
+    meta = readers.read_meta_json(spark, path)
+    kind = meta["kind"] if meta else None
+    if kind not in ("lsh", "ivfpq", "ivf"):
+        raise ValueError(
+            f"ann_index_append: no lsh/ivfpq/ivf _meta.json under {path!r} "
+            "— not a persisted ANN index"
+        )
 
     if kind == "lsh":
         n_planes, seed = int(meta["n_planes"]), int(meta["seed"])
-        dim = int(meta["dim"]) if "dim" in meta.__fields__ else 64
+        dim = int(meta["dim"])
         rows = embeddings.select(F.col(id_col), F.col(vec_col)).withColumn(
             "bucket", hyperplane_bucket(F.col(vec_col), n_planes, seed, dim)
         )
@@ -996,13 +971,13 @@ def ann_index_append(
             [float(x) for x in c] for c in _json.loads(meta["centroids_json"])
         ]
         if kind == "ivfpq":
-            if "normalize" in meta.__fields__ and meta["normalize"]:
+            if meta["normalize"]:
                 embeddings = normalize_vectors(embeddings, vec_col)
             assigned = _assign_to_centroids(embeddings, cents, vec_col).select(
                 id_col, vec_col, "cell"
             )
             cb = _json.loads(meta["codebooks_json"])
-            if "residual" in meta.__fields__ and meta["residual"]:
+            if meta["residual"]:
                 pq_input = _residualize(
                     assigned, cents, id_col, vec_col, extra_cols=("cell",)
                 )
@@ -1017,10 +992,10 @@ def ann_index_append(
             rows = _assign_to_centroids(embeddings, cents, vec_col)
         part_col = "cell"
 
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
     parts = [r[part_col] for r in rows.select(part_col).distinct().collect()]
-    existing = read_pruned_partitions(spark, path, part_col, parts).select(id_col)
+    existing = readers.read_pruned_partitions(
+        spark, path, part_col, parts
+    ).select(id_col)
     fresh = rows.join(existing, id_col, "left_anti").localCheckpoint(eager=True)
     n = fresh.count()
     if n:
@@ -1272,19 +1247,20 @@ def lsh_write_partitioned(
     whole FILES (reads only the bucket directories its own signatures
     occupy), verified by the test suite.
 
-    The (n_planes, seed) pair the buckets were derived from is written to
-    ``path/_lsh_meta`` (underscore-prefixed → invisible to the parquet
-    scan), and the probe reads it back — the two sides can never drift."""
+    The (n_planes, seed, dim) the buckets were derived from are written to
+    the ``lsh`` manifest ``path/_meta.json`` (underscore-prefixed →
+    invisible to the parquet scan), and the probe reads it back — the two
+    sides can never drift."""
     rb = embeddings.select(F.col(id_col), F.col(vec_col)).withColumn(
         "bucket", hyperplane_bucket(F.col(vec_col), n_planes, seed, dim)
     )
     cluster_for_partitioned_write(rb, "bucket").write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(path)
-    meta = embeddings.sparkSession.createDataFrame(
-        [(int(n_planes), int(seed), int(dim))], ["n_planes", "seed", "dim"]
+    readers.commit_meta_json(
+        embeddings.sparkSession, path, "lsh",
+        {"n_planes": int(n_planes), "seed": int(seed), "dim": int(dim)},
     )
-    meta.coalesce(1).write.mode("overwrite").json(f"{path}/_lsh_meta")
 
 
 def pairwise_topk_join_pruned(
@@ -1293,8 +1269,8 @@ def pairwise_topk_join_pruned(
     n_flip: int = 0, exclude_self: bool = True,
 ) -> DataFrame:
     """ANN join of a probe batch against the persisted LSH table: the
-    batch is bucketed with the table's OWN (n_planes, seed) from
-    ``path/_lsh_meta``, and the table scan carries a
+    batch is bucketed with the table's OWN (n_planes, seed) from its
+    manifest, and the table scan carries a
     ``bucket IN (batch's buckets)`` PARTITION filter — only the occupied
     bucket directories are listed and read, scan cost ∝ probed fraction
     (the property that makes a standing ANN index work at 100 TB; the
@@ -1311,17 +1287,13 @@ def pairwise_topk_join_pruned(
     candidate pairs stay unique because each right row lives in exactly
     one bucket."""
     spark = left.sparkSession
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    meta = read_meta_json(spark, f"{path}/_lsh_meta")
+    meta = readers.read_meta_json(spark, path, "lsh")
     if meta is None:
         raise ValueError(
-            f"pairwise_topk_join_pruned: no _lsh_meta at {path!r} — not a "
+            f"pairwise_topk_join_pruned: no _meta.json at {path!r} — not a "
             "persisted LSH index (build with lsh_write_partitioned)"
         )
-    n_planes, seed = int(meta["n_planes"]), int(meta["seed"])
-    # dim persisted since r10; pre-r10 indexes fall back to the default
-    dim = int(meta["dim"]) if "dim" in meta.__fields__ else 64
+    n_planes, seed, dim = int(meta["n_planes"]), int(meta["seed"]), int(meta["dim"])
     lb = left.select(F.col(id_left), F.col(vec_col).alias("_vl")).withColumn(
         "bucket",
         F.explode(
@@ -1331,10 +1303,8 @@ def pairwise_topk_join_pruned(
     probe = [
         r["bucket"] for r in lb.select("bucket").distinct().collect()
     ]  # bounded: ≤ 2^n_planes rows
-    from qcardia_data_spark.sources.readers import read_pruned_partitions
-
     rb = (
-        read_pruned_partitions(spark, path, "bucket", probe)
+        readers.read_pruned_partitions(spark, path, "bucket", probe)
         .select(
             "bucket", F.col(id_right), F.col(vec_col).alias("_vr")
         )

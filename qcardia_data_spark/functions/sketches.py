@@ -32,6 +32,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from qcardia_data_spark.sources import readers
+
 
 def _misra_gries_batches(col: str, m: int):
     """mapInPandas kernel: one Misra-Gries summary per PARTITION (state
@@ -216,8 +218,8 @@ def hll_store_merge(spark, path: str, registers, p: int) -> None:
     sketch: the store always holds the max-merged registers of every
     batch ever offered.
 
-    Params and key columns are frozen in ``_hll_meta`` on first write and
-    enforced afterwards (the `_lsh_meta`/`_sig_meta` pattern — a probe or
+    Params and key columns are frozen in the store's manifest on first
+    write and enforced afterwards (as in every standing index — a probe or
     merge with different params would silently produce garbage, so drift
     refuses loudly). Merging is max: idempotent and commutative, so
     replays and out-of-order batches converge with no sink machinery —
@@ -225,12 +227,9 @@ def hll_store_merge(spark, path: str, registers, p: int) -> None:
     merged frame is materialized through ``localCheckpoint`` first (the
     cdc/dedup lineage-barrier lesson).
     """
-    from qcardia_data_spark.sources.readers import read_meta_json
-
     keys = [c for c in registers.columns if c not in ("register", "max_rho")]
-    meta_path = f"{path}/_hll_meta"
     rows_path = f"{path}/rows"
-    row = read_meta_json(spark, meta_path)  # FS-agnostic, absence-only None
+    row = readers.read_meta_json(spark, path, "hll")  # absence-only None
     if row is not None:
         if int(row["p"]) != int(p) or list(row["keys"]) != keys:
             raise ValueError(
@@ -240,15 +239,7 @@ def hll_store_merge(spark, path: str, registers, p: int) -> None:
             )
         combined = spark.read.parquet(rows_path).unionByName(registers)
     else:
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("p", T.IntegerType()),
-            T.StructField("keys", T.ArrayType(T.StringType())),
-        ])
-        spark.createDataFrame([(int(p), keys)], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).json(meta_path)
+        readers.commit_meta_json(spark, path, "hll", {"p": int(p), "keys": keys})
         combined = registers
     merged = (
         combined.groupBy(*keys, "register")
@@ -387,17 +378,6 @@ def cms_lookup(sketch, probes, keys, value_col: str, width: int = 64):
     )
 
 
-def _read_cms_meta(spark, store_path: str):
-    """Read ``store_path/_cms_meta`` through the READER (None ONLY when
-    the path does not exist) — FS-agnostic (an os.path.isdir check would
-    reject scheme-qualified paths), and errors OTHER than path-not-found
-    re-raise so a transient/permission/corrupt read on a real store can
-    never bypass the geometry-drift guard (ADVICE r9)."""
-    from qcardia_data_spark.sources.readers import read_meta_json
-
-    return read_meta_json(spark, f"{store_path}/_cms_meta")
-
-
 def cms_store_append_batch(
     batch_df, store_path: str, keys: list[str], value_col: str,
     batch_id: int, depth: int = 3, width: int = 64,
@@ -413,14 +393,13 @@ def cms_store_append_batch(
     correctness; merge batches back through :func:`cms_table`'s read
     path when the partition count grows.
 
-    Params/keys are frozen in ``_cms_meta`` on first append and enforced
-    afterwards (sketches with different geometry do not merge).
+    Params/keys are frozen in the ``cms`` manifest on first append and
+    enforced afterwards (sketches with different geometry do not merge).
     """
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    meta_path = f"{store_path}/_cms_meta"
-    row = _read_cms_meta(spark, store_path)
+    row = readers.read_meta_json(spark, store_path, "cms")
     if row is not None:
         if (
             int(row["depth"]) != int(depth)
@@ -435,16 +414,10 @@ def cms_store_append_batch(
                 "different geometry do not merge"
             )
     else:
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("depth", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("keys", T.ArrayType(T.StringType())),
-        ])
-        spark.createDataFrame(
-            [(int(depth), int(width), list(keys))], schema
-        ).coalesce(1).write.mode("overwrite").json(meta_path)
+        readers.commit_meta_json(
+            spark, store_path, "cms",
+            {"depth": int(depth), "width": int(width), "keys": list(keys)},
+        )
     (
         cms_table(batch_df, keys, value_col, depth=depth, width=width)
         .withColumn("_batch", F.lit(int(batch_id)))
@@ -465,11 +438,11 @@ def cms_store_read(spark, store_path: str):
 
 def cms_store_lookup(spark, store_path: str, probes, value_col: str):
     """Probe a CMS store with the geometry it was BUILT with: ``width``
-    and ``keys`` come from the store's own ``_cms_meta``, never from the
+    and ``keys`` come from the store's own manifest, never from the
     caller — :func:`cms_lookup`'s caller-supplied width lets a probe
     silently use a different geometry than the build and read garbage
     estimates (ADVICE r8), exactly the drift the meta-file contract
-    (``_sig_meta``/``_h64_meta``/``_hll_meta``) exists to refuse.
+    (``path/_meta.json`` of every standing index) exists to refuse.
 
     Consistency contract (ADVICE r9): the meta and the rows directory are
     two separate FS reads, so the store assumes a SINGLE WRITER — the
@@ -481,10 +454,10 @@ def cms_store_lookup(spark, store_path: str, probes, value_col: str):
     flight — the probe could hash under the stale width. Re-creating a
     store must use a fresh path (or pause readers), as with every other
     persisted index in this engine."""
-    row = _read_cms_meta(spark, store_path)
+    row = readers.read_meta_json(spark, store_path, "cms")
     if row is None:
         raise ValueError(
-            f"cms_store_lookup: no _cms_meta at {store_path!r} — not a "
+            f"cms_store_lookup: no _meta.json at {store_path!r} — not a "
             "CMS store (build one with cms_store_append_batch)"
         )
     sketch = cms_store_read(spark, store_path)

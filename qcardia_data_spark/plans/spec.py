@@ -132,7 +132,7 @@ Spec grammar (one dict per op, applied in order):
         # the index's own meta; same-id-guarded, retry-idempotent)
     {"op": "ann_probe", "index_path": ..., "k": 5, ...}
         # probe a persisted ANN index; the index KIND and its build
-        # params come from the index's own meta (_lsh_meta/_ivfpq_meta),
+        # params come from the index's own manifest (_meta.json),
         # so spec and index can never drift. LSH: current frame = probe
         # batch -> per-row top-k join. IVF+PQ: "query_id" picks the query
         # row from the current frame -> ADC top-k, "n_probe" cells read
@@ -153,7 +153,7 @@ Spec grammar (one dict per op, applied in order):
      "n_buckets": 64}                    # init persisted merge-upsert table
     {"op": "merge_upsert", "path": ..., "tiebreak": ...}
         # merge the current frame (a CDC batch) latest-wins into the
-        # table; key/ts/bucketing from its _merge_meta; only touched
+        # table; key/ts/bucketing from its manifest; only touched
         # bucket partitions read+rewritten; downstream sees the merged table
     {"op": "upsert_log_append", "path": ..., "batch_id": N?}
         # MOR write: land the frame as immutable log partition _batch=<id>
@@ -620,7 +620,7 @@ def _apply(
         # per-group cells collapse into ONE rolled-up sketch labeled by
         # the literals (cms_merge). Probe it with the cms_lookup op —
         # depth/width must match between build and probe (the store form,
-        # cms_store_*, persists them in _cms_meta; the in-plan form keeps
+        # cms_store_*, persists them in its manifest; the in-plan form keeps
         # them in the spec, side by side).
         sk = _SK.cms_table(
             df, list(op.get("keys", [])), op["value_col"],
@@ -1499,15 +1499,14 @@ def _apply(
         #  knobs, so a spec can never sign/bucket differently than the
         #  index it probes.
         path = op["index_path"]
+        from qcardia_data_spark.sources import readers
 
-        def _has_meta(name: str) -> bool:
-            from qcardia_data_spark.sources.readers import read_meta_json
-
-            # absence-only None: a permission/corrupt read of a real
-            # index raises instead of mis-dispatching the op (ADVICE r9)
-            return read_meta_json(spark, f"{path}/{name}") is not None
-
-        if _has_meta("_lsh_meta"):
+        # one manifest read picks the kind; absence-only None: a
+        # permission/corrupt read of a real index raises instead of
+        # mis-dispatching the op (ADVICE r9)
+        meta = readers.read_meta_json(spark, path)
+        ann_kind = meta["kind"] if meta else None
+        if ann_kind == "lsh":
             from qcardia_data_spark.functions.similarity import (
                 pairwise_topk_join_pruned,
             )
@@ -1527,8 +1526,7 @@ def _apply(
                 vec_col=op.get("vec_col", "embedding"),
                 n_flip=int(op.get("n_flip", 0)),  # multi-probe recall knob
             )
-        is_ivfpq = _has_meta("_ivfpq_meta")  # read the meta ONCE (r10 review)
-        if is_ivfpq or _has_meta("_ivf_meta"):
+        if ann_kind in ("ivfpq", "ivf"):
             if "query_id" not in op:
                 raise SpecError("ann_probe (ivf/ivfpq): 'query_id' required")
             id_col = op.get("id_col", "vec_id")
@@ -1540,7 +1538,7 @@ def _apply(
                 raise SpecError(
                     f"ann_probe: query_id {op['query_id']!r} not in frame"
                 )
-            if is_ivfpq:
+            if ann_kind == "ivfpq":
                 from qcardia_data_spark.functions.similarity import (
                     ann_ivfpq_topk_pruned,
                 )
@@ -1559,7 +1557,7 @@ def _apply(
                 vec_col=vec_col,
             )
         raise SpecError(
-            f"ann_probe: no _lsh_meta, _ivfpq_meta or _ivf_meta under "
+            f"ann_probe: no lsh, ivfpq or ivf _meta.json under "
             f"{path!r} — not an ANN index written by ann_index_write/"
             "lsh_write_partitioned/ivf_write_partitioned/"
             "ivfpq_write_partitioned"
@@ -1586,7 +1584,7 @@ def _apply(
         #  "min_shared": 2, "max_df": 20, "update_index": false,
         #  "allow_replay": false} — winnow-dedups the current frame
         #  against the persisted fingerprint index and within itself
-        #  (k/w come from the index's own _win_meta); survivors flow on.
+        #  (k/w come from the index's own manifest); survivors flow on.
         from qcardia_data_spark.functions.dedup import winnow_incremental
 
         return winnow_incremental(
@@ -1676,7 +1674,7 @@ def _apply(
         from qcardia_data_spark.functions.dedup import near_dedup_incremental
 
         # signature knobs default to None → taken from the index's own
-        # _sig_meta; a spec that DOES pin them gets the refuse-loudly
+        # manifest; a spec that DOES pin them gets the refuse-loudly
         # drift validation inside near_dedup_incremental
         return near_dedup_incremental(
             df, op["index_path"],
@@ -1852,7 +1850,7 @@ def _apply(
     if kind == "upsert_table_write":
         # {"op": "upsert_table_write", "path": ..., "key": ..., "ts": ...,
         #  "n_buckets": 64} — initialize the persisted merge-upsert table
-        # (md5-bucketed on key, params frozen in _merge_meta); the frame
+        # (md5-bucketed on key, params frozen in its manifest); the frame
         # passes through unchanged (the signature_index_write form)
         from qcardia_data_spark.functions.cdc import upsert_write_partitioned
 
@@ -1864,7 +1862,7 @@ def _apply(
     if kind == "merge_upsert":
         # {"op": "merge_upsert", "path": ..., "tiebreak": ...} — the
         # current frame is a CDC batch merged latest-wins into the table
-        # at path (key/ts/bucketing from the table's OWN _merge_meta, so
+        # at path (key/ts/bucketing from the table's OWN manifest, so
         # spec and table can never drift); reads at most the batch's
         # bucket partitions and rewrites only those. Downstream ops see
         # the post-merge table state.
@@ -1881,7 +1879,7 @@ def _apply(
         # {"op": "upsert_log_append", "path": ..., "batch_id": N?} — land
         # the current frame as an immutable MOR log batch (_batch=<id>
         # partition, bucketed on the table's merge key); key/ts/bucketing
-        # come from the table's OWN _merge_meta. Pinned batch_id replays
+        # come from the table's OWN manifest. Pinned batch_id replays
         # are no-ops (exactly-once); auto id = max existing + 1. The
         # frame passes through unchanged so appends chain.
         from qcardia_data_spark.functions.cdc import upsert_append_batch
@@ -1915,7 +1913,7 @@ def _apply(
         # audit: what did batches (N, M] do? Replaces the frame with the
         # snapshot diff between the two as-of versions of the upsert
         # table (added/removed/changed + before/after structs); the key
-        # comes from the table's own _merge_meta.
+        # comes from the table's own manifest.
         from qcardia_data_spark.functions.cdc import (
             _require_meta,
             read_upsert_as_of,

@@ -2915,7 +2915,7 @@ def dedup_simhash_incremental_q(spark, sf_dir):
     """[ext] The Hamming-64 standing index END TO END
     (functions/dedup.py::write_hamming64_index / hamming64_index_probe):
     the id-ordered head's simhash64 signatures are persisted as the
-    Manku block index (md5 key-bucket partitions + _h64_meta), the tail
+    Manku block index (md5 key-bucket partitions + _meta.json), the tail
     batch signs only itself and probes only its own bucket directories.
     The probe's contract is "every within-k pair involving a batch id,
     batch id on the a side" — exactly the all-pairs slice the oracle
@@ -3118,7 +3118,7 @@ def text_phrase_search(spark, sf_dir):
     # sides df-gated, drop-larger), then the batch probed against
     # head-survivors ∪ batch with the a-side-only df gate the library
     # applies — so the value match grades the standing-index round trip
-    # (_win_meta params, bucket-pruned probe, min-id greedy) end to end.
+    # (manifest params, bucket-pruned probe, min-id greedy) end to end.
     _WINNOW_SQL + """,
     u AS (SELECT DISTINCT doc_id, fp FROM fps),
     cut AS (SELECT (max(doc_id) * 8) // 10 AS c FROM documents),
@@ -3150,7 +3150,7 @@ def dedup_winnow_incremental_q(spark, sf_dir):
     """[ext] The winnowing standing index END TO END
     (functions/dedup.py::write_winnow_index / winnow_incremental): the
     id-ordered head is one-shot winnow-deduped, its sampled fingerprints
-    persisted (fp-bucket-partitioned + _win_meta), and the tail batch is
+    persisted (fp-bucket-partitioned + _meta.json), and the tail batch is
     probed incrementally — fingerprinting only itself, reading only its
     own bucket directories, min-id greedy vs head-survivors ∪ batch with
     the a-side df gate. The oracle replays the SAME two-stage
@@ -6426,7 +6426,7 @@ def dedup_incremental_q(spark, sf_dir):
     """[ext] Incremental near-dedup, END TO END through the persisted
     index: dedup the id-ordered head of the corpus (the standing index),
     write_signature_index it (sig_bucket/id_bucket-partitioned parquet +
-    _sig_meta), then near_dedup_incremental the tail batch against it —
+    _meta.json), then near_dedup_incremental the tail batch against it —
     signing only the batch, partition-pruning the index reads, and
     passing the r8 monotone-id + parameter-drift guards. Returns
     head-survivors ∪ batch-survivors, which the invariant (and this

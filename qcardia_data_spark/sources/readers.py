@@ -102,45 +102,99 @@ def jsonl_document_scan(
     return reader.json(path)
 
 
-def read_meta_json(spark: SparkSession, path: str):
-    """Read a one-row index/store meta file (``_sig_meta``, ``_cms_meta``,
-    ``_lsh_meta``, ...) written by the JSON sink; ``None`` ONLY when the
-    path does not exist (a pre-metadata or not-yet-created store).
-
-    Every other failure re-raises: a bare ``except Exception`` here made a
-    transient/permission/corrupt read on a REAL store indistinguishable
-    from "store absent", so an append would overwrite the meta with the
-    caller's geometry and silently bypass the geometry-drift guard
-    (ADVICE r9). An empty meta directory (interrupted write) raises
-    UNABLE_TO_INFER_SCHEMA — also NOT treated as absent, for the same
-    reason; likewise a readable-but-ZERO-ROW meta (torn write leaving
-    blank/empty JSON) raises instead of impersonating absence (r10
-    self-review: the `rows[0] if rows else None` fallback re-opened the
-    geometry-guard bypass this function exists to close)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.json(f"{path}").collect()
-    except AnalysisException as e:
-        if is_path_not_found(e):
-            return None
-        raise
-    if not rows:
-        raise ValueError(
-            f"read_meta_json: meta at {path!r} exists but holds no rows — "
-            "a torn/partial write; refusing to treat it as 'store absent' "
-            "(delete or repair the meta file explicitly)"
-        )
-    return rows[0]
+META_FILE = "_meta.json"
+# the per-family meta directories the one manifest replaced; a root that
+# still holds one is an index whose geometry this engine can no longer
+# read, so it is refused instead of being taken for a fresh store
+_LEGACY_META = (
+    "_sig_meta", "_win_meta", "_h64_meta", "_merge_meta", "_lsh_meta",
+    "_ivf_meta", "_ivfpq_meta", "_cms_meta", "_hll_meta", "_idx_kind",
+)
 
 
-def read_meta_dict(spark: SparkSession, path: str) -> dict | None:
-    """:func:`read_meta_json`, returned as a plain dict (None iff the
-    path is absent) — the shape the `_read_*_meta` wrappers share."""
-    row = read_meta_json(spark, path)
-    if row is None:
+def _manifest(spark: SparkSession, root: str):
+    """(Hadoop path of ``root/_meta.json``, its FileSystem)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(root, META_FILE)
+    return path, path.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def read_meta_json(spark: SparkSession, root: str, kind: str | None = None):
+    """The index/store manifest ``root/_meta.json`` as a dict holding
+    ``{"kind": ..., <build fields>}``; ``None`` ONLY when no manifest
+    exists (a not-yet-created store). With ``kind`` the manifest must be
+    of that kind. Reads through the Hadoop FileSystem: no Spark job.
+
+    Every other state raises instead of impersonating "store absent" —
+    the absent branch re-freezes the caller's geometry over existing
+    rows (ADVICE r9): an unreadable, blank or truncated manifest, a
+    manifest of another kind, and a root that still holds one of the
+    per-family meta directories written before the manifest existed
+    (``_sig_meta/``, ``_idx_kind/``, ...)."""
+    from py4j.protocol import Py4JJavaError
+
+    path, fs = _manifest(spark, root)
+    if not fs.exists(path):
+        legacy = fs.globStatus(spark._jvm.org.apache.hadoop.fs.Path(
+            root, "{" + ",".join(_LEGACY_META) + "}"
+        ))
+        if legacy:
+            raise ValueError(
+                f"read_meta_json: {str(legacy[0].getPath())!r} is index "
+                f"metadata in a layout this engine no longer reads (no "
+                f"{META_FILE}) — rebuild the index at {root!r}"
+            )
         return None
-    return {k: row[k] for k in row.asDict()}
+    try:
+        stream = fs.open(path)
+        try:
+            text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+    except Py4JJavaError as e:
+        raise OSError(
+            f"read_meta_json: manifest {str(path)!r} exists but cannot be "
+            "read; refusing to treat it as 'store absent'"
+        ) from e
+    try:
+        meta = json.loads(text)
+    except ValueError as e:
+        raise ValueError(
+            f"read_meta_json: manifest {str(path)!r} exists but holds no "
+            "rows of valid JSON — a torn/partial write; refusing to treat "
+            "it as 'store absent' (delete or repair it explicitly)"
+        ) from e
+    if not isinstance(meta, dict) or "kind" not in meta:
+        raise ValueError(f"read_meta_json: {str(path)!r} holds no index kind")
+    if kind is not None and meta["kind"] != kind:
+        raise ValueError(
+            f"read_meta_json: {root!r} holds a {meta['kind']!r} index, "
+            f"not a {kind!r} one (its {META_FILE} says so)"
+        )
+    return meta
+
+
+def commit_meta_json(spark: SparkSession, root: str, kind: str, fields: dict) -> None:
+    """Atomically replace ``root/_meta.json`` with ``{"kind": kind,
+    **fields}``: write an underscore-prefixed temp file (invisible to the
+    parquet scan and to :func:`read_meta_json`), then rename it over the
+    manifest. The rename overwrites and raises on failure, so a reader
+    sees the old manifest or the new one, never a torn one; a crash
+    leaves at most a stray temp file. No Spark job."""
+    import uuid
+
+    hfs = spark._jvm.org.apache.hadoop.fs
+    path, fs = _manifest(spark, root)
+    tmp = path.suffix(f".{uuid.uuid4().hex}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(json.dumps({**fields, "kind": kind}).encode()))
+    finally:
+        out.close()
+    overwrite = spark._sc._gateway.new_array(hfs.Options.Rename, 1)
+    overwrite[0] = hfs.Options.Rename.OVERWRITE
+    hfs.FileContext.getFileContext(
+        fs.getUri(), spark._jsc.hadoopConfiguration()
+    ).rename(tmp, path, overwrite)
 
 
 def error_condition(e: Exception) -> str | None:

@@ -469,7 +469,7 @@ def streaming_upsert_intake(
     """[ext] Streaming CDC intake — the continuous form of
     `cdc.merge_upsert_partitioned`: each micro-batch of change rows is
     merged latest-wins into the persisted upsert table (key/ts/bucketing
-    frozen in the table's own ``_merge_meta``), so the table serves
+    frozen in the table's own manifest), so the table serves
     current-state reads over everything ingested so far. State lives
     entirely in the table — memory is O(batch), the
     :func:`streaming_ann_index_intake` argument.
@@ -514,7 +514,7 @@ def streaming_hll_intake(
     Delivery: max-merge is idempotent and commutative, so at-least-once
     replays and out-of-order batches converge exactly — no `_batch=`
     sink machinery; param drift across restarts is refused by the
-    store's own `_hll_meta`.
+    store's own manifest.
 
     Returns the started `StreamingQuery` (availableNow drains the
     backlog and stops).

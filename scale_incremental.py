@@ -69,8 +69,6 @@ def main() -> None:
     from qcardia_data_spark import get_spark
     from qcardia_data_spark.functions.dedup import (
         _band_signature_frame,
-        _read_sig_meta,
-        _read_win_meta,
         _sig_bucket,
         near_dedup_incremental,
         shingle_rows,
@@ -78,6 +76,7 @@ def main() -> None:
         write_signature_index,
         write_winnow_index,
     )
+    from qcardia_data_spark.sources.readers import read_meta_json
     from qcardia_data_spark.functions.similarity import (
         ann_index_append,
         auto_n_planes,
@@ -131,7 +130,7 @@ def main() -> None:
         build_sec = time.perf_counter() - t0
         requested = n_sig_buckets
         if n_sig_buckets == "auto":  # r14: the writer sizes; read it back
-            n_sig_buckets = _read_sig_meta(spark, idx)["n_sig_buckets"]
+            n_sig_buckets = read_meta_json(spark, idx, "sig")["n_sig_buckets"]
         t0 = time.perf_counter()
         survivors = near_dedup_incremental(
             batch, idx, "doc_id", "text", update_index=False
@@ -171,7 +170,7 @@ def main() -> None:
         t0 = time.perf_counter()
         write_winnow_index(docs, "doc_id", "text", idx, n_fp_buckets="auto")
         build_sec = time.perf_counter() - t0
-        n_fp_buckets = int(_read_win_meta(spark, idx)["n_fp_buckets"])
+        n_fp_buckets = int(read_meta_json(spark, idx, "win")["n_fp_buckets"])
         t0 = time.perf_counter()
         survivors = winnow_incremental(
             batch, idx, "doc_id", "text", update_index=False

@@ -15,9 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.functions.dedup import (
-    _read_h64_meta,
-    _read_sig_meta,
-    _read_win_meta,
     auto_index_buckets,
     hamming64_index_probe,
     near_dedup_incremental,
@@ -26,6 +23,7 @@ from qcardia_data_spark.functions.dedup import (
     write_winnow_index,
     winnow_incremental,
 )
+from qcardia_data_spark.sources.readers import read_meta_json
 
 
 def _docs(spark, sf_dir, lo=0, hi=40):
@@ -59,7 +57,7 @@ def test_signature_index_auto_meta_roundtrip_and_probe(spark, sf_dir, tmp_path):
         base, "doc_id", "text", idx, n_bands=8, shingle_n=3,
         n_sig_buckets="auto", n_id_buckets="auto",
     )
-    meta = _read_sig_meta(spark, idx)
+    meta = read_meta_json(spark, idx, "sig")
     # 40 docs x 8 bands = 320 sig rows, 40 set rows -> both at the floor
     assert meta["n_sig_buckets"] == 8 and meta["n_id_buckets"] == 8
     assert isinstance(meta["n_sig_buckets"], int)
@@ -76,7 +74,7 @@ def test_signature_index_auto_meta_roundtrip_and_probe(spark, sf_dir, tmp_path):
         more, "doc_id", "text", idx, n_bands=8, shingle_n=3,
         n_sig_buckets="auto", n_id_buckets="auto", mode="append",
     )
-    meta2 = _read_sig_meta(spark, idx)
+    meta2 = read_meta_json(spark, idx, "sig")
     assert meta2["n_sig_buckets"] == 8 and meta2["n_id_buckets"] == 8
     # explicit mismatching count still refuses loudly on append
     with pytest.raises(ValueError, match="parameters differ"):
@@ -91,9 +89,7 @@ def test_signature_index_auto_append_without_meta_refuses(spark, sf_dir, tmp_pat
     base = _docs(spark, sf_dir, 0, 20)
     write_signature_index(base, "doc_id", "text", idx)
     # simulate a pre-metadata index
-    import shutil
-
-    shutil.rmtree(f"{idx}/_sig_meta")
+    os.remove(f"{idx}/_meta.json")
     with pytest.raises(ValueError, match="auto.*append|append requires"):
         write_signature_index(
             _docs(spark, sf_dir, 20, 30), "doc_id", "text", idx,
@@ -105,7 +101,7 @@ def test_winnow_index_auto(spark, sf_dir, tmp_path):
     idx = str(tmp_path / "win_idx")
     base = _docs(spark, sf_dir, 0, 40)
     write_winnow_index(base, "doc_id", "text", idx, n_fp_buckets="auto")
-    meta = _read_win_meta(spark, idx)
+    meta = read_meta_json(spark, idx, "win")
     assert isinstance(meta["n_fp_buckets"], int) and meta["n_fp_buckets"] >= 8
     # fp-row sizing: resolved count obeys the occupancy rule
     n_fp = (
@@ -121,7 +117,7 @@ def test_winnow_index_auto(spark, sf_dir, tmp_path):
         _docs(spark, sf_dir, 60, 80), "doc_id", "text", idx,
         n_fp_buckets="auto", mode="append",
     )
-    assert _read_win_meta(spark, idx)["n_fp_buckets"] == meta["n_fp_buckets"]
+    assert read_meta_json(spark, idx, "win")["n_fp_buckets"] == meta["n_fp_buckets"]
 
 
 def test_hamming64_index_auto(spark, tmp_path):
@@ -130,7 +126,7 @@ def test_hamming64_index_auto(spark, tmp_path):
     sig = spark.createDataFrame(rows, ["doc_id", "lo", "hi"])
     idx = str(tmp_path / "h64_idx")
     write_hamming64_index(sig, idx, max_hamming=3, n_key_buckets="auto")
-    meta = _read_h64_meta(spark, idx)
+    meta = read_meta_json(spark, idx, "h64")
     # 200 sigs x 4 blocks = 800 rows -> floor
     assert meta["n_key_buckets"] == auto_index_buckets(200 * 4) == 8
     batch = spark.createDataFrame(
@@ -144,7 +140,7 @@ def test_hamming64_index_auto(spark, tmp_path):
         spark.createDataFrame([(2000, 7, 7)], ["doc_id", "lo", "hi"]),
         idx, max_hamming=3, n_key_buckets="auto", mode="append",
     )
-    assert _read_h64_meta(spark, idx)["n_key_buckets"] == 8
+    assert read_meta_json(spark, idx, "h64")["n_key_buckets"] == 8
 
 
 def test_spec_dialect_accepts_auto_buckets(spark, sf_dir, tmp_path):
@@ -171,6 +167,6 @@ def test_spec_dialect_accepts_auto_buckets(spark, sf_dir, tmp_path):
         ],
         None,
     ).count()
-    assert isinstance(_read_sig_meta(spark, sig)["n_sig_buckets"], int)
-    assert isinstance(_read_win_meta(spark, win)["n_fp_buckets"], int)
-    assert isinstance(_read_h64_meta(spark, h64)["n_key_buckets"], int)
+    assert isinstance(read_meta_json(spark, sig, "sig")["n_sig_buckets"], int)
+    assert isinstance(read_meta_json(spark, win, "win")["n_fp_buckets"], int)
+    assert isinstance(read_meta_json(spark, h64, "h64")["n_key_buckets"], int)

@@ -248,7 +248,7 @@ def test_merge_empty_batch_is_noop(spark, table):
 
 def test_merge_meta_guards(spark, table, tmp_path):
     # missing meta
-    with pytest.raises(ValueError, match="_merge_meta"):
+    with pytest.raises(ValueError, match="_meta.json"):
         merge_upsert_partitioned(spark, str(tmp_path / "nope"), _batch(spark))
     # missing required column
     with pytest.raises(ValueError, match="lacks column"):
@@ -612,18 +612,18 @@ def test_upsert_write_auto_buckets(spark, tmp_path):
     bucket rule as the dedup-index writers; the meta freezes the
     resolved int and merges derive from it unchanged."""
     from qcardia_data_spark.functions.cdc import (
-        _read_merge_meta,
         merge_upsert_partitioned,
         read_upsert_table,
         upsert_write_partitioned,
     )
+    from qcardia_data_spark.sources.readers import read_meta_json
 
     path = str(tmp_path / "dim_auto")
     base = spark.createDataFrame(
         [(i, i, f"v{i}") for i in range(100)], ["k", "ts", "val"]
     )
     upsert_write_partitioned(base, path, "k", "ts", n_buckets="auto")
-    meta = _read_merge_meta(spark, path)
+    meta = read_meta_json(spark, path, "merge")
     assert isinstance(meta["n_buckets"], int) and meta["n_buckets"] == 8
     batch = spark.createDataFrame([(1, 10, "new")], ["k", "ts", "val"])
     merge_upsert_partitioned(spark, path, batch)

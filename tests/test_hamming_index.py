@@ -75,7 +75,7 @@ def test_probe_guards_append_and_replay(spark, sigs, tmp_path):
     # param drift refusals
     with pytest.raises(ValueError, match="parameters differ"):
         write_hamming64_index(batch, idx, max_hamming=1, mode="append")
-    with pytest.raises(ValueError, match="no _h64_meta"):
+    with pytest.raises(ValueError, match="no _meta.json"):
         hamming64_index_probe(batch, str(tmp_path / "nope"))
 
 
@@ -247,11 +247,11 @@ def test_all_standing_indexes_refuse_missing_meta(spark, tmp_path):
     emb = spark.createDataFrame([(1, [0.1, 0.2])], ["vec_id", "embedding"])
     nowhere = str(tmp_path / "not_an_index")
 
-    with pytest.raises(Exception, match="_sig_meta|not an? .*index|meta"):
+    with pytest.raises(Exception, match="_meta.json|not an? .*index|meta"):
         near_dedup_incremental(docs, nowhere, "doc_id", "text")
-    with pytest.raises(ValueError, match="_win_meta"):
+    with pytest.raises(ValueError, match="_meta.json"):
         winnow_incremental(docs, nowhere)
-    with pytest.raises(ValueError, match="_h64_meta"):
+    with pytest.raises(ValueError, match="_meta.json"):
         hamming64_index_probe(sig, nowhere)
     with pytest.raises(Exception):
         pairwise_topk_join_pruned(emb, nowhere, k=1)

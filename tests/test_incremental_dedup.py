@@ -18,6 +18,7 @@ from qcardia_data_spark.functions.dedup import (
     near_dedup_minhash,
     write_signature_index,
 )
+from qcardia_data_spark.sources.readers import read_meta_json
 
 PARAMS = dict(n_bands=8, shingle_n=3)
 
@@ -202,7 +203,7 @@ def small_index_ro(spark, sf_dir, tmp_path_factory):
 
 def test_sig_meta_written_and_authoritative(spark, corpus, small_index_ro):
     # meta carries the build params + corpus max id...
-    meta = spark.read.json(f"{small_index_ro}/_sig_meta").collect()[0]
+    meta = read_meta_json(spark, small_index_ro, "sig")
     assert (meta["n_bands"], meta["shingle_n"]) == (8, 3)
     assert (meta["n_sig_buckets"], meta["n_id_buckets"]) == (64, 64)
     a = corpus.filter(F.col("doc_id") < 1_000_000)
@@ -233,10 +234,10 @@ def test_probe_param_drift_refused(spark, corpus, small_index_ro):
 
 def test_probe_missing_meta_refused(spark, corpus, tmp_path):
     # an index directory not written by write_signature_index (or a wrong
-    # path) has no _sig_meta: probing with guessed params is exactly the
+    # path) has no _meta.json: probing with guessed params is exactly the
     # silent-miss failure mode, so it must refuse
     b = corpus.filter(F.col("doc_id") >= 1_000_000)
-    with pytest.raises(ValueError, match="_sig_meta"):
+    with pytest.raises(ValueError, match="_meta.json"):
         near_dedup_incremental(
             b, str(tmp_path / "nonexistent"), "doc_id", "text"
         )
@@ -282,7 +283,7 @@ def test_update_index_ratchets_max_id(spark, corpus, small_index):
     near_dedup_incremental(
         b, small_index, "doc_id", "text", threshold=0.6, update_index=True
     )
-    meta = spark.read.json(f"{small_index}/_sig_meta").collect()[0]
+    meta = read_meta_json(spark, small_index, "sig")
     assert int(meta["max_id"]) == b.agg(F.max("doc_id")).first()[0]
     # the NEXT batch must clear the appended crawl too
     with pytest.raises(ValueError, match="monotonic"):

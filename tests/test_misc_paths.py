@@ -276,32 +276,26 @@ def test_cms_lookup_value_col_named_n(spark):
 
 
 def test_read_meta_json_absence_only_none(spark, tmp_path):
-    """ADVICE r9 regression: meta reads return None ONLY on
-    path-not-found. Any other failure (here: an existing-but-empty meta
-    dir from an interrupted write -> UNABLE_TO_INFER_SCHEMA) re-raises,
-    so a broken read of a REAL store can't impersonate 'store absent'
-    and bypass geometry enforcement."""
-    from pyspark.errors import AnalysisException
-
+    """ADVICE r9 regression: meta reads return None ONLY when no manifest
+    exists. Any other failure (here: a manifest path that cannot be read
+    as a file) re-raises, so a broken read of a REAL store can't
+    impersonate 'store absent' and bypass geometry enforcement."""
     from qcardia_data_spark.sources.readers import read_meta_json
 
-    # absent path -> None (both plain and scheme-qualified)
-    assert read_meta_json(spark, str(tmp_path / "nope" / "_cms_meta")) is None
-    assert read_meta_json(spark, f"file:{tmp_path}/nope2/_meta") is None
+    # absent manifest -> None (both plain and scheme-qualified roots)
+    assert read_meta_json(spark, str(tmp_path / "nope")) is None
+    assert read_meta_json(spark, f"file:{tmp_path}/nope2", "cms") is None
 
-    # existing but unreadable-as-json meta -> raises, NOT None
-    broken = tmp_path / "store" / "_cms_meta"
-    broken.mkdir(parents=True)
-    with pytest.raises(AnalysisException):
-        read_meta_json(spark, str(broken))
+    # existing but unreadable manifest -> raises, NOT None
+    (tmp_path / "store" / "_meta.json").mkdir(parents=True)
+    with pytest.raises(OSError, match="cannot be read"):
+        read_meta_json(spark, str(tmp_path / "store"))
 
 
 def test_cms_append_raises_on_broken_meta(spark, sf_dir, tmp_path):
-    """The concrete ADVICE r9 scenario: a real store whose _cms_meta read
+    """The concrete ADVICE r9 scenario: a real store whose manifest read
     fails must REFUSE the append (previously it silently re-wrote the
     meta with the caller's geometry and landed the batch)."""
-    from pyspark.errors import AnalysisException
-
     from qcardia_data_spark.functions.sketches import (
         cms_store_append_batch,
         cms_store_lookup,
@@ -309,13 +303,14 @@ def test_cms_append_raises_on_broken_meta(spark, sf_dir, tmp_path):
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).limit(50)
     store = tmp_path / "cms_broken"
-    # simulate an interrupted meta write: dir exists, no json inside
-    (store / "_cms_meta").mkdir(parents=True)
-    with pytest.raises(AnalysisException):
+    # simulate a truncated manifest: the file exists, its JSON is cut off
+    store.mkdir()
+    (store / "_meta.json").write_text('{"kind": "cms", "depth": 3, "wid')
+    with pytest.raises(ValueError, match="torn"):
         cms_store_append_batch(ev, str(store), ["event_type"], "user_id", batch_id=1)
     # nothing landed
     assert not (store / "rows").exists()
-    with pytest.raises(AnalysisException):
+    with pytest.raises(ValueError, match="torn"):
         cms_store_lookup(
             spark, str(store),
             ev.select("event_type", "user_id").limit(1), "user_id",
@@ -342,16 +337,16 @@ def test_default_num_ranges_non_numeric_conf():
 
 
 def test_read_meta_json_zero_row_meta_raises(spark, tmp_path):
-    """r10 self-review: a READABLE meta that yields zero rows (torn write
-    leaving blank JSON) must raise, not report 'store absent' — the
+    """r10 self-review: a READABLE manifest that yields zero rows (torn
+    write leaving blank JSON) must raise, not report 'store absent' — the
     absent branch re-freezes geometry and overwrites store rows."""
     from qcardia_data_spark.sources.readers import read_meta_json
 
-    meta = tmp_path / "store" / "_hll_meta"
-    meta.mkdir(parents=True)
-    (meta / "part-00000.json").write_text("\n")
+    store = tmp_path / "store"
+    store.mkdir()
+    (store / "_meta.json").write_text("\n")
     with pytest.raises(ValueError, match="no rows"):
-        read_meta_json(spark, str(meta))
+        read_meta_json(spark, str(store), "hll")
 
 
 def test_fresh_name_case_insensitive():

@@ -607,7 +607,7 @@ def test_legacy_markerless_index_probe_warns(spark, tmp_path):
     caller=None is the residual silent-wrong-partition case — the
     fallback to the module default must be LOUD. Built at the default
     here, so results stay correct; the warning is the contract."""
-    import shutil
+    import os
 
     import pytest
 
@@ -622,7 +622,7 @@ def test_legacy_markerless_index_probe_warns(spark, tmp_path):
     )
     idx = str(tmp_path / "legacy_bm25")
     build_inverted_index(docs, idx)  # default layout
-    shutil.rmtree(f"{idx}/_idx_kind")  # simulate the pre-r13 index
+    os.remove(f"{idx}/_meta.json")  # simulate the pre-r13 index
     # legacy _stats detection path: recreate the pre-marker shape
     with pytest.warns(UserWarning, match="predates the n_buckets"):
         got = bm25_topk_from_index(spark, idx, ["spark"], k=3).collect()

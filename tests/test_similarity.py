@@ -528,6 +528,7 @@ def test_ivfpq_residual_encoding(spark, sf_dir, tmp_path):
         ann_ivfpq_topk_pruned,
         ivfpq_write_partitioned,
     )
+    from qcardia_data_spark.sources.readers import read_meta_json
 
     emb = load_table(spark, sf_dir, "embeddings")
     plain, resid = str(tmp_path / "plain"), str(tmp_path / "resid")
@@ -538,7 +539,7 @@ def test_ivfpq_residual_encoding(spark, sf_dir, tmp_path):
     metas = {}
     rowss = {}
     for name, path in (("plain", plain), ("resid", resid)):
-        meta = spark.read.json(f"{path}/_ivfpq_meta").collect()[0]
+        meta = read_meta_json(spark, path, "ivfpq")
         metas[name] = {
             "cents": np.asarray(json.loads(meta["centroids_json"])),
             "cb": np.asarray(json.loads(meta["codebooks_json"])),
@@ -672,6 +673,7 @@ def test_ann_index_append_ivfpq_matches_frozen_encode(spark, sf_dir, tmp_path):
         normalize_vectors,
         pq_encode_with_codebooks,
     )
+    from qcardia_data_spark.sources.readers import read_meta_json
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     head, tail = emb.filter("vec_id < 150"), emb.filter("vec_id >= 150")
@@ -682,7 +684,7 @@ def test_ann_index_append_ivfpq_matches_frozen_encode(spark, sf_dir, tmp_path):
     assert n == tail.count() > 0
     assert ann_index_append(tail, idx) == 0
 
-    meta = spark.read.json(f"{idx}/_ivfpq_meta").collect()[0]
+    meta = read_meta_json(spark, idx, "ivfpq")
     cents = json.loads(meta["centroids_json"])
     cb = json.loads(meta["codebooks_json"])
     norm_tail = normalize_vectors(tail, "embedding")

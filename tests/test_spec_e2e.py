@@ -167,7 +167,7 @@ def test_ann_spec_pair_lsh_and_ivfpq(spark, sf_dir, tmp_path):
 def test_ann_probe_refuses_non_index_path(spark, sf_dir, tmp_path):
     from qcardia_data_spark.plans.spec import SpecError
 
-    with pytest.raises(SpecError, match="_ivfpq_meta or _ivf_meta"):
+    with pytest.raises(SpecError, match="ivfpq or ivf _meta.json"):
         compile_pipeline(
             spark,
             [
@@ -1291,10 +1291,10 @@ def test_standing_index_lifecycle_example_runs(spark, sf_dir, tmp_path):
         return out
 
     compile_pipeline(spark, patch(spec["pipelines"]["build_indexes"]), None).count()
-    from qcardia_data_spark.functions.dedup import _read_sig_meta, _read_win_meta
+    from qcardia_data_spark.sources.readers import read_meta_json
 
-    sig_meta = _read_sig_meta(spark, subst["{sig_idx}"])
-    win_meta = _read_win_meta(spark, subst["{win_idx}"])
+    sig_meta = read_meta_json(spark, subst["{sig_idx}"], "sig")
+    win_meta = read_meta_json(spark, subst["{win_idx}"], "win")
     assert isinstance(sig_meta["n_sig_buckets"], int)
     assert isinstance(win_meta["n_fp_buckets"], int)
 
@@ -1302,5 +1302,5 @@ def test_standing_index_lifecycle_example_runs(spark, sf_dir, tmp_path):
     n = out.count()
     assert 0 < n <= 30
     # update_index ratcheted both metas' max_id to the batch's ids
-    assert int(_read_sig_meta(spark, subst["{sig_idx}"])["max_id"]) >= 60
-    assert int(_read_win_meta(spark, subst["{win_idx}"])["max_id"]) >= 60
+    assert int(read_meta_json(spark, subst["{sig_idx}"], "sig")["max_id"]) >= 60
+    assert int(read_meta_json(spark, subst["{win_idx}"], "win")["max_id"]) >= 60

@@ -1029,7 +1029,7 @@ def test_streaming_cms_intake_converges_and_replays(spark, sf_dir, tmp_path):
         spark, store, probes, "user_id",
     ).collect()))
     assert got_est == want_est
-    with _pytest.raises(ValueError, match="no _cms_meta"):
+    with _pytest.raises(ValueError, match="no _meta.json"):
         cms_store_lookup(spark, str(tmp_path / "nope"), probes, "user_id")
 
 

@@ -109,7 +109,7 @@ def test_winnow_index_guards(spark, corpus, tmp_path):
         winnow_incremental(b, idx, k=4)
     with pytest.raises(ValueError, match="parameters differ"):
         write_winnow_index(b, "doc_id", "text", idx, k=4, mode="append")
-    with pytest.raises(ValueError, match="no _win_meta"):
+    with pytest.raises(ValueError, match="no _meta.json"):
         winnow_incremental(b, str(tmp_path / "nope"))
 
 

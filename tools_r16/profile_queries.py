@@ -2,7 +2,7 @@
 """Per-headline-query profiling: wall time (noop sink, min-of-N), number of
 Spark jobs, and stage-level breakdown via the status tracker REST API.
 
-Usage: python tools_r15/profile_queries.py [query ...]   (default: all)
+Usage: python tools_r16/profile_queries.py [query ...]   (default: all)
 Prints one JSON line per query:
   {"name":..., "best_sec":..., "runs":[...], "n_jobs":..., "stages":[
       {"stage":id, "name":..., "tasks":n, "ms":...}, ...]}

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Oracle-verify a subset of declared queries (vanilla session, like the
-driver). Usage: python tools_r15/verify_queries.py q1_pricing_summary w1_...
+driver). Usage: python tools_r16/verify_queries.py q1_pricing_summary w1_...
 Env: QDS_SIM_SF (default /root/testdata/sf0.01). Exits nonzero on failure.
 """
 from __future__ import annotations
