@@ -47,8 +47,13 @@ def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
-def shingle_rows(df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3) -> DataFrame:
+def shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3,
+    keep_empty: bool = False,
+) -> DataFrame:
     """(id, shingle) rows — one row per distinct shingle per doc.
+    ``keep_empty`` gives a doc with no shingles one null-shingle row, so a
+    per-doc aggregate downstream still sees it.
 
     The tokenizer output is materialized through an ``explode(array(...))``
     barrier: a generator's output is a real attribute (a row value), so the
@@ -70,7 +75,8 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3) 
     guarded = F.when(k >= shingle_n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
-    return tok.select(F.col(id_col), F.explode(guarded).alias("shingle"))
+    explode = F.explode_outer if keep_empty else F.explode
+    return tok.select(F.col(id_col), explode(guarded).alias("shingle"))
 
 
 def minhash_signatures(
@@ -376,23 +382,31 @@ def jaccard_verify_sets(
     in its prefix join, which therefore passes ``size_prefilter=False``
     to skip the redundant pass)."""
     sets = sh.groupBy(id_col).agg(F.collect_list("shingle").alias("_s"))
+    return _jaccard_of_sets(
+        candidates, sets.withColumnRenamed(id_col, "a"),
+        sets.withColumnRenamed(id_col, "b"), threshold, size_prefilter,
+    )
+
+
+def _jaccard_of_sets(
+    pairs: DataFrame, a_sets: DataFrame, b_sets: DataFrame, threshold: float,
+    size_prefilter: bool = True, a_on: tuple = ("a",),
+) -> DataFrame:
+    """The core of :func:`jaccard_verify_sets` over PREBUILT per-doc
+    shingle sets: ``pairs`` holds ``(a, b)`` plus any further ``a_on``
+    keys, ``a_sets`` is ``(*a_on, _s)`` and ``b_sets`` is ``(b, _s)``.
+    Returns ``(a, b, jaccard)`` for the pairs at or above ``threshold``."""
+    a_on = list(a_on)
     if size_prefilter and threshold > 0:
         # sizes derive from the SAME aggregate the array joins build (one
         # F.size projection) — a separate count() over sh re-scanned the
         # whole shingle frame (measured 2.3 s CPU at sf0.1, nearly the cost
         # the filter saves); this way the partial-aggregate exchange is
         # computed once and shared by all three consumers.
-        sizes = sets.select(id_col, F.size("_s").alias("_zn"))
-        candidates = (
-            candidates
-            .join(
-                sizes.select(F.col(id_col).alias("a"), F.col("_zn").alias("_zna")),
-                "a",
-            )
-            .join(
-                sizes.select(F.col(id_col).alias("b"), F.col("_zn").alias("_znb")),
-                "b",
-            )
+        pairs = (
+            pairs
+            .join(a_sets.select(*a_on, F.size("_s").alias("_zna")), a_on)
+            .join(b_sets.select("b", F.size("_s").alias("_znb")), "b")
             .filter(
                 F.least("_zna", "_znb")
                 >= _ceil_loose(F.lit(threshold) * F.greatest("_zna", "_znb"))
@@ -400,9 +414,9 @@ def jaccard_verify_sets(
             .drop("_zna", "_znb")
         )
     joined = (
-        candidates
-        .join(sets.select(F.col(id_col).alias("a"), F.col("_s").alias("_sa")), "a")
-        .join(sets.select(F.col(id_col).alias("b"), F.col("_s").alias("_sb")), "b")
+        pairs
+        .join(a_sets.withColumnRenamed("_s", "_sa"), a_on)
+        .join(b_sets.withColumnRenamed("_s", "_sb"), "b")
     )
     once = joined.select(
         "a", "b",
@@ -1710,16 +1724,27 @@ def _band_signature_frame(
     the one-pass groupBy + stack() build shared by near_dedup_minhash and
     the signature index (bit-identical signatures is the contract that
     makes incremental == full-corpus dedup)."""
-    band_mins = [
+    return (
+        sh.groupBy(id_col)
+        .agg(*_band_mins(n_bands))
+        .selectExpr(id_col, _stack_bands(n_bands))
+    )
+
+
+def _band_mins(n_bands: int) -> list:
+    """Per-doc band-minimum aggregates ``s0 .. s{n_bands-1}``: band b is
+    ``min(md5(shingle || '#b'))``."""
+    return [
         F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{b}")))).alias(f"s{b}")
         for b in range(n_bands)
     ]
+
+
+def _stack_bands(n_bands: int) -> str:
+    """``stack`` expression unpivoting the ``s<b>`` columns of
+    :func:`_band_mins` into ``(band, sig)`` rows."""
     stack_expr = ", ".join(f"{b}, s{b}" for b in range(n_bands))
-    return (
-        sh.groupBy(id_col)
-        .agg(*band_mins)
-        .selectExpr(id_col, f"stack({n_bands}, {stack_expr}) as (band, sig)")
-    )
+    return f"stack({n_bands}, {stack_expr}) as (band, sig)"
 
 
 def _sig_bucket(col: Column, n_buckets: int) -> Column:
@@ -1944,6 +1969,25 @@ def write_signature_index(
     _write_sig_meta(spark, path, {**params, "max_id": max_id})
 
 
+def _observed_checkpoint(df: DataFrame, name: str, *metrics: Column):
+    """Eager ``localCheckpoint`` of ``df`` and the aggregate ``metrics``
+    computed in the same job, as ``(checkpoint, {alias: value})``.
+
+    The metrics are read from the checkpoint's own query execution, not
+    through ``pyspark.sql.Observation``: on Spark 4.1 that starts the
+    session's ObservationManager, which cannot be serialized, and every
+    later task that captures the session (a LogisticRegression model
+    keeps it in its training summary) then fails "Task not
+    serializable"."""
+    from pyspark.serializers import CPickleSerializer
+
+    observed = df.observe(name, *metrics)
+    ckpt = observed.localCheckpoint(eager=True)
+    row = observed._jdf.queryExecution().observedMetrics().apply(name)
+    utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return ckpt, CPickleSerializer().loads(utils.toPyRow(row)).asDict()
+
+
 def near_dedup_incremental(
     new_docs: DataFrame, index_path: str, id_col: str, text_col: str,
     n_bands: int | None = None, shingle_n: int | None = None,
@@ -1988,9 +2032,13 @@ def near_dedup_incremental(
     100 TB shape: the batch is signed once (O(batch) work); the index side
     is read with ``sig_bucket IN (batch's buckets)`` — a PARTITION filter
     that prunes whole files — and verification reads only the candidate
-    ids' ``id_bucket`` directories. The two driver-side bucket collections
-    are bounded by ``n_sig_buckets`` / ``n_id_buckets`` rows, never by
-    corpus or batch size. Batch-internal candidates keep the hot-bucket
+    ids' ``id_bucket`` directories. Both bucket sets are observed on
+    checkpoints the append runs anyway (no collect, no extra job) and
+    are bounded by ``n_sig_buckets`` / ``n_id_buckets`` values, never by
+    corpus or batch size. An append runs five Spark actions: the signed
+    batch, the candidate pairs and the verified losers are each
+    checkpointed once, then the two index tables are appended from the
+    signed checkpoint. Batch-internal candidates keep the hot-bucket
     star guard; batch×index candidates are exact within each (band, sig)
     bucket — a new doc needs ONE verified index match to be dropped, and
     equality of a full band signature is already a strong filter.
@@ -2028,9 +2076,28 @@ def near_dedup_incremental(
     n_sig_buckets = int(meta["n_sig_buckets"])
     n_id_buckets = int(meta["n_id_buckets"])
 
-    batch_min, batch_max = new_docs.agg(
-        F.min(id_col), F.max(id_col)
-    ).first()  # bounded: two scalars
+    # --- sign once: ONE aggregate yields each doc's shingle set and its
+    # band minima (bit-identical to _band_signature_frame); its checkpoint
+    # is the only copy of the batch later steps read. The checkpoint's job
+    # also observes the batch id range and the probe's sig_bucket set.
+    # Docs without shingles keep a row so the id range covers them (an
+    # observation below the aggregate is lost when AQE folds an all-empty
+    # shingle stage away) ---
+    signed, seen = _observed_checkpoint(
+        shingle_rows(
+            spread_small_scan(new_docs, id_col), id_col, text_col, shingle_n,
+            keep_empty=True,
+        )
+        .groupBy(id_col)
+        .agg(F.collect_list("shingle").alias("_s"), *_band_mins(n_bands)),
+        "near_dedup_incremental.sign",
+        F.min(id_col).alias("lo"), F.max(id_col).alias("hi"),
+        F.array_distinct(F.flatten(F.array(*[
+            F.collect_set(_sig_bucket(F.col(f"s{b}"), n_sig_buckets))
+            for b in range(n_bands)
+        ]))).alias("buckets"),  # bounded: ≤ n_sig_buckets values
+    )
+    batch_min, batch_max, probe_buckets = seen["lo"], seen["hi"], seen["buckets"]
     idx_max = _id_as_meta_comparable(meta.get("max_id"), id_type)
     if (
         not allow_replay
@@ -2047,37 +2114,29 @@ def near_dedup_incremental(
             "allow_replay=True if this is a retried micro-batch being "
             "reprocessed against its own appended signatures."
         )
-    sh_new = shingle_rows(
-        spread_small_scan(new_docs, id_col), id_col, text_col, shingle_n
-    ).persist()
-    try:
-        sigs_new = _band_signature_frame(sh_new, id_col, n_bands).localCheckpoint(
-            eager=True
-        )
-        # --- batch-internal duplicates (standard pipeline on the batch) ---
-        cands_new = lsh_candidate_pairs(
-            sigs_new, id_col, max_bucket_size=max_bucket_size,
-            hub_ranks=(
-                list(range(star_rounds)) if max_bucket_size is not None else None
-            ),
-        )
-        dups_new = jaccard_verify_sets(cands_new, sh_new, id_col, threshold)
+    signed_docs = signed.filter(F.size("_s") > 0)
+    sigs_new = signed_docs.selectExpr(id_col, _stack_bands(n_bands))
 
-        # --- batch × index candidates, sig_bucket-pruned probe ---
-        probe_buckets = [
-            r["b"]
-            for r in sigs_new.select(
-                _sig_bucket(F.col("sig"), n_sig_buckets).alias("b")
-            ).distinct().collect()  # bounded: ≤ n_sig_buckets rows
-        ]
+    # --- both candidate kinds in ONE frame (a, b, _src); the batch doc b
+    # is the loser of either kind. Batch-internal pairs (_src 0) keep the
+    # hot-bucket star guard; batch × index pairs (_src 1) read only the
+    # sig_bucket directories the batch's signatures hash into ---
+    pairs = lsh_candidate_pairs(
+        sigs_new, id_col, max_bucket_size=max_bucket_size,
+        hub_ranks=(
+            list(range(star_rounds)) if max_bucket_size is not None else None
+        ),
+    ).withColumn("_src", F.lit(0))
+    # the manifest implies the index schemas: no footer-read job
+    id_ddl = f"`{id_col}` {id_type}"
+    if probe_buckets:
         idx_sigs = readers.read_pruned_partitions(
-            spark, f"{index_path}/sigs", "sig_bucket", probe_buckets
+            spark, f"{index_path}/sigs", "sig_bucket", probe_buckets,
+            schema=f"{id_ddl}, band INT, sig STRING, sig_bucket INT",
         )
-        cand_idx = (
+        pairs = pairs.unionByName(
             sigs_new.join(
-                idx_sigs.select(
-                    "band", "sig", F.col(id_col).alias("_idx_id")
-                ),
+                idx_sigs.select("band", "sig", F.col(id_col).alias("_idx_id")),
                 ["band", "sig"],
             )
             # same-id pairs only exist when the batch was ALREADY appended
@@ -2087,99 +2146,94 @@ def near_dedup_incremental(
             # the normal flow ids are unique across index ∪ batch, so this
             # is a no-op — it makes reprocessing idempotent.
             .filter(F.col(id_col) != F.col("_idx_id"))
-            .select(F.col(id_col).alias("_new_id"), "_idx_id")
+            .select(
+                F.col("_idx_id").alias("a"), F.col(id_col).alias("b"),
+                F.lit(1).alias("_src"),
+            )
             .distinct()
         )
+    cands, seen = _observed_checkpoint(
+        pairs, "near_dedup_incremental.candidates",
+        F.collect_set(
+            F.when(F.col("_src") == 1, _id_bucket(F.col("a"), n_id_buckets))
+        ).alias("buckets"),  # bounded: ≤ n_id_buckets values
+    )
+    set_buckets = seen["buckets"]
 
-        # --- verify batch×index pairs: new side from the batch's shingle
-        # cache, index side from the persisted sets, id_bucket-pruned ---
-        set_buckets = [
-            r["b"]
-            for r in cand_idx.select(
-                _id_bucket(F.col("_idx_id"), n_id_buckets).alias("b")
-            ).distinct().collect()  # bounded: ≤ n_id_buckets rows
-        ]
-        idx_sets = readers.read_pruned_partitions(
-            spark, f"{index_path}/shingle_sets", "id_bucket", set_buckets
-        ).select(F.col(id_col).alias("_idx_id"), F.col("shingles").alias("_sb"))
-        new_sets = sh_new.groupBy(id_col).agg(
-            F.collect_list("shingle").alias("_sa")
+    # --- one verify: each pair joins the set of its own source (under
+    # allow_replay an index id keeps its index copy); the index side reads
+    # only the candidate ids' id_bucket directories ---
+    a_sets = signed.select(F.col(id_col).alias("a"), F.lit(0).alias("_src"), "_s")
+    if set_buckets:
+        a_sets = a_sets.unionByName(
+            readers.read_pruned_partitions(
+                spark, f"{index_path}/shingle_sets", "id_bucket", set_buckets,
+                schema=f"{id_ddl}, shingles ARRAY<STRING>, id_bucket INT",
+            ).select(
+                F.col(id_col).alias("a"), F.lit(1).alias("_src"),
+                F.col("shingles").alias("_s"),
+            )
         )
-        joined = (
-            cand_idx.join(new_sets.withColumnRenamed(id_col, "_new_id"), "_new_id")
-            .join(idx_sets, "_idx_id")
-        )
-        # one intersection per pair through the generator barrier (same
-        # no-CSE-in-join-condition trap jaccard_verify_sets documents)
-        once = joined.select(
-            "_new_id",
-            F.size("_sa").alias("_na"), F.size("_sb").alias("_nb"),
-            F.explode(
-                F.array(F.size(F.array_intersect(F.col("_sa"), F.col("_sb"))))
-            ).alias("_i"),
-        )
-        jac = F.col("_i").cast("double") / (F.col("_na") + F.col("_nb") - F.col("_i"))
-        losers_idx = once.filter(jac >= threshold).select(
-            F.col("_new_id").alias(id_col)
-        )
+    dups = _jaccard_of_sets(
+        cands, a_sets, signed.select(F.col(id_col).alias("b"), "_s"),
+        threshold, a_on=("a", "_src"),
+    )
 
-        # HARD materialization barrier (localCheckpoint, not persist): the
-        # loser plan reads the index, and update_index appends to that
-        # same index below — a lazy/cached plan re-evaluated after the
-        # append would match every appended survivor AGAINST ITSELF
-        # (jaccard 1.0) and drop it. Checkpointing truncates the lineage
-        # so later evaluations of ``kept`` never re-read the index.
-        # losers is tiny: one id column, verified duplicates only.
-        losers = (
-            dups_new.select(F.col("b").alias(id_col))
-            .unionByName(losers_idx)
-            .distinct()
-            .localCheckpoint(eager=True)
+    # HARD materialization barrier (localCheckpoint, not persist): the
+    # loser plan reads the index, and update_index appends to that same
+    # index below — a lazy/cached plan re-evaluated after the append would
+    # match every appended survivor AGAINST ITSELF (jaccard 1.0) and drop
+    # it. Checkpointing truncates the lineage so later evaluations of
+    # ``kept`` never re-read the index. losers is tiny: one id column,
+    # verified duplicates only.
+    losers, seen = _observed_checkpoint(
+        dups.select(F.col("b").alias(id_col)).distinct(),
+        "near_dedup_incremental.losers", F.count(F.lit(1)).alias("n"),
+    )
+    # the planner sizes a checkpoint by its source plan's estimate (here a
+    # product of join sizes), so every anti join below would shuffle both
+    # sides; the observed row count, at 8 bytes an id, decides instead
+    if seen["n"] * 8 <= (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    ):
+        losers = F.broadcast(losers)
+    kept = new_docs.join(losers, on=id_col, how="left_anti")
+    if update_index:
+        # ratchet the meta's max_id over the FULL batch (kept or dropped —
+        # the next batch's ids must clear this crawl entirely, matching
+        # the monotone crawl-id layout) BEFORE the data appends: a crash
+        # between the two steps then leaves a meta that over-claims
+        # (future overlapping batches are REFUSED — safe) instead of a
+        # meta that under-claims (a batch overlapping half-appended
+        # signatures would pass the guard and silently diverge).
+        # Refuse-loudly under crashes, not just under misuse.
+        if batch_max is not None and (
+            idx_max is None
+            or _id_as_meta_comparable(str(batch_max), id_type) > idx_max
+        ):
+            _write_sig_meta(spark, index_path, {**meta, "max_id": str(batch_max)})
+        # the appended rows come from the signed checkpoint, so neither
+        # write re-reads or re-signs the batch
+        appended = signed_docs.join(losers, id_col, "left_anti")
+        (
+            cluster_for_partitioned_write(
+                appended.selectExpr(id_col, _stack_bands(n_bands)).withColumn(
+                    "sig_bucket", _sig_bucket(F.col("sig"), n_sig_buckets)
+                ),
+                "sig_bucket",
+            )
+            .write.mode("append").partitionBy("sig_bucket")
+            .parquet(f"{index_path}/sigs")
         )
-        kept = new_docs.join(losers, on=id_col, how="left_anti")
-        if update_index:
-            # ratchet the meta's max_id over the FULL batch (kept or
-            # dropped — the next batch's ids must clear this crawl
-            # entirely, matching the monotone crawl-id layout) BEFORE the
-            # data appends: a crash between the two steps then leaves a
-            # meta that over-claims (future overlapping batches are
-            # REFUSED — safe) instead of a meta that under-claims (a
-            # batch overlapping half-appended signatures would pass the
-            # guard and silently diverge). Refuse-loudly under crashes,
-            # not just under misuse.
-            if batch_max is not None and (
-                idx_max is None
-                or _id_as_meta_comparable(str(batch_max), id_type) > idx_max
-            ):
-                _write_sig_meta(
-                    spark, index_path, {**meta, "max_id": str(batch_max)}
-                )
-            kept_ids = kept.select(id_col)
-            (
-                cluster_for_partitioned_write(
-                    sigs_new.join(kept_ids, id_col, "left_semi")
-                    .withColumn(
-                        "sig_bucket", _sig_bucket(F.col("sig"), n_sig_buckets)
-                    ),
-                    "sig_bucket",
-                )
-                .write.mode("append").partitionBy("sig_bucket")
-                .parquet(f"{index_path}/sigs")
+        (
+            cluster_for_partitioned_write(
+                appended.select(F.col(id_col), F.col("_s").alias("shingles"))
+                .withColumn("id_bucket", _id_bucket(F.col(id_col), n_id_buckets)),
+                "id_bucket",
             )
-            (
-                cluster_for_partitioned_write(
-                    new_sets.join(kept_ids, id_col, "left_semi")
-                    .select(F.col(id_col), F.col("_sa").alias("shingles"))
-                    .withColumn(
-                        "id_bucket", _id_bucket(F.col(id_col), n_id_buckets)
-                    ),
-                    "id_bucket",
-                )
-                .write.mode("append").partitionBy("id_bucket")
-                .parquet(f"{index_path}/shingle_sets")
-            )
-    finally:
-        sh_new.unpersist()
+            .write.mode("append").partitionBy("id_bucket")
+            .parquet(f"{index_path}/shingle_sets")
+        )
     return kept
 
 

@@ -221,6 +221,7 @@ def is_path_not_found(e: Exception) -> bool:
 
 def read_pruned_partitions(
     spark: SparkSession, root: str, part_col: str, values,
+    schema: "str | None" = None,
 ) -> DataFrame:
     """Read a ``part_col``-partitioned parquet table restricted to the
     partitions in ``values``, listing ONLY those partition directories.
@@ -248,6 +249,12 @@ def read_pruned_partitions(
     bucket column uses), or schema inference over the probed subset
     fails (e.g. committed-but-empty directories).
 
+    ``schema`` (a DDL string naming the data columns, then ``part_col``)
+    skips schema inference in the pruned read and in every fallback: an
+    inferred parquet read launches a Spark job to read a file footer
+    before any row is scanned. Pass it only when the writer's schema is
+    known; the rows are the same as the inferred read's.
+
     Partition-TYPE inference caveat (VERDICT r15 hardening): the probed
     listing infers ``part_col``'s type from the probed directories only,
     so an EXTERNAL table mixing small and ≥2³¹ partition values could
@@ -270,8 +277,11 @@ def read_pruned_partitions(
     except TypeError:  # unsortable mix — let the plain read adjudicate it
         vals = values
 
+    def _reader():
+        return spark.read if schema is None else spark.read.schema(schema)
+
     def _fallback() -> DataFrame:
-        return spark.read.parquet(root).filter(F.col(part_col).isin(vals))
+        return _reader().parquet(root).filter(F.col(part_col).isin(vals))
 
     if not vals or not all(
         isinstance(v, int) and not isinstance(v, bool) for v in vals
@@ -290,7 +300,7 @@ def read_pruned_partitions(
     if not dirs:
         return _fallback()
     try:
-        pruned = spark.read.option("basePath", str(qroot)).parquet(*dirs)
+        pruned = _reader().option("basePath", str(qroot)).parquet(*dirs)
     except AnalysisException:
         return _fallback()
     # the filter is semantic-parity insurance (and keeps the plan's

@@ -290,3 +290,275 @@ def test_update_index_ratchets_max_id(spark, corpus, small_index):
         near_dedup_incremental(
             b.limit(5), small_index, "doc_id", "text"
         )
+
+
+# ---------------------------------------------------------------------------
+# Append edge cases: docs without shingles, empty batches, threshold
+# extremes, single-partition writes, a crash between the max_id commit and
+# the data append, and the append's Spark job budget.
+# ---------------------------------------------------------------------------
+
+BATCH_SCHEMA = "doc_id bigint, text string"
+# tokens absent from the generated corpus vocabulary: a doc made of them
+# has no near-duplicate in the index
+FRESH = " ".join(f"zq{i}" for i in range(12))
+
+
+def _index_rows(spark, idx):
+    sigs = sorted(map(tuple, spark.read.parquet(f"{idx}/sigs").collect()))
+    sets = sorted(
+        (r["doc_id"], tuple(sorted(r["shingles"])), r["id_bucket"])
+        for r in spark.read.parquet(f"{idx}/shingle_sets").collect()
+    )
+    return sigs, sets
+
+
+def _ids(df):
+    return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+
+def test_append_short_highest_id_doc_kept_unindexed_and_ratchets(
+    spark, small_index
+):
+    # the batch's highest id has fewer than shingle_n tokens: it has no
+    # signature, so it is kept and never appended — but the manifest's
+    # max_id must still clear it
+    before_sigs, before_sets = _index_rows(spark, small_index)
+    batch = spark.createDataFrame(
+        [(2_000_000, FRESH), (2_000_001, "two words")], BATCH_SCHEMA
+    )
+    kept = near_dedup_incremental(
+        batch, small_index, "doc_id", "text", update_index=True
+    )
+    assert _ids(kept) == {2_000_000, 2_000_001}
+    sigs, sets = _index_rows(spark, small_index)
+    assert {r[0] for r in sigs} - {r[0] for r in before_sigs} == {2_000_000}
+    assert {r[0] for r in sets} - {r[0] for r in before_sets} == {2_000_000}
+    assert len(sigs) == len(before_sigs) + PARAMS["n_bands"]
+    assert read_meta_json(spark, small_index, "sig")["max_id"] == "2000001"
+    with pytest.raises(ValueError, match="monotonic"):
+        near_dedup_incremental(
+            spark.createDataFrame([(2_000_001, FRESH)], BATCH_SCHEMA),
+            small_index, "doc_id", "text",
+        )
+
+
+def test_append_batch_without_shingles_appends_nothing_and_ratchets(
+    spark, small_index
+):
+    before = _index_rows(spark, small_index)
+    batch = spark.createDataFrame(
+        [(3_000_000, "one"), (3_000_001, ""), (3_000_002, "a b")], BATCH_SCHEMA
+    )
+    kept = near_dedup_incremental(
+        batch, small_index, "doc_id", "text", update_index=True
+    )
+    assert _ids(kept) == {3_000_000, 3_000_001, 3_000_002}
+    assert _index_rows(spark, small_index) == before
+    assert read_meta_json(spark, small_index, "sig")["max_id"] == "3000002"
+
+
+def test_append_empty_batch_changes_nothing(spark, small_index):
+    before = _index_rows(spark, small_index)
+    meta = read_meta_json(spark, small_index, "sig")
+    kept = near_dedup_incremental(
+        spark.createDataFrame([], BATCH_SCHEMA), small_index, "doc_id", "text",
+        update_index=True,
+    )
+    assert kept.count() == 0
+    assert _index_rows(spark, small_index) == before
+    assert read_meta_json(spark, small_index, "sig") == meta
+
+
+@pytest.mark.parametrize("t", [1.0, 1 - 1e-12])
+def test_threshold_extremes_verify_and_append(spark, sf_dir, tmp_path, t):
+    # _ceil_loose at its adversarial end: the size prefilter must keep an
+    # exact duplicate (sizes equal) at t = 1.0 and just below it
+    from qcardia_data_spark.functions.dedup import jaccard_verify_sets
+
+    base = ["s0", "s1", "s2", "s3", "s4", "s5", "s6", "s7", "s8", "s9"]
+    sh = spark.createDataFrame(
+        [(1, s) for s in base] + [(2, s) for s in base]
+        + [(3, s) for s in base + ["s10"]],
+        "doc_id long, shingle string",
+    )
+    cands = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "a long, b long")
+    for prefilter in (True, False):
+        got = jaccard_verify_sets(
+            cands, sh, "doc_id", threshold=t, size_prefilter=prefilter
+        )
+        assert sorted((r["a"], r["b"]) for r in got.collect()) == [(1, 2)]
+
+    a_raw = _docs(spark, sf_dir).filter(F.col("doc_id") < 60).select("doc_id", "text")
+    a = near_dedup_minhash(a_raw, "doc_id", "text", threshold=t, **PARAMS)
+    idx = str(tmp_path / "idx")
+    write_signature_index(a, "doc_id", "text", idx, **PARAMS)
+    src = a.orderBy("doc_id").limit(2).collect()
+    batch = spark.createDataFrame(
+        [
+            (1_000_000, src[0]["text"]),  # exact duplicate of an index doc
+            (1_000_001, src[1]["text"] + " zqextra"),  # one shingle more
+            (1_000_002, src[1]["text"] + " zqextra"),  # exact batch duplicate
+        ],
+        BATCH_SCHEMA,
+    )
+    kept = near_dedup_incremental(
+        batch, idx, "doc_id", "text", threshold=t, update_index=True
+    )
+    assert _ids(kept) == {1_000_001}
+    full = near_dedup_minhash(
+        a.unionByName(batch), "doc_id", "text", threshold=t, **PARAMS
+    )
+    assert _ids(a) | _ids(kept) == _ids(full)
+
+
+def _mixed_batch(corpus, ids=None):
+    """Near-copies of index docs (dropped) plus docs whose every shingle
+    is new (kept, so an append writes rows)."""
+    clones = corpus.filter(F.col("doc_id") >= 1_000_000)
+    fresh = corpus.filter(
+        (F.col("doc_id") < 1_000_000) & (F.col("doc_id") % 11 == 0)
+    ).select(
+        (F.col("doc_id") + 1_500_000).alias("doc_id"),
+        F.regexp_replace(F.col("text"), " ", " zq ").alias("text"),
+    )
+    batch = clones.unionByName(fresh)
+    return batch if ids is None else batch.filter(F.col("doc_id").isin(ids))
+
+
+def _new_files(before, root):
+    now = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    return now - before
+
+
+def test_append_at_one_shuffle_partition_matches_default(
+    spark, corpus, small_index, tmp_path
+):
+    import shutil
+
+    single = str(tmp_path / "single")
+    shutil.copytree(small_index, single)
+    b = _mixed_batch(corpus)
+    kept_default = _ids(near_dedup_incremental(
+        b, small_index, "doc_id", "text", update_index=True
+    ))
+    before = _new_files(set(), single)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        kept_single = _ids(near_dedup_incremental(
+            b, single, "doc_id", "text", update_index=True
+        ))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert kept_single == kept_default
+    assert _index_rows(spark, single) == _index_rows(spark, small_index)
+    added = _new_files(before, single)
+    dirs = [os.path.dirname(f) for f in added]
+    assert added and len(dirs) == len(set(dirs))
+
+
+def test_crash_after_max_id_commit_refuses_replay_then_recovers(
+    spark, corpus, small_index, tmp_path, monkeypatch
+):
+    # the manifest's max_id is committed before the data append: a crash
+    # in between leaves a manifest that over-claims, so a plain replay is
+    # refused and only an explicit allow_replay re-runs the batch
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(small_index, clean)
+    b = _mixed_batch(corpus)
+
+    def crash(self, *args, **kwargs):
+        raise OSError("injected crash before the data append")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        near_dedup_incremental(
+            b, small_index, "doc_id", "text", update_index=True
+        )
+    monkeypatch.undo()
+    batch_max = b.agg(F.max("doc_id")).first()[0]
+    assert read_meta_json(spark, small_index, "sig")["max_id"] == str(batch_max)
+
+    with pytest.raises(ValueError, match="monotonic"):
+        near_dedup_incremental(b, small_index, "doc_id", "text", update_index=True)
+    kept = near_dedup_incremental(
+        b, small_index, "doc_id", "text", update_index=True, allow_replay=True
+    )
+    kept_clean = near_dedup_incremental(
+        b, clean, "doc_id", "text", update_index=True
+    )
+    assert _ids(kept) == _ids(kept_clean)
+    assert _index_rows(spark, small_index) == _index_rows(spark, clean)
+
+
+def test_append_job_budget_and_index_reads_launch_no_job(
+    spark, corpus, small_index, monkeypatch
+):
+    """An append signs, finds candidates and verifies in a handful of
+    Spark actions, and its index reads carry their schema, so no parquet
+    footer-read job runs before them."""
+    import uuid
+
+    from qcardia_data_spark.sources import readers
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"append-{uuid.uuid4().hex}"
+    real = readers.read_pruned_partitions
+    read_jobs = []
+
+    def counted(*args, **kwargs):
+        n0 = len(tracker.getJobIdsForGroup(group))
+        out = real(*args, **kwargs)
+        read_jobs.append(len(tracker.getJobIdsForGroup(group)) - n0)
+        return out
+
+    monkeypatch.setattr(readers, "read_pruned_partitions", counted)
+    # two near-copies of index docs and one new doc: at most 24 probed
+    # sig_bucket directories, below Spark's parallel-listing threshold,
+    # so listing runs no job
+    b = _mixed_batch(corpus, [1_000_000, 1_000_007, 1_500_011])
+    sc.setJobGroup(group, "incremental append job-count test")
+    try:
+        kept = near_dedup_incremental(
+            b, small_index, "doc_id", "text", update_index=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(tracker.getJobIdsForGroup(group))
+    # the earlier shape (collected bucket lists, inferred index schemas,
+    # a second verify chain for batch x index pairs) launched 48 jobs on
+    # this batch; the budget is 60% of that
+    assert n_jobs <= 28, n_jobs
+    assert read_jobs == [0, 0], read_jobs
+    assert _ids(kept) == {1_500_011}
+
+
+def test_append_leaves_ml_transforms_serializable(spark, corpus, small_index):
+    # the append reads its checkpoint metrics without
+    # pyspark.sql.Observation, whose session-wide manager cannot be
+    # serialized: a model that holds the session (a LogisticRegression
+    # training summary) must still transform after an append
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    near_dedup_incremental(
+        _mixed_batch(corpus, [1_000_000, 1_500_011]), small_index,
+        "doc_id", "text", update_index=True,
+    )
+    train = spark.createDataFrame(
+        [(0.0, Vectors.dense([0.0, 1.0])), (1.0, Vectors.dense([1.0, 0.0]))] * 4,
+        ["label", "features"],
+    )
+    model = LogisticRegression(maxIter=3).fit(train)
+    assert len(model.transform(train).select("probability").collect()) == 8

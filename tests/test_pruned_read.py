@@ -135,3 +135,54 @@ def test_engine_bucket_values_stay_int32_safe():
 
     assert auto_index_buckets(10**18) <= 2**20
     assert auto_index_buckets(0) >= 1
+
+
+BUCKETED_SCHEMA = "id BIGINT, payload STRING, bkt INT"
+
+
+@pytest.mark.parametrize(
+    "probe",
+    [[1, 5, 31, 9999], [], [777, 888], [1.0, 5]],
+    ids=["pruned", "empty", "all_missing", "non_int"],
+)
+def test_schema_given_read_equals_inferred(spark, bucketed, probe):
+    # a known schema skips inference on every branch and changes nothing
+    # the caller sees: same schema, same rows, same pruned file listing
+    inferred = read_pruned_partitions(spark, bucketed, "bkt", probe)
+    given = read_pruned_partitions(
+        spark, bucketed, "bkt", probe, schema=BUCKETED_SCHEMA
+    )
+    assert given.schema == inferred.schema
+    assert sorted(map(tuple, given.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+    assert sorted(given.inputFiles()) == sorted(inferred.inputFiles())
+
+
+def test_schema_given_read_raises_like_inferred(spark, bucketed, tmp_path):
+    missing = str(tmp_path / "never_written")
+    with pytest.raises(AnalysisException):
+        read_pruned_partitions(
+            spark, missing, "bkt", [1], schema=BUCKETED_SCHEMA
+        ).count()
+    with pytest.raises(AnalysisException):
+        read_pruned_partitions(
+            spark, bucketed, "bkt", [True, 3], schema=BUCKETED_SCHEMA
+        ).count()
+
+
+def test_schema_given_read_launches_no_job(spark, bucketed):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pruned-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "schema-given pruned read")
+    try:
+        read_pruned_partitions(
+            spark, bucketed, "bkt", [1, 5], schema=BUCKETED_SCHEMA
+        )
+        read_pruned_partitions(spark, bucketed, "bkt", [1, 5])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # only the inferred read launches one: its footer read
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
