@@ -219,41 +219,27 @@ def _resolve_index_buckets(
     index's OWN geometry from its manifest (r13 — the CMS-store
     contract), with an explicitly-passed caller value VALIDATED against
     it (mismatch refuses loudly: probing with a different count reads
-    the wrong partition directories silently). An index with no
-    manifest (a pre-marker build: postings and ``_stats`` only) falls
-    back to the caller's value or — with a ``UserWarning``, ADVICE r13 —
-    the module default: a legacy index built with a NON-default count
-    and probed with no explicit value is the one residual
-    silent-wrong-partition case this contract can't close from the probe
-    side (nothing records the count), so the fallback is made loud
-    instead of silent. Rebuilding the index (or one explicit-n_buckets
-    probe after checking the build) is the permanent fix; new builds
-    always write the geometry."""
-    import warnings
-
+    the wrong partition directories silently). An index with no manifest
+    refuses too: nothing records the count it was built with, so any
+    guess may read the wrong partitions — rebuild it, and the build
+    writes its geometry."""
     marker = readers.read_meta_json(spark, path, kind)
-    meta_n = int(marker["n_buckets"]) if marker is not None else None
-    if meta_n is not None:
-        if caller is not None and int(caller) != meta_n:
-            raise ValueError(
-                f"{who}: n_buckets={caller} differs from the index's own "
-                f"layout at {path!r} (built with n_buckets={meta_n}) — "
-                "pass None to use the index's value; probing with a "
-                "different count reads the wrong partitions silently"
-            )
-        return meta_n
-    if caller is None:
-        warnings.warn(
-            f"{who}: the index at {path!r} predates the n_buckets layout "
-            f"marker and no explicit count was passed — assuming the "
-            f"module default ({N_TERM_BUCKETS}). If the index was built "
-            "with a different count this probe reads the WRONG partition "
-            "directories; pass the build's n_buckets explicitly or "
-            "rebuild the index to persist its geometry.",
-            UserWarning,
-            stacklevel=3,
+    if marker is None:
+        raise ValueError(
+            f"{who}: no _meta.json at {path!r} — nothing records the "
+            "n_buckets this index was built with, so a probe could read "
+            "the wrong partitions; rebuild the index (the build writes "
+            "its geometry)"
         )
-    return int(caller) if caller is not None else N_TERM_BUCKETS
+    meta_n = int(marker["n_buckets"])
+    if caller is not None and int(caller) != meta_n:
+        raise ValueError(
+            f"{who}: n_buckets={caller} differs from the index's own "
+            f"layout at {path!r} (built with n_buckets={meta_n}) — "
+            "pass None to use the index's value; probing with a "
+            "different count reads the wrong partitions silently"
+        )
+    return meta_n
 
 
 def _stats_exists(spark: SparkSession, path: str) -> bool:

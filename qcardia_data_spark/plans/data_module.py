@@ -15,7 +15,7 @@ Config keys::
 
     sf_dir: str                  # catalog root for table sources
     cache_root: str              # where materialized caches live
-    pipeline: [ ...spec ops... ] # the heavy build (plans.spec grammar)
+    pipeline: [ ...spec ops... ] # the heavy build (SPEC_DIALECT.md)
     subject_col: str             # group-level split key
     split: {valid_fraction: float, seed: any}  # or {assignments: {subject: split}}
     weight_cols: [str]           # inverse-frequency weighting strata

@@ -602,11 +602,11 @@ def test_index_probes_resolve_n_buckets_from_marker(spark, tmp_path):
         )
 
 
-def test_legacy_markerless_index_probe_warns(spark, tmp_path):
-    """ADVICE r13: a pre-r13 index (marker without n_buckets) probed with
-    caller=None is the residual silent-wrong-partition case — the
-    fallback to the module default must be LOUD. Built at the default
-    here, so results stay correct; the warning is the contract."""
+def test_markerless_index_probe_refuses(spark, tmp_path):
+    """An index without its _meta.json (a pre-manifest build) records no
+    n_buckets, so any probe of it could read the wrong partition
+    directories: both probe forms refuse, naming the path and pointing at
+    a rebuild — with or without an explicit caller count."""
     import os
 
     import pytest
@@ -614,25 +614,24 @@ def test_legacy_markerless_index_probe_warns(spark, tmp_path):
     from qcardia_data_spark.functions.retrieval import (
         bm25_topk_from_index,
         build_inverted_index,
+        build_positional_index,
+        phrase_occurrences_from_index,
     )
 
     docs = spark.createDataFrame(
         [(1, "spark shuffles data"), (2, "the cluster runs spark")],
         ["doc_id", "text"],
     )
-    idx = str(tmp_path / "legacy_bm25")
-    build_inverted_index(docs, idx)  # default layout
-    os.remove(f"{idx}/_meta.json")  # simulate the pre-r13 index
-    # legacy _stats detection path: recreate the pre-marker shape
-    with pytest.warns(UserWarning, match="predates the n_buckets"):
-        got = bm25_topk_from_index(spark, idx, ["spark"], k=3).collect()
-    assert {r["doc_id"] for r in got} == {1, 2}
-    # explicit caller value: no warning, same result
-    import warnings as _w
-
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        got2 = bm25_topk_from_index(
-            spark, idx, ["spark"], k=3, n_buckets=64
-        ).collect()
-    assert {r["doc_id"] for r in got2} == {1, 2}
+    bm = str(tmp_path / "legacy_bm25")
+    build_inverted_index(docs, bm)
+    os.remove(f"{bm}/_meta.json")  # simulate the pre-manifest index
+    for n_buckets in (None, 64):
+        with pytest.raises(ValueError, match="rebuild") as e:
+            bm25_topk_from_index(spark, bm, ["spark"], k=3, n_buckets=n_buckets)
+        assert bm in str(e.value)
+    pos = str(tmp_path / "legacy_pos")
+    build_positional_index(docs, pos)
+    os.remove(f"{pos}/_meta.json")
+    with pytest.raises(ValueError, match="rebuild") as e:
+        phrase_occurrences_from_index(spark, pos, ["the", "cluster"])
+    assert pos in str(e.value)
