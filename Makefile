@@ -1,6 +1,6 @@
 # Round workflow helpers (VERDICT r9 "Next round" #4).
 
-.PHONY: round-start test test-all test-slow bench bench-ext window-check
+.PHONY: round-start test verify test-all test-slow bench bench-ext window-check
 
 # FIRST command of every round: refresh grading telemetry so the
 # committed GRADE_WINDOW.json can never lag the driver's newest
@@ -15,6 +15,11 @@ round-start:
 # SLOW_TESTS for the list and the fast sibling each one leaves active.
 test:
 	python -m pytest tests/ -q
+
+# The Tier-1 verify command of ROADMAP.md, verbatim: the fast profile on
+# every CPU of the host, inside its time budget.
+verify:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # The whole suite including the slow set (builder runs this once per round).
 test-all:

@@ -8,8 +8,9 @@ build transforms, route files, compute weights) → ``train_dataloader()``.
 Engine flow: ``DataModule(spark, config)`` → ``setup()`` (compile source
 pipeline, materialize to a fingerprint-keyed parquet cache, resolve the
 subject-level split, route records) → ``frame("train")`` (filtered, weighted
-lazy DataFrame — the serving surface; iterate with ``toLocalIterator`` or
-feed ``foreachBatch``).
+lazy DataFrame) → ``iter_pandas_batches("train", ...)`` (the split streamed to
+the driver in serving order, one Spark job per range partition, cut into
+pandas batches there).
 
 Config keys::
 
@@ -22,8 +23,6 @@ Config keys::
 """
 
 from __future__ import annotations
-
-import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,53 +92,34 @@ class DataModule:
 
     def iter_pandas_batches(
         self, split: str, batch_size: int = 128, shuffle_seed=None, epoch: int = 0,
-        mode: str = "per_batch",
     ):
         """Serving iterator — the ``DataLoader`` analog (reference
-        data_module.py:101-166): yields pandas batches of the split's
-        records, optionally shuffled by a seeded, epoch-dependent key
-        (same (seed, epoch) ⇒ same order; new epoch ⇒ new permutation —
-        what the reference's per-epoch DataLoader shuffle provides).
+        data_module.py:101-166): yields pandas batches of ``batch_size``
+        records of the split (the last may be shorter), optionally shuffled
+        by a seeded, epoch-dependent key (same (seed, epoch) ⇒ same order;
+        new epoch ⇒ new permutation — what the reference's per-epoch
+        DataLoader shuffle provides).
 
-        Batches come from the global numbering built by ``_numbered_frame``:
-        one range exchange, one checkpointed copy of the records, numbers
-        bit-identical to ``row_number() OVER (ORDER BY ...)``. The batch
-        count is known on the driver from the per-partition counts, so no
-        job computes it. At cluster scale the same frame feeds
-        ``foreachBatch`` / a Volcano-style reader instead; the batch
-        assignment logic is identical.
+        One path: ``_ranked_frame`` streams to the driver as Arrow record
+        batches, one Spark job per range partition with the next partition
+        prefetched, and batches are cut from that stream on the driver.
+        Range partitions hold ascending key ranges and each is sorted, so
+        partition order is the global serving order: no numbering, no
+        stored copy beyond the shuffle output, and each range partition is
+        read once per epoch. A batch inside a partition already on the
+        driver launches no job. Driver memory: at most 2 range partitions
+        in the JVM (current and prefetched); in Python one Arrow batch plus
+        fewer than ``batch_size`` carried rows. Each batch equals
+        ``toPandas()`` of its rows in names, dtypes and values.
 
-        ``mode`` picks the driver-side fetch strategy (identical batches
-        either way):
-
-        - ``"per_batch"`` (default): one Spark job per batch — a filter on
-          ``_batch`` over the checkpointed frame; its ≤ ``batch_size`` rows
-          are put in ``_rn`` order in pandas. Random access, cheap
-          restarts, right for interactive stepping.
-        - ``"stream"``: ONE pass via ``toLocalIterator`` over the numbered
-          frame, cut every ``batch_size`` rows, with no sort: range
-          partitions hold ascending key ranges and each is sorted, so
-          partition order is already ``_rn`` order. Partitions stream to
-          the driver with prefetch, one Spark job per partition instead of
-          one per batch — right for long epochs.
+        The epoch's Spark jobs all carry the job group that was set when
+        the first batch was requested: the JVM thread serving the
+        partitions inherits it. Closing the generator early tells that
+        thread to stop; a partition already prefetched is discarded.
         """
-        import pandas as pd
-
-        if mode not in ("per_batch", "stream"):
-            raise ValueError(f"mode must be 'per_batch' or 'stream', got {mode!r}")
-        ranked, numbered, n_rows = self._numbered_frame(split, batch_size, shuffle_seed, epoch)
-        try:
-            if mode == "stream":
-                records = numbered.drop("_rn", "_batch")
-                rows = records.toLocalIterator(prefetchPartitions=True)
-                while chunk := list(itertools.islice(rows, batch_size)):
-                    yield pd.DataFrame([r.asDict() for r in chunk], columns=records.columns)
-                return
-            for b in range(-(-n_rows // batch_size)):
-                pdf = numbered.filter(F.col("_batch") == b).toPandas()
-                yield pdf.sort_values("_rn").drop(columns=["_rn", "_batch"]).reset_index(drop=True)
-        finally:
-            release_checkpoint(ranked)
+        if batch_size < 1:
+            raise ValueError(f"batch_size must be at least 1, got {batch_size}")
+        yield from _arrow_pandas_batches(self._ranked_frame(split, shuffle_seed, epoch), batch_size)
 
     def _order_key(self, df: DataFrame, shuffle_seed, epoch) -> list:
         """The serving order: the subject alone, or with a seed a keyed hash
@@ -176,56 +156,11 @@ class DataModule:
     def _ranked_frame(self, split, shuffle_seed, epoch) -> DataFrame:
         """The split's records range-partitioned on the serving order and
         sorted within each partition — the serving path's one exchange of
-        the records — plus ``_pid`` (the range partition) and ``_mid`` =
-        ``monotonically_increasing_id()``. Lazy; exposed for plan-property
-        tests."""
+        the records. Lazy; exposed for plan-property tests."""
         df = self.frame(split)
         order = self._order_key(df, shuffle_seed, epoch)
         n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        return (
-            df.repartitionByRange(n_parts, *order)
-            .sortWithinPartitions(*order)
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("_mid", F.monotonically_increasing_id())
-        )
-
-    def _numbered_frame(self, split, batch_size, shuffle_seed, epoch):
-        """Number the split's records in global order-key order.
-
-        ``_ranked_frame`` is local-checkpointed: the only stored copy of the
-        records, with a one-node lineage, so each batch query plans in
-        milliseconds. Losing a block fails loudly rather than recomputing
-        ``_pid``/``_mid`` under a possibly different range split. The low
-        33 bits of ``_mid`` are the row's position inside its sorted
-        partition (the ``zipWithIndex`` trick). One ``groupBy(_pid).count()``
-        — which also fills the checkpoint — brings ``n_partitions`` rows to
-        the driver, which turns them into partition offsets. ``_rn`` =
-        offset[``_pid``] + local position + 1 and ``_batch`` = (``_rn`` − 1)
-        div ``batch_size`` are then a narrow projection: no window, no join,
-        no second copy. Range partitions hold contiguous, ascending key
-        ranges, so ``_rn`` equals ``row_number() OVER (ORDER BY ...)``. Both
-        are ``long``: a split may hold more than 2³¹ − 1 records.
-
-        Returns ``(ranked, numbered, n_rows)``: the checkpointed frame (the
-        caller frees it with ``release_checkpoint``), the numbered
-        projection (payload columns, ``_rn``, ``_batch``) and the row count.
-        """
-        ranked = self._ranked_frame(split, shuffle_seed, epoch).localCheckpoint(eager=False)
-        try:
-            offsets, n_rows = partition_offsets(dict(ranked.groupBy("_pid").count().collect()))
-        except BaseException:
-            release_checkpoint(ranked)
-            raise
-        offset = F.element_at(
-            F.array(*[F.lit(o).cast("long") for o in offsets or [0]]), F.col("_pid") + 1
-        )
-        local = F.col("_mid") - F.shiftleft(F.col("_pid").cast("long"), 33)
-        numbered = (
-            ranked.withColumn("_rn", offset + local + 1)
-            .withColumn("_batch", F.expr(f"(_rn - 1) div {int(batch_size)}"))
-            .drop("_pid", "_mid")
-        )
-        return ranked, numbered, n_rows
+        return df.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
 
     def summary(self) -> DataFrame:
         """Files & subjects per split (reference ``print_dataset_summary``,
@@ -238,18 +173,63 @@ class DataModule:
         )
 
 
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks behind a ``localCheckpoint`` frame; ``unpersist``
-    does not reach them (they belong to the frame's ``LogicalRDD``)."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+def _arrow_pandas_batches(df: DataFrame, batch_size: int):
+    """``df`` in partition order as pandas frames of ``batch_size`` rows
+    (the last may be shorter), each converted as ``toPandas`` converts.
 
+    Every private PySpark call of the serving path is here: the JVM's
+    ``toArrowBatchRdd`` served one partition per job, with prefetch,
+    by ``toLocalIteratorAndServe`` (the call behind ``toLocalIterator``),
+    and ``toPandas``'s own Arrow schema and per-column converters.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
+    from pyspark.util import _local_iterator_from_socket
 
-def partition_offsets(counts: dict[int, int]) -> tuple[list[int], int]:
-    """Rows before each partition ``0..max(counts)`` and the total, from
-    per-partition row counts; empty partitions may be missing from
-    ``counts``."""
-    offsets, total = [], 0
-    for pid in range(max(counts, default=-1) + 1):
-        offsets.append(total)
-        total += counts.get(pid, 0)
-    return offsets, total
+    spark, fields = df.sparkSession, df.schema.fields
+    jconf = spark._jconf
+    struct_in_pandas = jconf.pandasStructHandlingMode()
+    legacy = struct_in_pandas == "legacy"
+    converters = [
+        _create_converter_to_pandas(
+            f.dataType, f.nullable, timezone=jconf.sessionLocalTimeZone(),
+            struct_in_pandas="dict" if legacy else struct_in_pandas,
+            error_on_duplicated_field_names=legacy,
+        )
+        for f in fields
+    ]
+    schema = to_arrow_schema(df.schema, prefers_large_types=jconf.arrowUseLargeVarTypes())
+    # Arrow-to-pandas needs unique names; a frame may repeat one
+    positional = [f"col_{i}" for i in range(len(fields))]
+
+    def to_pandas(pieces):
+        pdf = pa.Table.from_batches(pieces, schema).rename_columns(positional).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True)
+        pdf.columns = [f.name for f in fields]
+        return pd.concat(
+            [conv(col) for conv, (_, col) in zip(converters, pdf.items())], axis="columns")
+
+    sock = spark.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
+        df._jdf.toArrowBatchRdd(), True)
+    carry, n_carry = [], 0  # < batch_size rows, copied out of their Arrow batch
+    messages = _local_iterator_from_socket(sock, NoOpSerializer())
+    try:
+        for msg in messages:
+            rb = pa.ipc.read_record_batch(pa.py_buffer(msg), schema)
+            start = 0
+            while n_carry + rb.num_rows - start >= batch_size:
+                take = batch_size - n_carry
+                yield to_pandas(carry + [rb.slice(start, take)])
+                carry, n_carry, start = [], 0, start + take
+            if start < rb.num_rows:
+                tail = rb.slice(start)
+                carry.append(pa.RecordBatch.from_arrays(
+                    [pa.concat_arrays([c]) for c in tail.columns], schema=schema))
+                n_carry += tail.num_rows
+    finally:
+        # frees the socket reader, which tells the JVM to stop serving
+        messages.close()
+    if carry:
+        yield to_pandas(carry)

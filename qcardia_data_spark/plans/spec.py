@@ -329,17 +329,21 @@ def _push_filters_below_explode(ops: Sequence[dict]) -> list[dict]:
 
 # -- sources ------------------------------------------------------------
 
+def _first_source(df, kind: str) -> None:
+    if df is not None:
+        raise SpecError(
+            f"a second '{kind}' mid-pipeline would discard everything built "
+            "so far — use 'union' or a join op's 'right' side to bring in "
+            "another table"
+        )
+
+
 @_op(
     "source", opens=True,
     keys=("table", "path", "format", "header", "schema", "glob", "decode"),
 )
 def _source(c, df, a):
-    if df is not None:
-        raise SpecError(
-            "a second 'source' mid-pipeline would discard everything built "
-            "so far — use 'union' or a join op's 'right' side to bring in "
-            "another table"
-        )
+    _first_source(df, "source")
     if "table" in a:
         if c.sf_dir is None:
             raise SpecError("table source requires sf_dir")
@@ -374,6 +378,7 @@ def _source(c, df, a):
     required=("path", "schema"), keys=("format", "max_files_per_trigger"),
 )
 def _stream_source(c, df, a):
+    _first_source(df, "stream_source")
     reader = c.spark.readStream.schema(a["schema"]).option(
         "maxFilesPerTrigger", a.get("max_files_per_trigger", 1)
     )
@@ -917,12 +922,19 @@ def _quality_classifier(c, df, a):
     from qcardia_data_spark.functions import classifier as CL
 
     out = a["out"]
+    # validate BEFORE training — the fit is an eager job and a malformed
+    # spec must not burn it first
     if "min_score" in a and "pareto_alpha" in a:
-        # validate BEFORE training — the fit is an eager job and a
-        # malformed spec must not burn it first
         raise SpecError(
             "quality_classifier: min_score and pareto_alpha are mutually "
             "exclusive gates — pick one"
+        )
+    if "coefs" in a and "intercept" not in a:
+        raise SpecError("quality_classifier: the frozen form needs 'intercept' with 'coefs'")
+    if "coefs" not in a and "positive" not in a:
+        raise SpecError(
+            "quality_classifier needs 'coefs' + 'intercept' (frozen) or "
+            "'positive' (trained)"
         )
     if "coefs" in a:
         scored = CL.score_frozen_quality(
@@ -1435,8 +1447,10 @@ _engine(
 def _drift(c, df, a):
     from qcardia_data_spark.functions import drift as DR
 
-    other = c.side(a.pop("against"))
     stat, col = a.get("stat", "psi"), a["col"]
+    if stat == "psi" and "edges" not in a:
+        raise SpecError("drift: stat 'psi' (the default) needs 'edges'")
+    other = c.side(a.pop("against"))
     if stat == "psi":
         return DR.psi_buckets(df, other, col, a["edges"], **_pick(a, "smooth"))
     if stat == "chisq":

@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.plans import cache as C
-from qcardia_data_spark.plans.data_module import (
-    DataModule,
-    partition_offsets,
-    release_checkpoint,
-)
+from qcardia_data_spark.plans.data_module import DataModule
 from qcardia_data_spark.plans.fingerprint import (
     cache_name,
     normalize_spec,
@@ -213,23 +209,6 @@ def test_serving_iterator_batches(spark, sf_dir, tmp_path):
     all_ids_ep1 = sorted(k for b in ep1 for k in b["o_orderkey"])
     assert all_ids == all_ids_ep1  # same record set, permuted
 
-    # one-pass streaming mode: IDENTICAL batches (same rows, same order,
-    # same batch boundaries), one toLocalIterator pass instead of one
-    # Spark job per batch
-    streamed = list(
-        dm.iter_pandas_batches("valid", batch_size=100, shuffle_seed=7, mode="stream")
-    )
-    assert len(streamed) == len(batches)
-    for sb, pb in zip(streamed, batches):
-        assert sb.columns.tolist() == pb.columns.tolist()
-        assert sb["o_orderkey"].tolist() == pb["o_orderkey"].tolist()
-        assert sb["o_orderstatus"].tolist() == pb["o_orderstatus"].tolist()
-
-    import pytest
-
-    with pytest.raises(ValueError, match="per_batch"):
-        next(iter(dm.iter_pandas_batches("valid", mode="bogus")))
-
 
 def _plan_nodes(df):
     """Every node of ``df``'s physical plan, AQE's current plan included."""
@@ -268,53 +247,6 @@ def test_serving_iterator_plan_is_distributed(spark, sf_dir, tmp_path):
     assert not [n for n in over_records if n.nodeName() == "Window"]
 
 
-def test_serving_batch_after_first_is_one_spark_job(spark, sf_dir, tmp_path):
-    """Once the first batch has numbered the epoch, each per_batch fetch is
-    one Spark job over the epoch's one stored copy of the records, which is
-    freed when the epoch ends; the stream path reads the numbered frame
-    with no exchange or sort above the checkpointed range partitions."""
-    import uuid
-
-    dm = _orders_dm(spark, sf_dir, tmp_path)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = f"serve-{uuid.uuid4().hex}"
-
-    def fetch(step, it):
-        sc.setJobGroup(f"{group}-{step}", "serving job-count test")
-        try:
-            batch = next(it, None)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return batch, len(tracker.getJobIdsForGroup(f"{group}-{step}"))
-
-    def stored_rdds():
-        return set(sc._jsc.getPersistentRDDs().keySet())
-
-    before = stored_rdds()
-    it = dm.iter_pandas_batches("valid", batch_size=100, shuffle_seed=7)
-    first, _ = fetch(0, it)
-    assert first is not None
-    epoch_copy = stored_rdds() - before
-    assert len(epoch_copy) == 1, epoch_copy
-    jobs = []
-    while True:
-        batch, n_jobs = fetch(len(jobs) + 1, it)
-        if batch is None:
-            break
-        jobs.append(n_jobs)
-    assert len(jobs) >= 2
-    assert jobs == [1] * len(jobs), jobs
-    assert not epoch_copy & stored_rdds()
-
-    ranked, numbered, _ = dm._numbered_frame("valid", 100, 7, 0)
-    try:
-        names = {n.nodeName() for n in _plan_nodes(numbered)}
-    finally:
-        release_checkpoint(ranked)
-    assert not names & {"Exchange", "Sort", "Window"}, names
-
-
 def _synthetic_dm(spark, tmp_path, tag, rows, valid=None):
     """DataModule over ``rows`` of (subj, rec_id, val); subjects in
     ``valid`` (default: all) go to the valid split, the rest to train."""
@@ -343,7 +275,7 @@ def _synthetic_dm(spark, tmp_path, tag, rows, valid=None):
 def test_serving_batches_equal_direct_row_number(
     spark, tmp_path, n_rows, per_subject, batch_size, shuffle_seed
 ):
-    """Both serving modes give exactly the batches of a direct
+    """The served batches are exactly the batches of a direct
     ``row_number() OVER (ORDER BY <order key>)`` numbering of the split —
     same rows, same order, same boundaries. The direct numbering is a
     single-partition window: fine for a test, the hazard the engine
@@ -359,54 +291,133 @@ def test_serving_batches_equal_direct_row_number(
     expected = [keys[i:i + batch_size] for i in range(0, len(keys), batch_size)]
     assert sorted(keys) == list(range(n_rows))
 
-    served = {
-        mode: [b["rec_id"].tolist() for b in dm.iter_pandas_batches(
-            "valid", batch_size=batch_size, shuffle_seed=shuffle_seed, mode=mode)]
-        for mode in ("per_batch", "stream")
-    }
-    assert served["per_batch"] == expected
-    assert served["stream"] == expected
-
-    ranked, numbered, total = dm._numbered_frame("valid", batch_size, shuffle_seed, 0)
-    try:
-        got = {r["rec_id"]: (r["_rn"], r["_batch"]) for r in numbered.collect()}
-    finally:
-        release_checkpoint(ranked)
-    assert total == n_rows
-    assert got == {k: (i + 1, i // batch_size) for i, k in enumerate(keys)}
-
-
-def test_partition_offsets_skip_empty_partitions():
-    """Spark's range partitioner clamps its partition count to the sampled
-    keys, so the suite cannot force an empty range partition; the offsets
-    still tolerate absent and trailing-empty partitions."""
-    assert partition_offsets({}) == ([], 0)
-    assert partition_offsets({0: 2, 2: 3, 3: 1}) == ([0, 2, 2, 5], 6)
-    assert partition_offsets({1: 4}) == ([0, 0], 4)
+    served = [b["rec_id"].tolist() for b in dm.iter_pandas_batches(
+        "valid", batch_size=batch_size, shuffle_seed=shuffle_seed)]
+    assert served == expected
 
 
 def test_serving_empty_split_yields_no_batches(spark, tmp_path):
     rows = [(f"s{i}", i, float(i)) for i in range(4)]
     dm = _synthetic_dm(spark, tmp_path, "empty", rows, valid=set())
-    for mode in ("per_batch", "stream"):
-        assert list(dm.iter_pandas_batches("valid", batch_size=2, shuffle_seed=7, mode=mode)) == []
-    ranked, numbered, total = dm._numbered_frame("valid", 2, 7, 0)
-    try:
-        assert total == 0 and numbered.count() == 0
-    finally:
-        release_checkpoint(ranked)
+    assert list(dm.iter_pandas_batches("valid", batch_size=2, shuffle_seed=7)) == []
+    with pytest.raises(ValueError, match="batch_size"):
+        next(dm.iter_pandas_batches("train", batch_size=0))
 
 
-def test_numbered_frame_numbers_are_long(spark, tmp_path):
-    """_rn and _batch stay bigint: an int cast wraps past 2^31 - 1 records."""
-    rows = [(f"s{i}", i, float(i)) for i in range(4)]
-    dm = _synthetic_dm(spark, tmp_path, "long", rows)
-    ranked, numbered, _ = dm._numbered_frame("valid", 2, 7, 0)
+def _under_group(spark, fn):
+    """``fn()`` and the (jobs, tasks) it ran under a fresh job group;
+    tasks count each stage once and leave out skipped stages."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"serve-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serving job-count test")
     try:
-        types = dict(numbered.dtypes)
+        out = fn()
     finally:
-        release_checkpoint(ranked)
-    assert (types["_rn"], types["_batch"]) == ("bigint", "bigint")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    # a skipped stage ran no task, and the status store evicts skipped
+    # stages first once it holds spark.ui.retainedStages
+    infos = [i for i in map(tracker.getStageInfo, stages) if i is not None]
+    return out, (len(jobs), sum(i.numCompletedTasks for i in infos))
+
+
+def test_serving_epoch_reads_each_range_partition_once(spark, tmp_path):
+    """Beyond the jobs that prepare the range shuffle (the same plan's
+    ``.rdd`` runs exactly those), an epoch runs one job and one task per
+    range partition, however many batches it serves — and every one of
+    them carries the job group set when the first batch was asked for,
+    since the JVM thread serving the partitions inherits it. The epoch has
+    more batches than range partitions, so a job per batch cannot pass."""
+    rows = [(f"s{i // 2:03d}", i, i * 0.5) for i in range(60)]
+    dm = _synthetic_dm(spark, tmp_path, "jobs", rows)
+    n_parts, (prep_jobs, prep_tasks) = _under_group(
+        spark, lambda: dm._ranked_frame("valid", 7, 0).rdd.getNumPartitions())
+    assert n_parts > 2
+    batches, (jobs, tasks) = _under_group(
+        spark, lambda: list(dm.iter_pandas_batches("valid", batch_size=4, shuffle_seed=7)))
+    assert len(batches) == 15 > n_parts + 2
+    assert (jobs - prep_jobs, tasks - prep_tasks) == (n_parts, n_parts)
+    # the preparation: broadcast of the split table, range bounds sample,
+    # shuffle map stage
+    assert prep_jobs <= 3
+
+
+def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
+    """Closing the iterator after its first batch leaves nothing behind:
+    the same (seed, epoch) then serves the full order again, and the
+    session's stored RDDs are the same before, during and after an
+    epoch (the shuffle output is the epoch's only copy)."""
+    rows = [(f"s{i // 3:03d}", i, i * 0.5) for i in range(40)]
+    dm = _synthetic_dm(spark, tmp_path, "close", rows)
+    jsc = spark.sparkContext._jsc
+
+    def stored():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    def order(it):
+        return [k for b in it for k in b["rec_id"]]
+
+    before = stored()
+    full = order(dm.iter_pandas_batches("valid", batch_size=6, shuffle_seed=7, epoch=2))
+    assert sorted(full) == list(range(40))
+    it = dm.iter_pandas_batches("valid", batch_size=6, shuffle_seed=7, epoch=2)
+    first = next(it)
+    assert stored() == before
+    it.close()
+    assert first["rec_id"].tolist() == full[:6]
+    again = dm.iter_pandas_batches("valid", batch_size=6, shuffle_seed=7, epoch=2)
+    assert order(again) == full
+    assert stored() == before
+
+
+def test_serving_batches_equal_to_pandas(spark, tmp_path):
+    """Each served batch equals ``toPandas()`` of its rows — column names,
+    dtypes and values — on a split with date, timestamp, decimal, array,
+    map, struct, binary and all-null columns. Batches of 12 over 8 range
+    partitions of about 5 rows: one batch spans three partitions and the
+    last batch is short."""
+    import pandas as pd
+
+    path = str(tmp_path / "src_types")
+    spark.range(40).selectExpr(
+        "concat('s', lpad(cast(id div 2 as string), 3, '0')) AS subj",
+        "id AS rec_id",
+        "date_add(date'2024-02-27', cast(id AS int)) AS d",
+        "timestamp_seconds(1700000000 + id * 3607) AS ts",
+        "cast(id / 7 AS decimal(12, 4)) AS dec",
+        "IF(id % 5 = 0, NULL, sequence(0L, id % 4)) AS arr",
+        "map('k', id, 'k2', id * 2) AS m",
+        "named_struct('k', id, 'v', IF(id % 3 = 0, NULL, cast(id AS string))) AS st",
+        "cast(cast(id AS string) AS binary) AS bin",
+        "cast(NULL AS string) AS none_s",
+        "cast(NULL AS double) AS none_d",
+    ).write.parquet(path)
+    subjects = [f"s{i:03d}" for i in range(20)]
+    dm = DataModule(spark, {
+        "cache_root": str(tmp_path / "cache_types"),
+        "pipeline": [{"op": "source", "path": path}],
+        "subject_col": "subj",
+        "split": {"assignments": {s: "valid" for s in subjects}},
+    }).setup()
+    batch_size = 12
+    ranked = dm._ranked_frame("valid", 7, 0)
+    sizes = ranked.rdd.glom().map(len).collect()
+    owner = [p for p, n in enumerate(sizes) for _ in range(n)]  # range partition of each row
+    spans = [len(set(owner[b:b + batch_size])) for b in range(0, 40, batch_size)]
+    assert max(spans) >= 3, sizes
+    expected = ranked.toPandas()
+    served = list(dm.iter_pandas_batches("valid", batch_size=batch_size, shuffle_seed=7))
+    assert [len(b) for b in served] == [12, 12, 12, 4]
+    for i, got in enumerate(served):
+        want = expected.iloc[i * batch_size:(i + 1) * batch_size].reset_index(drop=True)
+        assert got.columns.tolist() == want.columns.tolist()
+        assert got.dtypes.tolist() == want.dtypes.tolist()
+        pd.testing.assert_frame_equal(got, want)
 
 
 def test_spec_corpus_prep_from_file(spark, sf_dir):

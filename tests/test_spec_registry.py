@@ -154,3 +154,30 @@ def test_underscore_annotation_keys_are_accepted(spark, sf_dir):
         {"op": "select", "cols": ["r_name"], "_why": {"nested": True}},
     ], sf_dir)
     assert df.columns == ["r_name"]
+
+
+def test_form_dependent_keys_are_spec_errors_before_any_job(spark, sf_dir):
+    """Keys only one form of an op needs are checked by the op itself,
+    before any side is built or any training job starts."""
+    # the session's first read of a table infers its schema in a job;
+    # take it here, outside the job group
+    compile_pipeline(spark, [{"op": "source", "table": "documents"}], sf_dir)
+    for op, match in (
+        ({"op": "quality_classifier", "coefs": [0.5, -0.5]}, "'intercept'"),
+        ({"op": "quality_classifier", "min_score": 0.5}, "'positive'"),
+        ({"op": "drift", "col": "doc_id", "against": {"table": "documents"}}, "'edges'"),
+    ):
+        _refused_without_jobs(spark, lambda: compile_pipeline(spark, [
+            {"op": "source", "table": "documents"}, op,
+        ], sf_dir), match)
+
+
+def test_second_stream_source_refused(spark, tmp_path):
+    """A second stream_source would silently replace the frame built so
+    far; like a second batch source, it is refused."""
+    (tmp_path / "in").mkdir()
+    src = {"op": "stream_source", "path": str(tmp_path / "in"),
+           "schema": "doc_id BIGINT, text STRING"}
+    _refused_without_jobs(spark, lambda: compile_stream_pipeline(spark, [
+        src, {"op": "filter", "expr": "doc_id > 0"}, src,
+    ]), "second 'stream_source'")
