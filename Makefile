@@ -1,6 +1,6 @@
 # Round workflow helpers (VERDICT r9 "Next round" #4).
 
-.PHONY: round-start test verify test-all test-slow bench bench-ext window-check
+.PHONY: round-start test verify test-all test-slow bench bench-ext bench-check window-check
 
 # FIRST command of every round: refresh grading telemetry so the
 # committed GRADE_WINDOW.json can never lag the driver's newest
@@ -36,6 +36,13 @@ bench:
 
 bench-ext:
 	python bench_ext.py
+
+# The benchmark's own output checks (record counts, each train record served
+# once per epoch, the same (seed, epoch) serving the same order, no failed
+# op) and its metric and layer-sum checks, on every workload untraced and
+# traced at tiny sizes.
+bench-check:
+	python3 perfbench/selftest.py
 
 # Strict-compare the current 50-query grading window at the driver's SF.
 # Runs the freshness tripwire first (same marker override as round-start).

@@ -37,7 +37,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: exactly the metadata a real catalog (Hive/Iceberg/Delta) persists with
 #: the table. METADATA only — never rows, never derived results — keyed by
 #: applicationId so a fresh session (potentially different reader confs,
-#: e.g. nanosAsLong) re-infers from the files.
+#: e.g. nanosAsLong) re-infers from the files. Each entry holds the
+#: table's replacement token next to its schema: (modification time,
+#: length) of the table's root, from its Hadoop ``FileStatus``.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -51,14 +53,34 @@ def clear_schema_cache() -> None:
     _SCHEMA_CACHE.clear()
 
 
+def _replacement_token(spark: SparkSession, path: str) -> tuple | None:
+    """(modification time, length) of ``path``'s root — it changes when
+    the table is written again — or None when the path does not exist.
+    One Hadoop ``getFileStatus`` call, local or remote; the ``Path`` class
+    is addressed by name, which saves a JVM round trip per package."""
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    try:
+        status = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    except Py4JJavaError:  # missing: the read below fails as the plain reader does
+        return None
+    return status.getModificationTime(), status.getLen()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one table (column pruning + predicate pushdown
     happen automatically because nothing is materialized here).
 
-    Tables are read-only for the life of a Spark application: the schema
-    inferred on the first load of a path is reused (``_SCHEMA_CACHE``), so
-    a table replaced in place with a different schema reads through the
-    stale one. Call :func:`clear_schema_cache` after replacing a table."""
+    The schema inferred on the first load of a path is reused
+    (``_SCHEMA_CACHE``) while the table's root keeps its modification
+    time and length; a table written again in place — a new root
+    directory or file — is inferred afresh on its next load. A change
+    below the root that leaves the root untouched (a file swapped inside
+    a partition directory) is not seen: call :func:`clear_schema_cache`
+    after such an edit."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Harden against host sessions not built by get_spark (e.g. the driver's
@@ -68,12 +90,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, name)
     key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+    token = _replacement_token(spark, path)
+    cached = _SCHEMA_CACHE.get(key)
+    if token is not None and cached is not None and cached[0] == token:
+        df = spark.read.schema(cached[1]).parquet(path)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        if token is not None:
+            _SCHEMA_CACHE[key] = (token, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long (nanosAsLong): truncate to micros.
         # Integer `div` keeps full precision (nanos exceed double's 2^53).

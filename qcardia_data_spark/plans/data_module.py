@@ -6,11 +6,13 @@ Reference flow (``src/qcardia_data/pipeline/data_module.py``):
 build transforms, route files, compute weights) → ``train_dataloader()``.
 
 Engine flow: ``DataModule(spark, config)`` → ``setup()`` (compile source
-pipeline, materialize to a fingerprint-keyed parquet cache, resolve the
-subject-level split, route records) → ``frame("train")`` (filtered, weighted
-lazy DataFrame) → ``iter_pandas_batches("train", ...)`` (the split streamed to
-the driver in serving order, one Spark job per range partition, cut into
-pandas batches there).
+pipeline, materialize to a fingerprint-keyed parquet cache, then one action
+that resolves the subject-level split and counts the records of every
+subject × weight group) → ``frame("train")`` (a narrow projection of the
+cached records: subject filter, split, counts and weights as literals) →
+``iter_pandas_batches("train", ...)`` (the split's one payload exchange, a
+range shuffle on the serving order, streamed to the driver one Spark job
+per wave of range partitions and cut into pandas batches there).
 
 Config keys::
 
@@ -24,25 +26,44 @@ Config keys::
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from collections import Counter
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qcardia_data_spark.operators.aggregates import group_weights_window
+from qcardia_data_spark.operators.joins import fresh_name
 from qcardia_data_spark.operators.windows import seeded_split
 from qcardia_data_spark.plans.cache import materialize, read_cache, route_splits
 from qcardia_data_spark.plans.spec import compile_pipeline
+
+#: name of the thread that fetches the next wave of range partitions
+PREFETCH_THREAD = "qds-serve-prefetch"
+# Spark groups every NaN together, Python keys a NaN by its identity: each
+# NaN weight value is mapped to this one object to make it one group
+_NAN = float("nan")
 
 
 class DataModule:
     def __init__(self, spark: SparkSession, config: dict):
         self.spark = spark
         self.config = config
-        self._routed: DataFrame | None = None
+        self._records: DataFrame | None = None
+        # (subject, *weight values, n_records, split) per subject × weight group
+        self._groups: list | None = None
         self.cache_path: str | None = None
         self.was_built: bool | None = None
 
     # -- lifecycle ---------------------------------------------------------
     def setup(self) -> "DataModule":
+        """Materialize the cache, then resolve the split and the weight
+        counts once, in one action: the records grouped by subject and
+        weight columns, counted and routed through the split assignment,
+        collected as a subjects × weight groups table. Every later
+        ``frame``, ``summary`` and epoch reads that table instead of
+        resolving the split again. Raises ``ValueError`` when records
+        belong to no split."""
         cfg = self.config
         self.cache_path, self.was_built = materialize(
             self.spark,
@@ -56,9 +77,22 @@ class DataModule:
             spec={"pipeline": cfg["pipeline"], "sf_dir": cfg.get("sf_dir")},
         )
         records = read_cache(self.spark, self.cache_path)
-        assignment = self._resolve_split(records)
-        self._routed = route_splits(records, assignment, on=[cfg["subject_col"]])
+        subject = cfg["subject_col"]
+        n = fresh_name("_n", records.columns)
+        counts = records.groupBy(subject, *self._weight_cols).agg(F.count(F.lit(1)).alias(n))
+        routed = route_splits(counts, self._resolve_split(records), on=[subject],
+                              fail_on_orphans=False)
+        groups = [tuple(r) for r in
+                  routed.select(subject, *self._weight_cols, n, "split").collect()]
+        n_orphans = sum(g[-2] for g in groups if g[-1] is None)
+        if n_orphans:
+            raise ValueError(f"{n_orphans} records belong to no split")
+        self._records, self._groups = records, groups
         return self
+
+    @property
+    def _weight_cols(self) -> list:
+        return list(self.config.get("weight_cols") or [])
 
     def _resolve_split(self, records: DataFrame) -> DataFrame:
         """Subject-level split: explicit assignment table when provided
@@ -81,14 +115,34 @@ class DataModule:
     def frame(self, split: str) -> DataFrame:
         """Lazy, filtered, weighted record frame for one split (the
         dataloader analog; weights = inverse group frequency over
-        ``weight_cols``, reference pipeline/utils.py:88-135)."""
-        if self._routed is None:
+        ``weight_cols``, reference pipeline/utils.py:88-135).
+
+        A narrow projection of the cached records — no join, window or
+        aggregate: an ``isin`` over the split's subjects (which the parquet
+        scan can use), ``split`` as a literal and, with ``weight_cols``,
+        ``cnt`` (records of the row's weight group in the split) and
+        ``weight`` (split total / ``cnt``) as literals keyed by weight
+        group, a null value being a group of its own. Columns:
+        ``[subject, other record columns…, split, cnt, weight]``."""
+        if self._groups is None:
             raise RuntimeError("call setup() first")
-        out = self._routed.filter(F.col("split") == split)
-        weight_cols = self.config.get("weight_cols")
+        groups = [g for g in self._groups if g[-1] == split]
+        records, subject = self._records, self.config["subject_col"]
+        out = records.filter(F.col(subject).isin(list(dict.fromkeys(g[0] for g in groups))))
+        cols = [subject, *[c for c in records.columns if c != subject],
+                F.lit(split).alias("split")]
+        weight_cols = self._weight_cols
         if weight_cols:
-            out = group_weights_window(out, weight_cols)
-        return out
+            per_group = Counter()
+            for g in groups:
+                per_group[tuple(_NAN if v != v else v for v in g[1:-2])] += g[-2]
+            total = sum(per_group.values())
+            types = [records.schema[c].dataType for c in weight_cols]
+            cnt = {k: F.lit(v).cast("bigint") for k, v in per_group.items()}
+            weight = {k: F.lit(total / v) for k, v in per_group.items()}
+            cols += [_by_group(weight_cols, types, cnt, "bigint").alias("cnt"),
+                     _by_group(weight_cols, types, weight, "double").alias("weight")]
+        return out.select(*cols)
 
     def iter_pandas_batches(
         self, split: str, batch_size: int = 128, shuffle_seed=None, epoch: int = 0,
@@ -100,22 +154,26 @@ class DataModule:
         new epoch ⇒ new permutation — what the reference's per-epoch
         DataLoader shuffle provides).
 
-        One path: ``_ranked_frame`` streams to the driver as Arrow record
-        batches, one Spark job per range partition with the next partition
-        prefetched, and batches are cut from that stream on the driver.
-        Range partitions hold ascending key ranges and each is sorted, so
-        partition order is the global serving order: no numbering, no
-        stored copy beyond the shuffle output, and each range partition is
-        read once per epoch. A batch inside a partition already on the
-        driver launches no job. Driver memory: at most 2 range partitions
-        in the JVM (current and prefetched); in Python one Arrow batch plus
-        fewer than ``batch_size`` carried rows. Each batch equals
-        ``toPandas()`` of its rows in names, dtypes and values.
+        One path: ``_ranked_frame`` — the payload's one exchange, since
+        ``frame`` is a narrow projection — streams to the driver as Arrow
+        record batches, one Spark job per wave of ``defaultParallelism``
+        range partitions (all tasks of a wave run at once) with the next
+        wave prefetched, and batches are cut from that stream on the
+        driver. Range partitions hold ascending key ranges and each is
+        sorted, so partition order is the global serving order: no
+        numbering, no stored copy beyond the shuffle output, and each range
+        partition is read once per epoch. A batch inside a wave already on
+        the driver launches no job. Driver memory: at most two waves of
+        range partitions as Arrow bytes (current and prefetched) plus fewer
+        than ``batch_size`` carried rows; a larger
+        ``spark.sql.shuffle.partitions`` makes each partition smaller. Each
+        batch equals ``toPandas()`` of its rows in names, dtypes and values.
 
-        The epoch's Spark jobs all carry the job group that was set when
-        the first batch was requested: the JVM thread serving the
-        partitions inherits it. Closing the generator early tells that
-        thread to stop; a partition already prefetched is discarded.
+        Each wave's job carries the job group that was set when the batch
+        that started it was requested: the prefetch thread inherits the
+        caller's job group. An error in a wave is raised in the consumer;
+        closing the generator early waits for the prefetch in flight and
+        discards it.
         """
         if batch_size < 1:
             raise ValueError(f"batch_size must be at least 1, got {batch_size}")
@@ -164,13 +222,29 @@ class DataModule:
 
     def summary(self) -> DataFrame:
         """Files & subjects per split (reference ``print_dataset_summary``,
-        pipeline/utils.py:74-83)."""
-        if self._routed is None:
+        pipeline/utils.py:74-83), from the table ``setup`` collected."""
+        if self._groups is None:
             raise RuntimeError("call setup() first")
-        return self._routed.groupBy("split").agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.countDistinct(self.config["subject_col"]).alias("n_subjects"),
-        )
+        n_records, subjects = Counter(), {}
+        for g in self._groups:
+            n_records[g[-1]] += g[-2]
+            subjects.setdefault(g[-1], set()).add(g[0])
+        return self.spark.createDataFrame(
+            [(s, n_records[s], len(subjects[s])) for s in sorted(n_records)],
+            "split string, n_records bigint, n_subjects bigint")
+
+
+def _by_group(cols: list, types: list, values: dict, dtype: str) -> Column:
+    """``values[group]`` for the row's weight group, a group being the
+    tuple of ``cols`` values (null-safe: a null is a group value too)."""
+    if not values:
+        return F.lit(None).cast(dtype)
+    *keyed, (_, out) = values.items()
+    for key, value in keyed:
+        match = reduce(operator.and_, [
+            F.col(c).eqNullSafe(F.lit(v).cast(t)) for c, t, v in zip(cols, types, key)])
+        out = F.when(match, value).otherwise(out)
+    return out
 
 
 def _arrow_pandas_batches(df: DataFrame, batch_size: int):
@@ -178,15 +252,18 @@ def _arrow_pandas_batches(df: DataFrame, batch_size: int):
     (the last may be shorter), each converted as ``toPandas`` converts.
 
     Every private PySpark call of the serving path is here: the JVM's
-    ``toArrowBatchRdd`` served one partition per job, with prefetch,
-    by ``toLocalIteratorAndServe`` (the call behind ``toLocalIterator``),
-    and ``toPandas``'s own Arrow schema and per-column converters.
+    ``toArrowBatchRdd`` run one job per wave of ``defaultParallelism``
+    partitions by ``PythonRDD.runJob`` (the call behind ``sc.runJob``),
+    read back over its local socket, and ``toPandas``'s own Arrow schema
+    and per-column converters. A ``PREFETCH_THREAD`` fetches the next wave
+    while the current one is cut; being an ``InheritableThread``, its job
+    carries the caller's job group.
     """
     import pandas as pd
     import pyarrow as pa
     from pyspark.serializers import NoOpSerializer
     from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
-    from pyspark.util import _local_iterator_from_socket
+    from pyspark.util import InheritableThread, _load_from_socket
 
     spark, fields = df.sparkSession, df.schema.fields
     jconf = spark._jconf
@@ -211,25 +288,53 @@ def _arrow_pandas_batches(df: DataFrame, batch_size: int):
         return pd.concat(
             [conv(col) for conv, (_, col) in zip(converters, pdf.items())], axis="columns")
 
-    sock = spark.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
-        df._jdf.toArrowBatchRdd(), True)
+    sc = spark.sparkContext
+    jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    n_parts, width = jrdd.getNumPartitions(), sc.defaultParallelism
+    waves = [list(range(p, min(p + width, n_parts))) for p in range(0, n_parts, width)]
+
+    def fetch(parts, box):
+        try:
+            sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
+            box.append(list(_load_from_socket(sock, NoOpSerializer())))
+        except Exception as e:  # re-raised in the consumer
+            box.append(e)
+
+    def prefetch(parts):
+        box: list = []
+        thread = InheritableThread(target=fetch, args=(parts, box), name=PREFETCH_THREAD,
+                                   daemon=True)
+        thread.start()
+        return thread, box
+
+    if not waves:
+        return
     carry, n_carry = [], 0  # < batch_size rows, copied out of their Arrow batch
-    messages = _local_iterator_from_socket(sock, NoOpSerializer())
+    pending = prefetch(waves[0])
     try:
-        for msg in messages:
-            rb = pa.ipc.read_record_batch(pa.py_buffer(msg), schema)
-            start = 0
-            while n_carry + rb.num_rows - start >= batch_size:
-                take = batch_size - n_carry
-                yield to_pandas(carry + [rb.slice(start, take)])
-                carry, n_carry, start = [], 0, start + take
-            if start < rb.num_rows:
-                tail = rb.slice(start)
-                carry.append(pa.RecordBatch.from_arrays(
-                    [pa.concat_arrays([c]) for c in tail.columns], schema=schema))
-                n_carry += tail.num_rows
+        for following in [*waves[1:], None]:
+            (thread, box), pending = pending, None
+            thread.join()
+            messages = box.pop()
+            if isinstance(messages, Exception):
+                raise messages
+            if following is not None:
+                pending = prefetch(following)
+            for msg in messages:
+                rb = pa.ipc.read_record_batch(pa.py_buffer(msg), schema)
+                start = 0
+                while n_carry + rb.num_rows - start >= batch_size:
+                    take = batch_size - n_carry
+                    yield to_pandas(carry + [rb.slice(start, take)])
+                    carry, n_carry, start = [], 0, start + take
+                if start < rb.num_rows:
+                    tail = rb.slice(start)
+                    carry.append(pa.RecordBatch.from_arrays(
+                        [pa.concat_arrays([c]) for c in tail.columns], schema=schema))
+                    n_carry += tail.num_rows
     finally:
-        # frees the socket reader, which tells the JVM to stop serving
-        messages.close()
+        # a prefetch still in flight finishes and is dropped
+        if pending is not None:
+            pending[0].join()
     if carry:
         yield to_pandas(carry)

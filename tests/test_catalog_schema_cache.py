@@ -42,9 +42,11 @@ def test_missing_path_raises_like_plain_reader(spark, tmp_path):
 def test_cache_is_metadata_only_and_session_keyed(spark, sf_dir):
     C._SCHEMA_CACHE.clear()
     C.load_table(spark, sf_dir, "region")
-    ((app_id, path), schema), = list(C._SCHEMA_CACHE.items())
+    ((app_id, path), (token, schema)), = list(C._SCHEMA_CACHE.items())
     assert app_id == spark.sparkContext.applicationId
     assert path.endswith("region.parquet")
+    # the replacement token: the root's modification time and length
+    assert len(token) == 2 and all(isinstance(v, int) for v in token)
     # a StructType, not rows/bytes
     from pyspark.sql.types import StructType
 
@@ -58,8 +60,10 @@ def test_replaced_table_is_reinferred_after_clear_schema_cache(spark, tmp_path):
     assert C.load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
     spark.createDataFrame([(2, "b", "c")], "r_regionkey long, r_name string, r_comment string") \
         .write.mode("overwrite").parquet(str(tmp_path / "region.parquet"))
-    # read-only contract: the cached schema still applies to the replaced files
-    assert C.load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    # the replaced table is noticed without clear_schema_cache()
+    replaced = C.load_table(spark, str(tmp_path), "region")
+    assert replaced.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert [tuple(r) for r in replaced.collect()] == [(2, "b", "c")]
     C.clear_schema_cache()
     fresh = C.load_table(spark, str(tmp_path), "region")
     assert fresh.columns == ["r_regionkey", "r_name", "r_comment"]

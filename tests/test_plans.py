@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.plans import cache as C
-from qcardia_data_spark.plans.data_module import DataModule
+from qcardia_data_spark.plans.data_module import (
+    PREFETCH_THREAD,
+    DataModule,
+    _arrow_pandas_batches,
+)
 from qcardia_data_spark.plans.fingerprint import (
     cache_name,
     normalize_spec,
@@ -328,30 +332,43 @@ def _under_group(spark, fn):
 
 def test_serving_epoch_reads_each_range_partition_once(spark, tmp_path):
     """Beyond the jobs that prepare the range shuffle (the same plan's
-    ``.rdd`` runs exactly those), an epoch runs one job and one task per
-    range partition, however many batches it serves — and every one of
-    them carries the job group set when the first batch was asked for,
-    since the JVM thread serving the partitions inherits it. The epoch has
-    more batches than range partitions, so a job per batch cannot pass."""
+    ``.rdd`` runs exactly those), an epoch runs one task per range
+    partition and one job per wave of ``defaultParallelism`` partitions,
+    however many batches it serves — and every one of them carries the
+    caller's job group, the prefetched waves included. The epoch has more
+    batches than range partitions, so a job per batch cannot pass; on
+    ``local[4]`` its 8 partitions are two waves."""
+    import math
+
     rows = [(f"s{i // 2:03d}", i, i * 0.5) for i in range(60)]
     dm = _synthetic_dm(spark, tmp_path, "jobs", rows)
     n_parts, (prep_jobs, prep_tasks) = _under_group(
         spark, lambda: dm._ranked_frame("valid", 7, 0).rdd.getNumPartitions())
     assert n_parts > 2
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     batches, (jobs, tasks) = _under_group(
         spark, lambda: list(dm.iter_pandas_batches("valid", batch_size=4, shuffle_seed=7)))
-    assert len(batches) == 15 > n_parts + 2
-    assert (jobs - prep_jobs, tasks - prep_tasks) == (n_parts, n_parts)
-    # the preparation: broadcast of the split table, range bounds sample,
-    # shuffle map stage
-    assert prep_jobs <= 3
+    assert len(batches) == 15 > n_parts
+    waves = math.ceil(n_parts / spark.sparkContext.defaultParallelism)
+    assert (jobs - prep_jobs, tasks - prep_tasks) == (waves, n_parts)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped  # no job left the group
+    # the preparation: range bounds sample, shuffle map stage
+    assert prep_jobs <= 2
+
+
+def _prefetch_threads():
+    import threading
+
+    return [t for t in threading.enumerate() if t.name == PREFETCH_THREAD]
 
 
 def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
     """Closing the iterator after its first batch leaves nothing behind:
-    the same (seed, epoch) then serves the full order again, and the
-    session's stored RDDs are the same before, during and after an
-    epoch (the shuffle output is the epoch's only copy)."""
+    no prefetch thread is alive, the same (seed, epoch) then serves the
+    full order again, and the session's stored RDDs are the same before,
+    during and after an epoch (the shuffle output is the epoch's only
+    copy)."""
     rows = [(f"s{i // 3:03d}", i, i * 0.5) for i in range(40)]
     dm = _synthetic_dm(spark, tmp_path, "close", rows)
     jsc = spark.sparkContext._jsc
@@ -369,10 +386,106 @@ def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
     first = next(it)
     assert stored() == before
     it.close()
+    assert not _prefetch_threads()
     assert first["rec_id"].tolist() == full[:6]
     again = dm.iter_pandas_batches("valid", batch_size=6, shuffle_seed=7, epoch=2)
     assert order(again) == full
     assert stored() == before
+
+
+def test_serving_error_in_a_later_wave_reaches_the_consumer(spark):
+    """A row of the last range partition fails while it is computed; that
+    partition is in the second wave, fetched while the first wave is cut.
+    The consumer gets every full batch of the first wave, then the error
+    — it neither hangs nor loses it — and no prefetch thread is left."""
+    width = spark.sparkContext.defaultParallelism
+    n_rows = 8 * 2 * width
+    ranked = spark.range(0, n_rows, numPartitions=1).repartitionByRange(2 * width, "id") \
+        .sortWithinPartitions("id")
+    sizes = ranked.rdd.glom().map(len).collect()
+    assert len(sizes) == 2 * width and sizes[-1] > 0, sizes
+    failing = ranked.withColumn("v", F.when(
+        F.col("id") == n_rows - 1, F.raise_error(F.lit("second-wave row failed")),
+    ).otherwise(F.col("id")))
+    served = []
+    with pytest.raises(Exception, match="second-wave row failed"):
+        for batch in _arrow_pandas_batches(failing, 4):
+            served += batch["id"].tolist()
+    assert served == list(range(sum(sizes[:width]) // 4 * 4))
+    assert not _prefetch_threads()
+
+
+def _reference_frame(spark, dm, split):
+    """``frame(split)`` as a lazy routed frame computes it: the records
+    left-joined to the split assignment, then the weighting window."""
+    from qcardia_data_spark.operators.aggregates import group_weights_window
+
+    records = C.read_cache(spark, dm.cache_path)
+    routed = C.route_splits(records, dm._resolve_split(records), [dm.config["subject_col"]])
+    out = routed.filter(F.col("split") == split)
+    weight_cols = dm.config.get("weight_cols")
+    return group_weights_window(out, weight_cols) if weight_cols else out
+
+
+def _assert_frame_parity(spark, dm, split):
+    """``frame(split)`` equals the routed-frame formula in column names,
+    order, dtypes and values (``cnt`` and ``weight`` included), so the
+    serving order, which hashes every column's string form, is the same."""
+    got, want = dm.frame(split), _reference_frame(spark, dm, split)
+    assert got.dtypes == want.dtypes
+    rows = [sorted(repr(tuple(r)) for r in df.collect()) for df in (got, want)]  # NaN-safe
+    assert rows[0] == rows[1]
+    assert rows[0], f"empty {split} split"
+
+
+def test_frame_split_and_weights_equal_routed_window(spark, tmp_path):
+    """Three weight columns, one with nulls (a null is a group of its
+    own) and one with NaNs (all NaNs are one group, as Spark groups them):
+    each split's frame equals the routed-frame formula, and serving it
+    yields the formula's ranked order."""
+    path = str(tmp_path / "src_weights")
+    spark.range(48).selectExpr(
+        "concat('s', lpad(cast(id div 4 as string), 2, '0')) AS subj",
+        "id AS rec_id",
+        "CASE id % 5 WHEN 0 THEN NULL WHEN 1 THEN 'A' ELSE 'B' END AS site",
+        "id % 3 = 0 AS is_ed",
+        "IF(id % 4 = 1, double('NaN'), 1.5) AS phase",
+    ).write.parquet(path)
+    dm = DataModule(spark, {
+        "cache_root": str(tmp_path / "cache_weights"),
+        "pipeline": [{"op": "source", "path": path}],
+        "subject_col": "subj",
+        "split": {"valid_fraction": 0.3, "seed": "w2"},
+        "weight_cols": ["site", "is_ed", "phase"],
+    }).setup()
+    for split in ("train", "valid"):
+        _assert_frame_parity(spark, dm, split)
+    ref = _reference_frame(spark, dm, "train")
+    order = dm._order_key(ref, 7, 1)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    want = ref.repartitionByRange(n_parts, *order).sortWithinPartitions(*order)
+    served = [k for b in dm.iter_pandas_batches("train", batch_size=5, shuffle_seed=7, epoch=1)
+              for k in b["rec_id"]]
+    assert served == [r["rec_id"] for r in want.collect()]
+    summary = {r["split"]: (r["n_records"], r["n_subjects"]) for r in dm.summary().collect()}
+    assert sum(n for n, _ in summary.values()) == 48
+    assert sum(s for _, s in summary.values()) == 12
+
+
+def test_data_module_orphan_subject_refused_in_setup(spark, tmp_path):
+    """An explicit assignment that misses a subject leaves its records in
+    no split: ``setup()`` refuses, naming how many."""
+    rows = [(f"s{i // 3}", i, float(i)) for i in range(9)]
+    path = str(tmp_path / "src_orphan")
+    spark.createDataFrame(rows, "subj string, rec_id long, val double").write.parquet(path)
+    dm = DataModule(spark, {
+        "cache_root": str(tmp_path / "cache_orphan"),
+        "pipeline": [{"op": "source", "path": path}],
+        "subject_col": "subj",
+        "split": {"assignments": {"s0": "train", "s1": "valid"}},
+    })
+    with pytest.raises(ValueError, match="3 records belong to no split"):
+        dm.setup()
 
 
 def test_serving_batches_equal_to_pandas(spark, tmp_path):
@@ -456,9 +569,8 @@ def test_data_module_lifecycle(spark, sf_dir, tmp_path):
     n_orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).count()
     assert train.count() + valid.count() == n_orders
 
-    # weights are inverse-frequency within the split
-    r = train.limit(1).collect()[0]
-    assert r["weight"] > 0
+    # split, cnt and weight equal the routed-frame formula
+    _assert_frame_parity(spark, dm, "train")
 
     # second setup() is a cache hit and identical split (determinism)
     dm2 = DataModule(spark, config).setup()
