@@ -55,9 +55,10 @@ def clear_schema_cache() -> None:
 
 def _replacement_token(spark: SparkSession, path: str) -> tuple | None:
     """(modification time, length) of ``path``'s root — it changes when
-    the table is written again — or None when the path does not exist.
-    One Hadoop ``getFileStatus`` call, local or remote; the ``Path`` class
-    is addressed by name, which saves a JVM round trip per package."""
+    the table is written again — or None when the path does not exist or
+    its root carries no such token. One Hadoop ``getFileStatus`` call; the
+    ``Path`` class is addressed by name, which saves a JVM round trip per
+    package."""
     from py4j.java_gateway import JavaClass
     from py4j.protocol import Py4JJavaError
 
@@ -67,7 +68,18 @@ def _replacement_token(spark: SparkSession, path: str) -> tuple | None:
         status = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).getFileStatus(jpath)
     except Py4JJavaError:  # missing: the read below fails as the plain reader does
         return None
-    return status.getModificationTime(), status.getLen()
+    return _token(status)
+
+
+def _token(status) -> tuple | None:
+    """The replacement token of a Hadoop ``FileStatus``. Object stores
+    (S3A, GCS, ABFS without a hierarchical namespace) give a directory
+    modification time 0 and length 0 however its contents change: no
+    token, so such a table is never served from the cache."""
+    mtime = status.getModificationTime()
+    if mtime == 0 and status.isDirectory():
+        return None
+    return mtime, status.getLen()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -77,9 +89,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The schema inferred on the first load of a path is reused
     (``_SCHEMA_CACHE``) while the table's root keeps its modification
     time and length; a table written again in place — a new root
-    directory or file — is inferred afresh on its next load. A change
-    below the root that leaves the root untouched (a file swapped inside
-    a partition directory) is not seen: call :func:`clear_schema_cache`
+    directory or file — is inferred afresh on its next load. That holds
+    on filesystems whose directory modification times change with their
+    contents (local, HDFS); a directory root on an object store has no
+    such time, so its schema is inferred on every load. A change below
+    the root that leaves the root untouched (a file swapped inside a
+    partition directory) is not seen: call :func:`clear_schema_cache`
     after such an edit."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")

@@ -38,8 +38,6 @@ from qcardia_data_spark.operators.windows import seeded_split
 from qcardia_data_spark.plans.cache import materialize, read_cache, route_splits
 from qcardia_data_spark.plans.spec import compile_pipeline
 
-#: name of the thread that fetches the next wave of range partitions
-PREFETCH_THREAD = "qds-serve-prefetch"
 # Spark groups every NaN together, Python keys a NaN by its identity: each
 # NaN weight value is mapped to this one object to make it one group
 _NAN = float("nan")
@@ -157,23 +155,29 @@ class DataModule:
         One path: ``_ranked_frame`` — the payload's one exchange, since
         ``frame`` is a narrow projection — streams to the driver as Arrow
         record batches, one Spark job per wave of ``defaultParallelism``
-        range partitions (all tasks of a wave run at once) with the next
-        wave prefetched, and batches are cut from that stream on the
-        driver. Range partitions hold ascending key ranges and each is
-        sorted, so partition order is the global serving order: no
-        numbering, no stored copy beyond the shuffle output, and each range
-        partition is read once per epoch. A batch inside a wave already on
-        the driver launches no job. Driver memory: at most two waves of
-        range partitions as Arrow bytes (current and prefetched) plus fewer
-        than ``batch_size`` carried rows; a larger
-        ``spark.sql.shuffle.partitions`` makes each partition smaller. Each
+        range partitions (all tasks of a wave run at once), and batches
+        are cut from that stream on the driver. Range partitions hold
+        ascending key ranges and each is sorted, so partition order is the
+        global serving order: no numbering, no stored copy beyond the
+        shuffle output, and each range partition is read once per epoch. A
+        batch inside a wave already on the driver launches no job; the
+        next wave's job starts when the first batch that needs one of its
+        rows is asked for.
+
+        Driver memory: one wave — at most ``defaultParallelism`` range
+        partitions as Arrow bytes — in the JVM, read by Python one Arrow
+        batch at a time, plus fewer than ``batch_size`` carried rows. A
+        wave is ``defaultParallelism / spark.sql.shuffle.partitions`` of
+        the split: with no more shuffle partitions than cores the whole
+        split is one wave, collected to the driver JVM (a wave larger than
+        ``spark.driver.maxResultSize`` fails its job); a larger
+        ``spark.sql.shuffle.partitions`` makes each wave smaller. Each
         batch equals ``toPandas()`` of its rows in names, dtypes and values.
 
-        Each wave's job carries the job group that was set when the batch
-        that started it was requested: the prefetch thread inherits the
-        caller's job group. An error in a wave is raised in the consumer;
-        closing the generator early waits for the prefetch in flight and
-        discards it.
+        Each wave's job runs in the consumer's thread, so it carries the
+        job group set when the batch that started it was asked for, and
+        an error in a wave is raised in the consumer. Closing the
+        generator early closes the wave's socket; no job is in flight.
         """
         if batch_size < 1:
             raise ValueError(f"batch_size must be at least 1, got {batch_size}")
@@ -254,16 +258,19 @@ def _arrow_pandas_batches(df: DataFrame, batch_size: int):
     Every private PySpark call of the serving path is here: the JVM's
     ``toArrowBatchRdd`` run one job per wave of ``defaultParallelism``
     partitions by ``PythonRDD.runJob`` (the call behind ``sc.runJob``),
-    read back over its local socket, and ``toPandas``'s own Arrow schema
-    and per-column converters. A ``PREFETCH_THREAD`` fetches the next wave
-    while the current one is cut; being an ``InheritableThread``, its job
-    carries the caller's job group.
+    read back over its local socket one Arrow batch at a time, and
+    ``toPandas``'s own Arrow schema and per-column converters. A wave's
+    job runs in the consumer's thread when the consumer first asks for a
+    row of that wave, so it carries the consumer's job group and its
+    error reaches the consumer. Until its rows are read, a wave is held in
+    the driver JVM (the job's result); Python holds one Arrow batch and
+    fewer than ``batch_size`` carried rows.
     """
     import pandas as pd
     import pyarrow as pa
     from pyspark.serializers import NoOpSerializer
     from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
-    from pyspark.util import InheritableThread, _load_from_socket
+    from pyspark.util import _create_local_socket
 
     spark, fields = df.sparkSession, df.schema.fields
     jconf = spark._jconf
@@ -291,36 +298,14 @@ def _arrow_pandas_batches(df: DataFrame, batch_size: int):
     sc = spark.sparkContext
     jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
     n_parts, width = jrdd.getNumPartitions(), sc.defaultParallelism
-    waves = [list(range(p, min(p + width, n_parts))) for p in range(0, n_parts, width)]
-
-    def fetch(parts, box):
-        try:
-            sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
-            box.append(list(_load_from_socket(sock, NoOpSerializer())))
-        except Exception as e:  # re-raised in the consumer
-            box.append(e)
-
-    def prefetch(parts):
-        box: list = []
-        thread = InheritableThread(target=fetch, args=(parts, box), name=PREFETCH_THREAD,
-                                   daemon=True)
-        thread.start()
-        return thread, box
-
-    if not waves:
-        return
     carry, n_carry = [], 0  # < batch_size rows, copied out of their Arrow batch
-    pending = prefetch(waves[0])
-    try:
-        for following in [*waves[1:], None]:
-            (thread, box), pending = pending, None
-            thread.join()
-            messages = box.pop()
-            if isinstance(messages, Exception):
-                raise messages
-            if following is not None:
-                pending = prefetch(following)
-            for msg in messages:
+    for first in range(0, n_parts, width):
+        wave = list(range(first, min(first + width, n_parts)))
+        # the socket is read lazily and closed with the generator, which
+        # lets the JVM drop the rest of the wave
+        sockfile = _create_local_socket(sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, wave))
+        with sockfile:
+            for msg in NoOpSerializer().load_stream(sockfile):
                 rb = pa.ipc.read_record_batch(pa.py_buffer(msg), schema)
                 start = 0
                 while n_carry + rb.num_rows - start >= batch_size:
@@ -332,9 +317,5 @@ def _arrow_pandas_batches(df: DataFrame, batch_size: int):
                     carry.append(pa.RecordBatch.from_arrays(
                         [pa.concat_arrays([c]) for c in tail.columns], schema=schema))
                     n_carry += tail.num_rows
-    finally:
-        # a prefetch still in flight finishes and is dropped
-        if pending is not None:
-            pending[0].join()
     if carry:
         yield to_pandas(carry)

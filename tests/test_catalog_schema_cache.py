@@ -68,3 +68,25 @@ def test_replaced_table_is_reinferred_after_clear_schema_cache(spark, tmp_path):
     fresh = C.load_table(spark, str(tmp_path), "region")
     assert fresh.columns == ["r_regionkey", "r_name", "r_comment"]
     assert [tuple(r) for r in fresh.collect()] == [(2, "b", "c")]
+
+
+def test_directory_without_modification_time_is_never_cached(spark, sf_dir, monkeypatch):
+    """Object stores list a directory with modification time 0 and length
+    0 whatever its contents: such a root has no replacement token, so its
+    table is inferred on every load instead of through a schema that may
+    be stale."""
+    from types import SimpleNamespace
+
+    def status(is_dir, mtime, length):
+        return SimpleNamespace(isDirectory=lambda: is_dir, getModificationTime=lambda: mtime,
+                               getLen=lambda: length)
+
+    assert C._token(status(True, 0, 0)) is None
+    assert C._token(status(True, 1700000000000, 0)) == (1700000000000, 0)
+    assert C._token(status(False, 0, 512)) == (0, 512)
+    C.clear_schema_cache()
+    monkeypatch.setattr(C, "_token", lambda status: None)
+    first = C.load_table(spark, sf_dir, "region")
+    again = C.load_table(spark, sf_dir, "region")
+    assert not C._SCHEMA_CACHE
+    assert again.schema == first.schema and again.count() == first.count()

@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qcardia_data_spark.plans import cache as C
-from qcardia_data_spark.plans.data_module import (
-    PREFETCH_THREAD,
-    DataModule,
-    _arrow_pandas_batches,
-)
+from qcardia_data_spark.plans.data_module import DataModule, _arrow_pandas_batches
 from qcardia_data_spark.plans.fingerprint import (
     cache_name,
     normalize_spec,
@@ -335,7 +331,7 @@ def test_serving_epoch_reads_each_range_partition_once(spark, tmp_path):
     ``.rdd`` runs exactly those), an epoch runs one task per range
     partition and one job per wave of ``defaultParallelism`` partitions,
     however many batches it serves — and every one of them carries the
-    caller's job group, the prefetched waves included. The epoch has more
+    caller's job group. The epoch has more
     batches than range partitions, so a job per batch cannot pass; on
     ``local[4]`` its 8 partitions are two waves."""
     import math
@@ -357,15 +353,35 @@ def test_serving_epoch_reads_each_range_partition_once(spark, tmp_path):
     assert prep_jobs <= 2
 
 
-def _prefetch_threads():
-    import threading
-
-    return [t for t in threading.enumerate() if t.name == PREFETCH_THREAD]
+def test_serving_holds_one_wave_on_the_driver(spark):
+    """The driver memory bound of the docstring: an epoch reaches the
+    driver one wave of at most ``defaultParallelism`` partitions at a
+    time, and a wave's job starts only when the consumer asks for the
+    first batch that needs one of its rows — never ahead of it. Three
+    waves of 6-row partitions, the last wave one partition, served in
+    batches of 4 with one ``next()`` per job group."""
+    width = spark.sparkContext.defaultParallelism
+    n_parts, per = 2 * width + 1, 6
+    it = _arrow_pandas_batches(spark.range(0, n_parts * per, numPartitions=n_parts), 4)
+    waves_reached, got, want = 0, [], []
+    while True:
+        batch, counts = _under_group(spark, lambda: next(it, None))
+        if batch is None:
+            assert counts == (0, 0)
+            break
+        ids = batch["id"].tolist()
+        reached = ids[-1] // per // width + 1
+        parts = min(reached * width, n_parts) - min(waves_reached * width, n_parts)
+        got.append(counts)
+        want.append((reached - waves_reached, parts))
+        waves_reached = reached
+    assert got == want
+    assert waves_reached == 3 and sum(j for j, _ in got) == 3
 
 
 def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
     """Closing the iterator after its first batch leaves nothing behind:
-    no prefetch thread is alive, the same (seed, epoch) then serves the
+    no job is running, the same (seed, epoch) then serves the
     full order again, and the session's stored RDDs are the same before,
     during and after an epoch (the shuffle output is the epoch's only
     copy)."""
@@ -386,7 +402,7 @@ def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
     first = next(it)
     assert stored() == before
     it.close()
-    assert not _prefetch_threads()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     assert first["rec_id"].tolist() == full[:6]
     again = dm.iter_pandas_batches("valid", batch_size=6, shuffle_seed=7, epoch=2)
     assert order(again) == full
@@ -395,9 +411,8 @@ def test_serving_close_mid_epoch_then_reserve(spark, tmp_path):
 
 def test_serving_error_in_a_later_wave_reaches_the_consumer(spark):
     """A row of the last range partition fails while it is computed; that
-    partition is in the second wave, fetched while the first wave is cut.
-    The consumer gets every full batch of the first wave, then the error
-    — it neither hangs nor loses it — and no prefetch thread is left."""
+    partition is in the second wave. The consumer gets every full batch
+    of the first wave, then the error — it neither hangs nor loses it."""
     width = spark.sparkContext.defaultParallelism
     n_rows = 8 * 2 * width
     ranked = spark.range(0, n_rows, numPartitions=1).repartitionByRange(2 * width, "id") \
@@ -412,7 +427,6 @@ def test_serving_error_in_a_later_wave_reaches_the_consumer(spark):
         for batch in _arrow_pandas_batches(failing, 4):
             served += batch["id"].tolist()
     assert served == list(range(sum(sizes[:width]) // 4 * 4))
-    assert not _prefetch_threads()
 
 
 def _reference_frame(spark, dm, split):
