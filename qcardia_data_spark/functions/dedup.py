@@ -1784,37 +1784,6 @@ def auto_index_buckets(n_rows: int, target_rows: int = 2048) -> int:
     return min(1 << 20, 2 ** math.ceil(math.log2(n_rows / target_rows)))
 
 
-def _resolve_auto_buckets(
-    value, resolved_rows: int | None, old_meta: dict | None, meta_key: str,
-    fn_name: str, target_rows: int = 2048,
-) -> int:
-    """Resolve an ``"auto"`` bucket-count knob on a standing-index writer.
-
-    - fresh build (``old_meta`` None, overwrite): size from the rows
-      about to be written via :func:`auto_index_buckets`;
-    - append onto an existing index: the layout is frozen at build time —
-      ``"auto"`` resolves to the index's OWN meta value (re-bucketing is
-      a rebuild, never an append);
-    - append onto a legacy no-meta index: REFUSE — guessing a geometry
-      for an index whose layout is unknown is exactly the silent
-      wrong-partition class the meta files exist to prevent.
-    An explicit int passes through unchanged (and appends still validate
-    it against the meta downstream).
-    """
-    if value != "auto":
-        return int(value)
-    if old_meta is not None:
-        return int(old_meta[meta_key])
-    if resolved_rows is None:
-        raise ValueError(
-            f"{fn_name}: {meta_key}='auto' on append requires the index's "
-            "_meta (legacy no-meta index — pass the build's explicit "
-            "bucket count instead)"
-        )
-    return auto_index_buckets(resolved_rows, target_rows)
-
-
-_SIG_META_PARAMS = ("n_bands", "shingle_n", "n_sig_buckets", "n_id_buckets")
 _NUMERIC_ID_TYPES = frozenset(
     {"tinyint", "smallint", "int", "bigint", "float", "double"}
 )
@@ -1836,14 +1805,100 @@ def _id_as_meta_comparable(raw: str | None, id_type: str):
     return float(raw) if id_type in _NUMERIC_ID_TYPES else raw
 
 
+# per standing dedup index kind: the operator that appends batches to it
+# and the function that builds it
+_INDEX_OPS = {
+    "sig": ("near_dedup_incremental", "write_signature_index"),
+    "win": ("winnow_incremental", "write_winnow_index"),
+    "h64": ("hamming64_index_probe", "write_hamming64_index"),
+}
+
+
+def _index_manifest(batch: DataFrame, path: str, kind: str, id_col: str):
+    """``(manifest, batch id type)`` of the ``kind`` index at ``path``.
+    Refuses an index without a manifest, and a batch whose id column or
+    type differs from the index's (an id compared across types breaks
+    the monotone check and the same-id guards)."""
+    fn, build = _INDEX_OPS[kind]
+    meta = readers.read_meta_json(batch.sparkSession, path, kind)
+    if meta is None:
+        raise ValueError(
+            f"{fn}: no _meta.json at {path!r} — the index was not written "
+            f"by {build} (or the path is wrong). Rebuild it; probing with "
+            "guessed parameters silently misses duplicates."
+        )
+    id_type = batch.schema[id_col].dataType.simpleString()
+    if (id_col, id_type) != (meta["id_col"], meta["id_type"]):
+        raise ValueError(
+            f"{fn}: batch id {id_col}:{id_type} differs from the index's "
+            f"{meta['id_col']}:{meta['id_type']} at {path!r}"
+        )
+    return meta, id_type
+
+
+def _admit_batch(
+    spark, path: str, kind: str, meta: dict, id_type: str, lo, hi,
+    allow_replay: bool, update_index: bool,
+) -> None:
+    """The one append guard of the standing dedup indexes. Refuses a
+    batch whose min id ``lo`` does not exceed the manifest's ``max_id``
+    unless ``allow_replay``; with ``update_index``, commits ``max_id``
+    ratcheted to the batch max ``hi``. The caller appends the batch's
+    rows only after this returns: a crash between the two then leaves a
+    manifest that over-claims, so a replay is refused until
+    ``allow_replay`` re-runs it, instead of one that under-claims, under
+    which a batch overlapping half-appended rows would pass the guard
+    and silently diverge. ``lo`` and ``hi`` range over the whole batch,
+    kept and dropped rows alike: the next batch must clear this one
+    entirely."""
+    fn = _INDEX_OPS[kind][0]
+    idx_max = _id_as_meta_comparable(meta.get("max_id"), id_type)
+    if (
+        not allow_replay
+        and lo is not None
+        and idx_max is not None
+        and _id_as_meta_comparable(str(lo), id_type) <= idx_max
+    ):
+        raise ValueError(
+            f"{fn}: batch min id {lo!r} does not exceed the index's max id "
+            f"{meta['max_id']!r} — the min-id greedy requires monotonically "
+            "increasing ids across batches (the monotone-id layout), or it "
+            "silently keeps the wrong copies. Re-id the batch, or pass "
+            "allow_replay=True if this is a retried batch being reprocessed "
+            "against its own appended rows."
+        )
+    if update_index and hi is not None and (
+        idx_max is None or _id_as_meta_comparable(str(hi), id_type) > idx_max
+    ):
+        ratcheted = {**meta, "max_id": str(hi)}
+        if kind == "sig":  # its own name: perfbench traces it as index.write
+            _write_sig_meta(spark, path, ratcheted)
+        else:
+            readers.commit_meta_json(spark, path, kind, ratcheted)
+
+
+def _replace_partitioned(df: DataFrame, bucket: str, path: str) -> None:
+    """Write ``df`` partitioned by ``bucket`` over the whole table at
+    ``path``. Static partition overwrite is forced: under a session's
+    ``partitionOverwriteMode=dynamic`` a rebuild from a smaller corpus
+    would keep the prior build's untouched bucket directories, mixing
+    old rows into the new index."""
+    # cluster on the partition column before every bucket write (r16,
+    # guide §6): one file per touched directory, created in parallel —
+    # see sources.writers.cluster_for_partitioned_write
+    cluster_for_partitioned_write(df, bucket).write.mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).partitionBy(bucket).parquet(path)
+
+
 def write_signature_index(
     df: DataFrame, id_col: str, text_col: str, path: str,
     n_bands: int = 8, shingle_n: int = 3,
     n_sig_buckets: int | str = 64, n_id_buckets: int | str = 64,
-    mode: str = "overwrite",
 ) -> None:
-    """Materialize the MinHash dedup index for ``df`` (normally an
-    already-deduped corpus) as TWO bucket-partitioned parquet tables:
+    """Build the MinHash dedup index for ``df`` (normally an
+    already-deduped corpus), replacing any index at ``path``, as TWO
+    bucket-partitioned parquet tables:
 
     - ``path/sigs``          (id, band, sig)  partitioned by sig_bucket
       — what a new batch band-joins against; the probe reads only the
@@ -1853,120 +1908,75 @@ def write_signature_index(
       buckets (candidates are sparse: only verification's ids are read).
 
     Both partition keys are md5-derived (engine- and session-independent),
-    so the index is appendable across runs (``mode="append"`` — what
-    :func:`near_dedup_incremental` ``update_index`` uses).
+    so the index is appendable across runs: batches append to it through
+    :func:`near_dedup_incremental` ``update_index``, the index's one
+    append path.
 
     The build parameters and the corpus max id are persisted to the
     index manifest ``path/_meta.json`` (kind ``sig``; every standing
     index keeps one, so the index and its probes can never drift) —
     :func:`near_dedup_incremental` reads them back, validates any
     explicitly-passed parameters, and enforces the monotone-id
-    precondition against ``max_id``. Appends validate the same
-    parameters and ratchet ``max_id`` upward.
+    precondition against ``max_id``.
 
     ``n_sig_buckets`` / ``n_id_buckets`` accept ``"auto"`` (VERDICT r13
     #2): the count is sized from the corpus being written via
     :func:`auto_index_buckets` — sig table from ``n_docs × n_bands``
     rows, shingle-set table from ``n_docs`` — the corpus-sized rule the
-    r13 append-scaling panel measured as the flat-append regime. On
-    ``mode="append"`` ``"auto"`` resolves to the index's own meta value
-    (the layout is frozen at build; re-bucketing is a rebuild). The
-    RESOLVED ints are what the meta persists, so probes and later
-    appends see concrete geometry, never the sentinel. For a corpus
-    that will grow far past its initial size, size the initial build
-    for the anticipated steady state (pass the explicit count) or
+    r13 append-scaling panel measured as the flat-append regime. The
+    RESOLVED ints are what the meta persists, so probes and appends see
+    concrete geometry, never the sentinel; appends keep it frozen. For a
+    corpus that will grow far past its initial size, size the initial
+    build for the anticipated steady state (pass the explicit count) or
     rebuild when occupancy drifts — an append can never re-bucket.
 
-    COST NOTE (ADVICE r14): a fresh-build ``"auto"`` runs one extra
+    COST NOTE (ADVICE r14): an ``"auto"`` build runs one extra
     count/max aggregation over ``df`` before the write re-evaluates it;
     for an expensive or non-deterministic upstream plan, ``.persist()``
     the frame first or pass explicit counts (sizing is approximate, so
     drift affects occupancy only, never correctness)."""
-    spark = df.sparkSession
-    id_type = df.schema[id_col].dataType.simpleString()
-    old = readers.read_meta_json(spark, path, "sig") if mode == "append" else None
-    n_docs = None
-    batch_max = None
-    if "auto" in (n_sig_buckets, n_id_buckets) and old is None:
-        if mode == "append":
-            raise ValueError(
-                "write_signature_index: n_sig_buckets/n_id_buckets='auto' "
-                "on append requires the index's _meta.json (legacy no-meta "
-                "index — pass the build's explicit bucket counts instead)"
-            )
+    n_docs = batch_max = None
+    if "auto" in (n_sig_buckets, n_id_buckets):
         stats = df.agg(
             F.count(F.lit(1)).alias("_n"), F.max(id_col).alias("_mx")
         ).first()
         n_docs, batch_max = int(stats["_n"]), stats["_mx"]
-    n_sig_buckets = _resolve_auto_buckets(
-        n_sig_buckets, None if n_docs is None else n_docs * int(n_bands),
-        old, "n_sig_buckets", "write_signature_index",
-    )
-    n_id_buckets = _resolve_auto_buckets(
-        n_id_buckets, n_docs, old, "n_id_buckets", "write_signature_index",
-    )
     params = {
         "n_bands": int(n_bands), "shingle_n": int(shingle_n),
-        "n_sig_buckets": n_sig_buckets, "n_id_buckets": n_id_buckets,
-        "id_col": id_col, "id_type": id_type,
+        "n_sig_buckets": (
+            auto_index_buckets(n_docs * int(n_bands))
+            if n_sig_buckets == "auto" else int(n_sig_buckets)
+        ),
+        "n_id_buckets": (
+            auto_index_buckets(n_docs)
+            if n_id_buckets == "auto" else int(n_id_buckets)
+        ),
+        "id_col": id_col, "id_type": df.schema[id_col].dataType.simpleString(),
     }
-    if old is not None:
-        drift = {
-            k: (old[k], params[k])
-            for k in (*_SIG_META_PARAMS, "id_col", "id_type")
-            if old.get(k) != params[k]
-        }
-        if drift:
-            raise ValueError(
-                f"write_signature_index(mode='append'): parameters differ "
-                f"from the index at {path!r} (meta vs caller): {drift}"
-            )
     sh = shingle_rows(
         spread_small_scan(df, id_col), id_col, text_col, shingle_n
     ).persist()
     try:
         sigs = _band_signature_frame(sh, id_col, n_bands)
-        # cluster on the partition column before every bucket write (r16,
-        # guide §6): one file per touched directory, created in parallel —
-        # see sources.writers.cluster_for_partitioned_write
-        (
-            cluster_for_partitioned_write(
-                sigs.withColumn(
-                    "sig_bucket", _sig_bucket(F.col("sig"), n_sig_buckets)
-                ),
-                "sig_bucket",
-            )
-            .write.mode(mode).partitionBy("sig_bucket").parquet(f"{path}/sigs")
+        _replace_partitioned(
+            sigs.withColumn(
+                "sig_bucket", _sig_bucket(F.col("sig"), params["n_sig_buckets"])
+            ),
+            "sig_bucket", f"{path}/sigs",
         )
         sets = sh.groupBy(id_col).agg(F.collect_list("shingle").alias("shingles"))
-        (
-            cluster_for_partitioned_write(
-                sets.withColumn(
-                    "id_bucket", _id_bucket(F.col(id_col), n_id_buckets)
-                ),
-                "id_bucket",
-            )
-            .write.mode(mode).partitionBy("id_bucket").parquet(f"{path}/shingle_sets")
+        _replace_partitioned(
+            sets.withColumn(
+                "id_bucket", _id_bucket(F.col(id_col), params["n_id_buckets"])
+            ),
+            "id_bucket", f"{path}/shingle_sets",
         )
     finally:
         sh.unpersist()
     if batch_max is None:
         batch_max = df.agg(F.max(id_col)).first()[0]  # bounded: one scalar
-    if mode == "append" and old is None and batch_max is not None:
-        # legacy no-meta index being appended to: recover the true corpus
-        # max from the index itself (one-column scan, one-time upgrade)
-        prior = spark.read.parquet(f"{path}/sigs").agg(F.max(id_col)).first()[0]
-        if prior is not None and _id_as_meta_comparable(
-            str(prior), id_type
-        ) > _id_as_meta_comparable(str(batch_max), id_type):
-            batch_max = prior
-    max_id = str(batch_max) if batch_max is not None else None
-    if old is not None and old.get("max_id") is not None:
-        if max_id is None or _id_as_meta_comparable(
-            old["max_id"], id_type
-        ) > _id_as_meta_comparable(max_id, id_type):
-            max_id = old["max_id"]
-    _write_sig_meta(spark, path, {**params, "max_id": max_id})
+    max_id = None if batch_max is None else str(batch_max)
+    _write_sig_meta(df.sparkSession, path, {**params, "max_id": max_id})
 
 
 def _observed_checkpoint(df: DataFrame, name: str, *metrics: Column):
@@ -2026,7 +2036,10 @@ def near_dedup_incremental(
     ``ValueError`` (``allow_replay=True`` waives it for the streaming
     intake's retried micro-batches, whose ids legitimately overlap their
     own appended copies — the same-id guard below keeps the replay
-    idempotent). Property-tested against the full run in
+    idempotent). With ``update_index`` the manifest's ``max_id`` is
+    committed before the rows are appended, so a crash in between leaves
+    the batch refused until ``allow_replay`` re-runs it, never silently
+    accepted. Property-tested against the full run in
     tests/test_incremental_dedup.py.
 
     100 TB shape: the batch is signed once (O(batch) work); the index side
@@ -2044,14 +2057,7 @@ def near_dedup_incremental(
     equality of a full band signature is already a strong filter.
     """
     spark = new_docs.sparkSession
-    meta = readers.read_meta_json(spark, index_path, "sig")
-    if meta is None:
-        raise ValueError(
-            f"near_dedup_incremental: no _meta.json at {index_path!r} — the "
-            "index was not written by write_signature_index (or the path "
-            "is wrong). Rebuild it; probing with guessed parameters "
-            "silently misses duplicates."
-        )
+    meta, id_type = _index_manifest(new_docs, index_path, "sig", id_col)
     caller = {
         "n_bands": n_bands, "shingle_n": shingle_n,
         "n_sig_buckets": n_sig_buckets, "n_id_buckets": n_id_buckets,
@@ -2061,11 +2067,6 @@ def near_dedup_incremental(
         for k, v in caller.items()
         if v is not None and int(v) != int(meta[k])
     }
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    if id_col != meta["id_col"] or id_type != meta["id_type"]:
-        drift["id"] = (
-            f"{meta['id_col']}:{meta['id_type']}", f"{id_col}:{id_type}"
-        )
     if drift:
         raise ValueError(
             f"near_dedup_incremental: parameters differ from the index at "
@@ -2097,23 +2098,11 @@ def near_dedup_incremental(
             for b in range(n_bands)
         ]))).alias("buckets"),  # bounded: ≤ n_sig_buckets values
     )
-    batch_min, batch_max, probe_buckets = seen["lo"], seen["hi"], seen["buckets"]
-    idx_max = _id_as_meta_comparable(meta.get("max_id"), id_type)
-    if (
-        not allow_replay
-        and batch_min is not None
-        and idx_max is not None
-        and _id_as_meta_comparable(str(batch_min), id_type) <= idx_max
-    ):
-        raise ValueError(
-            f"near_dedup_incremental: batch min id {batch_min!r} does not "
-            f"exceed the index's max id {meta['max_id']!r} — the "
-            "full-corpus-equivalence invariant requires monotonically "
-            "increasing ids across batches (the min-id greedy would "
-            "silently keep the wrong copies). Re-id the batch, or pass "
-            "allow_replay=True if this is a retried micro-batch being "
-            "reprocessed against its own appended signatures."
-        )
+    _admit_batch(
+        spark, index_path, "sig", meta, id_type, seen["lo"], seen["hi"],
+        allow_replay, update_index,
+    )
+    probe_buckets = seen["buckets"]
     signed_docs = signed.filter(F.size("_s") > 0)
     sigs_new = signed_docs.selectExpr(id_col, _stack_bands(n_bands))
 
@@ -2199,19 +2188,6 @@ def near_dedup_incremental(
         losers = F.broadcast(losers)
     kept = new_docs.join(losers, on=id_col, how="left_anti")
     if update_index:
-        # ratchet the meta's max_id over the FULL batch (kept or dropped —
-        # the next batch's ids must clear this crawl entirely, matching
-        # the monotone crawl-id layout) BEFORE the data appends: a crash
-        # between the two steps then leaves a meta that over-claims
-        # (future overlapping batches are REFUSED — safe) instead of a
-        # meta that under-claims (a batch overlapping half-appended
-        # signatures would pass the guard and silently diverge).
-        # Refuse-loudly under crashes, not just under misuse.
-        if batch_max is not None and (
-            idx_max is None
-            or _id_as_meta_comparable(str(batch_max), id_type) > idx_max
-        ):
-            _write_sig_meta(spark, index_path, {**meta, "max_id": str(batch_max)})
         # the appended rows come from the signed checkpoint, so neither
         # write re-reads or re-signs the batch
         appended = signed_docs.join(losers, id_col, "left_anti")
@@ -2241,89 +2217,54 @@ def near_dedup_incremental(
 # Winnowing standing index — the incremental operating mode of the MOSS tier
 # ---------------------------------------------------------------------------
 
-_WIN_META_PARAMS = ("k", "w", "n_fp_buckets")
-
-
 def write_winnow_index(
     df: DataFrame, id_col: str, text_col: str, path: str,
     k: int = 3, w: int = 4, n_fp_buckets: int | str = 64,
-    mode: str = "overwrite",
 ) -> None:
-    """Materialize the winnowing fingerprint index for ``df`` as ONE
-    fp-bucket-partitioned parquet table (id, fp) — the standing-index
-    form of :func:`winnow_share_pairs`'s left side, the signature-index
-    pattern applied to the MOSS tier: params + id type + corpus max_id
-    frozen in the index's manifest, appends validate params and ratchet
-    ``max_id``. Because winnowing samples ~2/(w+1) of grams, this index
-    is ~5x smaller than the signature index's shingle sets for the same
-    detection guarantee class.
+    """Build the winnowing fingerprint index for ``df``, replacing any
+    index at ``path``, as ONE fp-bucket-partitioned parquet table
+    (id, fp) — the standing-index form of :func:`winnow_share_pairs`'s
+    left side, the signature-index pattern applied to the MOSS tier:
+    params + id type + corpus max_id frozen in the index's manifest;
+    batches append through :func:`winnow_incremental` ``update_index``,
+    which validates the params and ratchets ``max_id``. Because
+    winnowing samples ~2/(w+1) of grams, this index is ~5x smaller than
+    the signature index's shingle sets for the same detection guarantee
+    class.
 
     ``n_fp_buckets`` accepts ``"auto"`` (VERDICT r13 #2): sized from the
     EXACT distinct (id, fp) row count being written (the fp frame is
     persisted across the count and the write — one fingerprint pass)
     via :func:`auto_index_buckets`, the corpus-sized flat-append rule.
-    Appends resolve ``"auto"`` to the index's own meta value; the meta
-    persists the resolved int."""
+    The meta persists the resolved int; appends keep it frozen."""
     from qcardia_data_spark.functions.text import winnow_fingerprints
 
-    spark = df.sparkSession
-    id_type = df.schema[id_col].dataType.simpleString()
-    old = readers.read_meta_json(spark, path, "win") if mode == "append" else None
-    if n_fp_buckets == "auto" and old is None and mode == "append":
-        raise ValueError(
-            "write_winnow_index: n_fp_buckets='auto' on append requires "
-            "the index's _meta.json (legacy no-meta index — pass the "
-            "build's explicit bucket count instead)"
-        )
     fps = (
         winnow_fingerprints(df, id_col, text_col, k=k, w=w)
         .select(id_col, "fp")
         .distinct()
     )
-    if n_fp_buckets == "auto" and old is None:
+    if n_fp_buckets == "auto":
         fps = fps.persist()
-        n_fp_buckets = _resolve_auto_buckets(
-            "auto", fps.count(), None, "n_fp_buckets", "write_winnow_index"
-        )
-    else:
-        n_fp_buckets = _resolve_auto_buckets(
-            n_fp_buckets, None, old, "n_fp_buckets", "write_winnow_index"
-        )
+        n_fp_buckets = auto_index_buckets(fps.count())
     params = {
-        "k": int(k), "w": int(w), "n_fp_buckets": n_fp_buckets,
-        "id_col": id_col, "id_type": id_type,
+        "k": int(k), "w": int(w), "n_fp_buckets": int(n_fp_buckets),
+        "id_col": id_col, "id_type": df.schema[id_col].dataType.simpleString(),
     }
-    if old is not None:
-        drift = {
-            kk: (old[kk], params[kk])
-            for kk in (*_WIN_META_PARAMS, "id_col", "id_type")
-            if old.get(kk) != params[kk]
-        }
-        if drift:
-            raise ValueError(
-                f"write_winnow_index(mode='append'): parameters differ "
-                f"from the index at {path!r} (meta vs caller): {drift}"
-            )
     try:
-        (
-            cluster_for_partitioned_write(
-                fps.withColumn(
-                    "fp_bucket", _sig_bucket(F.col("fp"), n_fp_buckets)
-                ),
-                "fp_bucket",
-            )
-            .write.mode(mode).partitionBy("fp_bucket").parquet(f"{path}/fps")
+        _replace_partitioned(
+            fps.withColumn(
+                "fp_bucket", _sig_bucket(F.col("fp"), params["n_fp_buckets"])
+            ),
+            "fp_bucket", f"{path}/fps",
         )
     finally:
         fps.unpersist()
     batch_max = df.agg(F.max(id_col)).first()[0]
-    max_id = str(batch_max) if batch_max is not None else None
-    if old is not None and old.get("max_id") is not None:
-        if max_id is None or _id_as_meta_comparable(
-            old["max_id"], id_type
-        ) > _id_as_meta_comparable(max_id, id_type):
-            max_id = old["max_id"]
-    readers.commit_meta_json(spark, path, "win", {**params, "max_id": max_id})
+    max_id = None if batch_max is None else str(batch_max)
+    readers.commit_meta_json(
+        df.sparkSession, path, "win", {**params, "max_id": max_id}
+    )
 
 
 def winnow_incremental(
@@ -2352,18 +2293,15 @@ def winnow_incremental(
     and the end of the corpus (the same qualification as the LSH
     star-guard equivalence; the tests pin the within-regime identity).
 
-    With ``update_index`` the SURVIVORS' fingerprints append to the
-    index (through a lineage-severing localCheckpoint — the appended
-    frame's plan reads the index, and a lazy re-read mid-append would
-    self-match).
+    With ``update_index`` the manifest's ``max_id`` is committed first,
+    then the SURVIVORS' fingerprints append to the index (through a
+    lineage-severing localCheckpoint — the appended frame's plan reads
+    the index, and a lazy re-read mid-append would self-match). A crash
+    between the two leaves the batch refused until ``allow_replay``
+    re-runs it.
     """
     spark = new_docs.sparkSession
-    meta = readers.read_meta_json(spark, index_path, "win")
-    if meta is None:
-        raise ValueError(
-            f"winnow_incremental: no _meta.json at {index_path!r} — "
-            "not a winnow index (build with write_winnow_index)"
-        )
+    meta, id_type = _index_manifest(new_docs, index_path, "win", id_col)
     for name, val in (("k", k), ("w", w)):
         if val is not None and int(val) != int(meta[name]):
             raise ValueError(
@@ -2373,23 +2311,11 @@ def winnow_incremental(
             )
     kk, ww = int(meta["k"]), int(meta["w"])
     n_fp_buckets = int(meta["n_fp_buckets"])
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"winnow_incremental: batch id type {id_type!r} != index "
-            f"id type {meta['id_type']!r}"
-        )
-    if meta.get("max_id") is not None and not allow_replay:
-        lo = new_docs.agg(F.min(id_col)).first()[0]
-        if lo is not None and _id_as_meta_comparable(
-            str(lo), id_type
-        ) <= _id_as_meta_comparable(meta["max_id"], id_type):
-            raise ValueError(
-                f"winnow_incremental: batch min id {lo!r} <= index "
-                f"max_id {meta['max_id']!r} — the monotone-id layout the "
-                "min-id greedy requires is violated (allow_replay=True "
-                "only for retried batches of the SAME ids)"
-            )
+    ids = new_docs.agg(F.min(id_col), F.max(id_col)).first()
+    _admit_batch(
+        spark, index_path, "win", meta, id_type, ids[0], ids[1],
+        allow_replay, update_index,
+    )
     from qcardia_data_spark.functions.text import winnow_fingerprints
 
     bfps = (
@@ -2437,20 +2363,6 @@ def winnow_incremental(
             cluster_for_partitioned_write(kept_fps, "fp_bucket").write.mode(
                 "append"
             ).partitionBy("fp_bucket").parquet(f"{index_path}/fps")
-            batch_max = new_docs.agg(F.max(id_col)).first()[0]
-            max_id = meta.get("max_id")
-            if batch_max is not None and (
-                max_id is None
-                or _id_as_meta_comparable(str(batch_max), id_type)
-                > _id_as_meta_comparable(max_id, id_type)
-            ):
-                max_id = str(batch_max)
-            readers.commit_meta_json(
-                spark, index_path, "win",
-                {**{p: meta[p] for p in _WIN_META_PARAMS},
-                 "id_col": meta["id_col"], "id_type": meta["id_type"],
-                 "max_id": max_id},
-            )
         return kept
     finally:
         bfps.unpersist()
@@ -2500,80 +2412,54 @@ def _h64_kb(k: int, n_key_buckets: int) -> Column:
 def write_hamming64_index(
     sig: DataFrame, path: str, id_col: str = "doc_id",
     max_hamming: int = 3, n_key_buckets: int | str = 64,
-    mode: str = "overwrite",
 ) -> None:
-    """Materialize the Manku blocking index for a 64-bit signature table
-    ``(id, lo, hi)`` — the standing form of :func:`hamming_near_pairs64`,
-    shared by every signature family (text simhash64, image pHash, audio
-    Haitsma-Kalker frames, video frame pHash): one row per (id, block,
-    block-value) with lo/hi carried for the verify, partitioned by
-    ``kb = md5(block#value) mod n`` so a probe reads ONLY the key
-    buckets its own blocks hash into. Params + id type + corpus max_id
-    frozen in the ``h64`` manifest (drift refuses, appends ratchet).
+    """Build the Manku blocking index for a 64-bit signature table
+    ``(id, lo, hi)``, replacing any index at ``path`` — the standing
+    form of :func:`hamming_near_pairs64`, shared by every signature
+    family (text simhash64, image pHash, audio Haitsma-Kalker frames,
+    video frame pHash): one row per (id, block, block-value) with lo/hi
+    carried for the verify, partitioned by ``kb = md5(block#value) mod
+    n`` so a probe reads ONLY the key buckets its own blocks hash into.
+    Params + id type + corpus max_id frozen in the ``h64`` manifest;
+    batches append through :func:`hamming64_index_probe`
+    ``update_index``, which ratchets ``max_id``.
 
     ``n_key_buckets`` accepts ``"auto"`` (VERDICT r13 #2): sized from
     the block-table row count — exactly ``n_sigs × (max_hamming + 1)``
     blocks — via :func:`auto_index_buckets`, the corpus-sized
-    flat-append rule. Appends resolve ``"auto"`` to the index's own
-    meta value; the meta persists the resolved int. COST NOTE (ADVICE
-    r14): a fresh-build ``"auto"`` runs one extra count/max aggregation
-    over ``sig`` before the write re-evaluates it — persist an
-    expensive upstream plan first or pass an explicit count."""
-    spark = sig.sparkSession
+    flat-append rule. The meta persists the resolved int; appends keep
+    it frozen. COST NOTE (ADVICE r14): an ``"auto"`` build runs one
+    extra count/max aggregation over ``sig`` before the write
+    re-evaluates it — persist an expensive upstream plan first or pass
+    an explicit count."""
     k = int(max_hamming)
     if 64 % (k + 1) != 0 or 32 % (64 // (k + 1)) != 0:
         raise ValueError(
             "write_hamming64_index: max_hamming must be in 1, 3, 7, 15, 31"
         )
-    id_type = sig.schema[id_col].dataType.simpleString()
-    old = readers.read_meta_json(spark, path, "h64") if mode == "append" else None
-    n_sigs = None
     batch_max = None
-    if n_key_buckets == "auto" and old is None:
-        if mode == "append":
-            raise ValueError(
-                "write_hamming64_index: n_key_buckets='auto' on append "
-                "requires the index's _meta.json (legacy no-meta index — "
-                "pass the build's explicit bucket count instead)"
-            )
+    if n_key_buckets == "auto":
         stats = sig.agg(
             F.count(F.lit(1)).alias("_n"), F.max(id_col).alias("_mx")
         ).first()
-        n_sigs, batch_max = int(stats["_n"]), stats["_mx"]
-    n_key_buckets = _resolve_auto_buckets(
-        n_key_buckets, None if n_sigs is None else n_sigs * (k + 1),
-        old, "n_key_buckets", "write_hamming64_index",
-    )
+        n_key_buckets = auto_index_buckets(int(stats["_n"]) * (k + 1))
+        batch_max = stats["_mx"]
     params = {
-        "max_hamming": k, "n_key_buckets": n_key_buckets,
-        "id_col": id_col, "id_type": id_type,
+        "max_hamming": k, "n_key_buckets": int(n_key_buckets),
+        "id_col": id_col, "id_type": sig.schema[id_col].dataType.simpleString(),
     }
-    if old is not None:
-        drift = {
-            kk: (old[kk], params[kk])
-            for kk in ("max_hamming", "n_key_buckets", "id_col", "id_type")
-            if old.get(kk) != params[kk]
-        }
-        if drift:
-            raise ValueError(
-                f"write_hamming64_index(mode='append'): parameters differ "
-                f"from the index at {path!r} (meta vs caller): {drift}"
-            )
-    blocks = _h64_blocks(sig, id_col, k).withColumn(
-        "kb", _h64_kb(k, n_key_buckets)
+    _replace_partitioned(
+        _h64_blocks(sig, id_col, k).withColumn(
+            "kb", _h64_kb(k, params["n_key_buckets"])
+        ),
+        "kb", f"{path}/blocks",
     )
-    cluster_for_partitioned_write(blocks, "kb").write.mode(mode).partitionBy(
-        "kb"
-    ).parquet(f"{path}/blocks")
     if batch_max is None:
         batch_max = sig.agg(F.max(id_col)).first()[0]
-    max_id = str(batch_max) if batch_max is not None else None
-    if old is not None and old.get("max_id") is not None:
-        if max_id is None or _id_as_meta_comparable(
-            old["max_id"], id_type
-        ) > _id_as_meta_comparable(max_id, id_type):
-            max_id = old["max_id"]
-    readers.commit_meta_json(spark, path, "h64", {**params, "max_id": max_id})
+    max_id = None if batch_max is None else str(batch_max)
+    readers.commit_meta_json(
+        sig.sparkSession, path, "h64", {**params, "max_id": max_id}
+    )
 
 
 def hamming64_index_probe(
@@ -2586,37 +2472,23 @@ def hamming64_index_probe(
     the batch blocks only itself and reads ONLY the key-bucket
     directories its blocks hash into. Monotone-id refusal with the
     ``allow_replay`` escape (replayed same-id rows dedup in the
-    candidate distinct); ``update_index`` appends the batch's blocks
-    through a lineage-severing checkpoint. Pair output keeps partner on
-    ``b``; under the monotone layout ``b < a`` for index partners, so
-    "drop matched batch items" is one anti-join away — the policy stays
-    with the caller (media families keep cluster-best candidates, dedup
-    drops them)."""
+    candidate distinct); ``update_index`` commits the manifest's
+    ``max_id`` first, then appends the batch's blocks through a
+    lineage-severing checkpoint, so a crash between the two leaves the
+    batch refused until ``allow_replay`` re-runs it. Pair output keeps
+    partner on ``b``; under the monotone layout ``b < a`` for index
+    partners, so "drop matched batch items" is one anti-join away — the
+    policy stays with the caller (media families keep cluster-best
+    candidates, dedup drops them)."""
     spark = batch_sig.sparkSession
-    meta = readers.read_meta_json(spark, index_path, "h64")
-    if meta is None:
-        raise ValueError(
-            f"hamming64_index_probe: no _meta.json at {index_path!r} — "
-            "not a hamming64 index (build with write_hamming64_index)"
-        )
+    meta, id_type = _index_manifest(batch_sig, index_path, "h64", id_col)
     k = int(meta["max_hamming"])
     n_kb = int(meta["n_key_buckets"])
-    id_type = batch_sig.schema[id_col].dataType.simpleString()
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"hamming64_index_probe: batch id type {id_type!r} != index "
-            f"id type {meta['id_type']!r}"
-        )
-    if meta.get("max_id") is not None and not allow_replay:
-        lo = batch_sig.agg(F.min(id_col)).first()[0]
-        if lo is not None and _id_as_meta_comparable(
-            str(lo), id_type
-        ) <= _id_as_meta_comparable(meta["max_id"], id_type):
-            raise ValueError(
-                f"hamming64_index_probe: batch min id {lo!r} <= index "
-                f"max_id {meta['max_id']!r} — monotone-id layout violated "
-                "(allow_replay=True only for retried batches)"
-            )
+    ids = batch_sig.agg(F.min(id_col), F.max(id_col)).first()
+    _admit_batch(
+        spark, index_path, "h64", meta, id_type, ids[0], ids[1],
+        allow_replay, update_index,
+    )
     bblocks = _h64_blocks(batch_sig, id_col, k).withColumn(
         "kb", _h64_kb(k, n_kb)
     ).persist()
@@ -2656,20 +2528,6 @@ def hamming64_index_probe(
             cluster_for_partitioned_write(to_append, "kb").write.mode(
                 "append"
             ).partitionBy("kb").parquet(f"{index_path}/blocks")
-            batch_max = batch_sig.agg(F.max(id_col)).first()[0]
-            max_id = meta.get("max_id")
-            if batch_max is not None and (
-                max_id is None
-                or _id_as_meta_comparable(str(batch_max), id_type)
-                > _id_as_meta_comparable(max_id, id_type)
-            ):
-                max_id = str(batch_max)
-            readers.commit_meta_json(
-                spark, index_path, "h64",
-                {"max_hamming": k, "n_key_buckets": n_kb,
-                 "id_col": meta["id_col"], "id_type": meta["id_type"],
-                 "max_id": max_id},
-            )
         return pairs
     finally:
         bblocks.unpersist()

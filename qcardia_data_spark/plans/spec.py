@@ -1156,13 +1156,14 @@ _engine(
 
 # -- standing indexes ---------------------------------------------------
 # The *_write / *_append ops persist a side artifact and pass the frame
-# through unchanged.
+# through unchanged. A dedup index write always replaces the index; batches
+# append to it through its incremental op (update_index).
 
 _engine(
     "signature_index_write", "functions.dedup.write_signature_index",
     through=True, required=("path",), defaults=_DOC,
     keys={**dict.fromkeys(_DOC_KEYS), "n_bands": int, "shingle_n": int,
-          "n_sig_buckets": _buckets, "n_id_buckets": _buckets, "mode": None},
+          "n_sig_buckets": _buckets, "n_id_buckets": _buckets},
 )
 # Unset signature knobs come from the index's own manifest; a spec that
 # DOES pin them gets the refuse-loudly drift validation of the callee.
@@ -1179,7 +1180,7 @@ _engine(
     "winnow_index_write", "functions.dedup.write_winnow_index",
     through=True, required=("path",), defaults=_DOC,
     keys={**dict.fromkeys(_DOC_KEYS), "k": int, "w": int,
-          "n_fp_buckets": _buckets, "mode": None},
+          "n_fp_buckets": _buckets},
 )
 _engine(
     "winnow_incremental", "functions.dedup.winnow_incremental",
@@ -1209,7 +1210,7 @@ _engine(
 @_op(
     "hamming_index_write", required=("path",), defaults=_DOC,
     keys={**dict.fromkeys(_DOC_KEYS), "max_hamming": int,
-          "n_key_buckets": _buckets, "mode": None},
+          "n_key_buckets": _buckets},
 )
 def _hamming_index_write(c, df, a):
     from qcardia_data_spark.functions import dedup as D

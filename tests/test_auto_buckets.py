@@ -3,9 +3,10 @@
 append-scaling panel measured (flat append read volume ONLY when bucket
 counts grow with the corpus; PERF.md "Standing-index append scaling").
 ANN already shipped the dial (auto_n_planes / auto cells); these tests
-pin the dedup-side equivalent: sizing rule, meta round-trip, append
-resolution, legacy refusal, and that probes run unchanged against an
-auto-sized index."""
+pin the dedup-side equivalent: sizing rule, meta round-trip, the
+geometry staying frozen across appends, and that probes run unchanged
+against an auto-sized index. The last test pins that a build replaces
+the whole index."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from qcardia_data_spark.functions.dedup import (
     auto_index_buckets,
     hamming64_index_probe,
     near_dedup_incremental,
+    simhash64_md5_table,
     write_hamming64_index,
     write_signature_index,
     write_winnow_index,
@@ -68,33 +70,10 @@ def test_signature_index_auto_meta_roundtrip_and_probe(spark, sf_dir, tmp_path):
         update_index=True,
     )
     assert kept.count() > 0
-    # append path: "auto" resolves to the INDEX's value, never re-sizes
-    more = _docs(spark, sf_dir, 60, 80)
-    write_signature_index(
-        more, "doc_id", "text", idx, n_bands=8, shingle_n=3,
-        n_sig_buckets="auto", n_id_buckets="auto", mode="append",
-    )
+    # an append keeps the geometry frozen: the manifest's bucket counts
+    # are unchanged and only max_id ratchets
     meta2 = read_meta_json(spark, idx, "sig")
-    assert meta2["n_sig_buckets"] == 8 and meta2["n_id_buckets"] == 8
-    # explicit mismatching count still refuses loudly on append
-    with pytest.raises(ValueError, match="parameters differ"):
-        write_signature_index(
-            _docs(spark, sf_dir, 80, 90), "doc_id", "text", idx,
-            n_bands=8, shingle_n=3, n_sig_buckets=16, mode="append",
-        )
-
-
-def test_signature_index_auto_append_without_meta_refuses(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "legacy_idx")
-    base = _docs(spark, sf_dir, 0, 20)
-    write_signature_index(base, "doc_id", "text", idx)
-    # simulate a pre-metadata index
-    os.remove(f"{idx}/_meta.json")
-    with pytest.raises(ValueError, match="auto.*append|append requires"):
-        write_signature_index(
-            _docs(spark, sf_dir, 20, 30), "doc_id", "text", idx,
-            n_sig_buckets="auto", mode="append",
-        )
+    assert meta2 == {**meta, "max_id": "59"}
 
 
 def test_winnow_index_auto(spark, sf_dir, tmp_path):
@@ -108,16 +87,12 @@ def test_winnow_index_auto(spark, sf_dir, tmp_path):
         spark.read.parquet(f"{idx}/fps").count()
     )
     assert meta["n_fp_buckets"] == auto_index_buckets(n_fp)
-    # probe runs against the auto-sized index with meta-resolved geometry
+    # probe and append run against the auto-sized index with
+    # meta-resolved geometry; the append keeps it frozen
     batch = _docs(spark, sf_dir, 40, 60)
-    kept = winnow_incremental(batch, idx, "doc_id", "text")
+    kept = winnow_incremental(batch, idx, "doc_id", "text", update_index=True)
     assert kept.count() > 0
-    # append resolves to the frozen value
-    write_winnow_index(
-        _docs(spark, sf_dir, 60, 80), "doc_id", "text", idx,
-        n_fp_buckets="auto", mode="append",
-    )
-    assert read_meta_json(spark, idx, "win")["n_fp_buckets"] == meta["n_fp_buckets"]
+    assert read_meta_json(spark, idx, "win") == {**meta, "max_id": "59"}
 
 
 def test_hamming64_index_auto(spark, tmp_path):
@@ -133,14 +108,10 @@ def test_hamming64_index_auto(spark, tmp_path):
         [(1000 + i, rows[i][1], rows[i][2]) for i in range(10)],
         ["doc_id", "lo", "hi"],
     )
-    pairs = hamming64_index_probe(batch, idx)
+    pairs = hamming64_index_probe(batch, idx, update_index=True)
     assert pairs.count() >= 10  # each batch sig matches its index twin
-    # append keeps the frozen geometry
-    write_hamming64_index(
-        spark.createDataFrame([(2000, 7, 7)], ["doc_id", "lo", "hi"]),
-        idx, max_hamming=3, n_key_buckets="auto", mode="append",
-    )
-    assert read_meta_json(spark, idx, "h64")["n_key_buckets"] == 8
+    # the append keeps the frozen geometry
+    assert read_meta_json(spark, idx, "h64") == {**meta, "max_id": "1009"}
 
 
 def test_spec_dialect_accepts_auto_buckets(spark, sf_dir, tmp_path):
@@ -170,3 +141,38 @@ def test_spec_dialect_accepts_auto_buckets(spark, sf_dir, tmp_path):
     assert isinstance(read_meta_json(spark, sig, "sig")["n_sig_buckets"], int)
     assert isinstance(read_meta_json(spark, win, "win")["n_fp_buckets"], int)
     assert isinstance(read_meta_json(spark, h64, "h64")["n_key_buckets"], int)
+
+
+@pytest.mark.parametrize("kind", ["sig", "win", "h64"])
+def test_build_replaces_whole_index_under_dynamic_overwrite(
+    spark, sf_dir, tmp_path, kind
+):
+    """A build replaces the whole index, also in a session that overwrites
+    partitions dynamically: a rebuild from fewer docs keeps none of the
+    prior build's bucket directories."""
+    idx = str(tmp_path / kind)
+
+    def build(docs):
+        if kind == "sig":
+            write_signature_index(docs, "doc_id", "text", idx)
+        elif kind == "win":
+            write_winnow_index(docs, "doc_id", "text", idx)
+        else:
+            write_hamming64_index(simhash64_md5_table(docs, "doc_id", "text"), idx)
+
+    build(_docs(spark, sf_dir, 0, 40))
+    small = _docs(spark, sf_dir, 0, 3)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        build(small)
+    finally:
+        spark.conf.set(key, prev)
+    want = {r["doc_id"] for r in small.collect()}
+    assert len(want) == 3
+    tables = {"sig": ["sigs", "shingle_sets"], "win": ["fps"], "h64": ["blocks"]}
+    for table in tables[kind]:
+        rows = spark.read.parquet(f"{idx}/{table}").select("doc_id").distinct()
+        assert {r["doc_id"] for r in rows.collect()} == want, table
+    assert read_meta_json(spark, idx, kind)["max_id"] == str(max(want))

@@ -72,11 +72,50 @@ def test_probe_guards_append_and_replay(spark, sigs, tmp_path):
         ).collect()
     }
     assert replay == pairs
-    # param drift refusals
-    with pytest.raises(ValueError, match="parameters differ"):
-        write_hamming64_index(batch, idx, max_hamming=1, mode="append")
     with pytest.raises(ValueError, match="no _meta.json"):
         hamming64_index_probe(batch, str(tmp_path / "nope"))
+
+
+def test_crash_after_max_id_commit_refuses_replay_then_recovers(
+    spark, sigs, tmp_path, monkeypatch
+):
+    # the manifest's max_id is committed before the blocks append: a crash
+    # in between leaves a manifest that over-claims, so a plain replay is
+    # refused and only an explicit allow_replay re-runs the batch
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from qcardia_data_spark.sources.readers import read_meta_json
+
+    idx = str(tmp_path / "h64")
+    clean = str(tmp_path / "clean")
+    batch = sigs.filter(F.col("doc_id") >= 1_000_000)
+    write_hamming64_index(sigs.filter(F.col("doc_id") < 1_000_000), idx)
+    shutil.copytree(idx, clean)
+
+    def crash(self, *args, **kwargs):
+        raise OSError("injected crash before the data append")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        hamming64_index_probe(batch, idx, update_index=True)
+    monkeypatch.undo()
+    batch_max = batch.agg(F.max("doc_id")).first()[0]
+    assert read_meta_json(spark, idx, "h64")["max_id"] == str(batch_max)
+
+    with pytest.raises(ValueError, match="monotone"):
+        hamming64_index_probe(batch, idx, update_index=True)
+    pairs = hamming64_index_probe(
+        batch, idx, update_index=True, allow_replay=True
+    )
+    pairs_clean = hamming64_index_probe(batch, clean, update_index=True)
+
+    def rows(root):
+        return sorted(map(tuple, spark.read.parquet(f"{root}/blocks").collect()))
+
+    assert set(pairs.collect()) == set(pairs_clean.collect()) != set()
+    assert rows(idx) == rows(clean)
 
 
 def test_probe_prunes_key_bucket_files(spark, sigs, tmp_path):

@@ -243,14 +243,6 @@ def test_probe_missing_meta_refused(spark, corpus, tmp_path):
         )
 
 
-def test_append_param_drift_refused(spark, corpus, small_index_ro):
-    b = corpus.filter(F.col("doc_id") >= 1_000_000)
-    with pytest.raises(ValueError, match="differ from the index"):
-        write_signature_index(
-            b, "doc_id", "text", small_index_ro, n_bands=4, mode="append"
-        )
-
-
 def test_non_monotone_batch_refused_and_wrong_without_guard(
     spark, corpus, small_index_ro
 ):

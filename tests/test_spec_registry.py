@@ -135,6 +135,13 @@ def test_misspelled_key_refused_before_any_job(spark, sf_dir, tmp_path):
         stream_src,
         {"op": "gopher_rules", "text_col": "text", "min_word": 5},
     ]), "min_word")
+    # a dedup index write always replaces the index: it takes no "mode"
+    for write in ("signature_index_write", "winnow_index_write",
+                  "hamming_index_write"):
+        _refused_without_jobs(spark, lambda: compile_pipeline(spark, [
+            {"op": "source", "table": "documents"},
+            {"op": write, "path": str(tmp_path / write), "mode": "append"},
+        ], sf_dir), r"unknown key\(s\) \['mode'\]")
 
 
 def test_missing_required_key_is_a_spec_error(spark, sf_dir):

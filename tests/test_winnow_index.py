@@ -107,10 +107,54 @@ def test_winnow_index_guards(spark, corpus, tmp_path):
     write_winnow_index(a, "doc_id", "text", idx, k=3, w=4)
     with pytest.raises(ValueError, match="reprobe"):
         winnow_incremental(b, idx, k=4)
-    with pytest.raises(ValueError, match="parameters differ"):
-        write_winnow_index(b, "doc_id", "text", idx, k=4, mode="append")
     with pytest.raises(ValueError, match="no _meta.json"):
         winnow_incremental(b, str(tmp_path / "nope"))
+
+
+def test_crash_after_max_id_commit_refuses_replay_then_recovers(
+    spark, corpus, tmp_path, monkeypatch
+):
+    # the manifest's max_id is committed before the fingerprints append: a
+    # crash in between leaves a manifest that over-claims, so a plain
+    # replay is refused and only an explicit allow_replay re-runs the batch
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from qcardia_data_spark.sources.readers import read_meta_json
+
+    idx = str(tmp_path / "widx")
+    clean = str(tmp_path / "clean")
+    a = _dedup_once(corpus.filter(F.col("doc_id") < 1_000_000))
+    b = corpus.filter(F.col("doc_id") >= 1_000_000)
+    write_winnow_index(a, "doc_id", "text", idx)
+    shutil.copytree(idx, clean)
+
+    def crash(self, *args, **kwargs):
+        raise OSError("injected crash before the data append")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        winnow_incremental(b, idx, max_df=MAX_DF, update_index=True)
+    monkeypatch.undo()
+    batch_max = b.agg(F.max("doc_id")).first()[0]
+    assert read_meta_json(spark, idx, "win")["max_id"] == str(batch_max)
+
+    with pytest.raises(ValueError, match="monotone"):
+        winnow_incremental(b, idx, max_df=MAX_DF, update_index=True)
+    kept = winnow_incremental(
+        b, idx, max_df=MAX_DF, update_index=True, allow_replay=True
+    )
+    kept_clean = winnow_incremental(b, clean, max_df=MAX_DF, update_index=True)
+
+    def ids(df):
+        return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+    def rows(root):
+        return sorted(map(tuple, spark.read.parquet(f"{root}/fps").collect()))
+
+    assert ids(kept) == ids(kept_clean) and ids(kept) < ids(b)
+    assert rows(idx) == rows(clean)
 
 
 def test_winnow_probe_prunes_partition_files(spark, corpus, tmp_path):
